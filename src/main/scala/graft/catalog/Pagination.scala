@@ -48,18 +48,23 @@ object Pagination {
     }.toArray
   }
 
-  /** LIMIT-clause dialect for generated page SQL: the source the
-    * reference reads speaks MySQL (`LIMIT off,n`); everything else gets
-    * the ANSI form (`OFFSET … FETCH`), which Derby/PG/Oracle 12c+ all
-    * accept — what makes the page planner testable against an embedded
-    * database. */
-  sealed trait LimitDialect { def clause(offset: Long, n: Long): String }
+  /** Source SQL dialect for generated page/probe SQL: the source the
+    * reference reads speaks MySQL (`LIMIT off,n`, backtick identifiers);
+    * everything else gets the ANSI forms (`OFFSET … FETCH`, double-quoted
+    * identifiers), which Derby/PG/Oracle 12c+ all accept — what makes the
+    * page planner testable against an embedded database. */
+  sealed trait LimitDialect {
+    def clause(offset: Long, n: Long): String
+    def quote(id: String): String
+  }
   case object MySqlLimit extends LimitDialect {
     override def clause(offset: Long, n: Long): String = s"LIMIT $offset,$n"
+    override def quote(id: String): String = s"`$id`"
   }
   case object AnsiLimit extends LimitDialect {
     override def clause(offset: Long, n: Long): String =
       s"OFFSET $offset ROWS FETCH NEXT $n ROWS ONLY"
+    override def quote(id: String): String = s""""$id""""
   }
 
   /** Dialect inferred from a JDBC url. */

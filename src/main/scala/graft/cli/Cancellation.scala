@@ -1,12 +1,11 @@
 package graft.cli
 
-import java.sql.{Connection, Statement}
+import java.sql.Connection
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.Pagination
 import graft.io.StatementRegistry
 
 /** Interruptible execution (S11/C11): the reference tags its SQL with a
@@ -14,21 +13,13 @@ import graft.io.StatementRegistry
   * Ctrl-C (cmd/app.go:186-216). Spark's native equivalent is job groups:
   * every pipeline phase runs inside a named, interruptible group, and a
   * single cancel call interrupts all its tasks. On top of that, driver-
-  * side JDBC statements (DDL, catalog probes) register here so cancel
+  * side JDBC statements (DDL) register in io.StatementRegistry so cancel
   * reaches statements that sit outside any Spark task, and `killTagged`
   * reproduces the reference's PROCESSLIST sweep for the source side.
   */
 object Cancellation {
 
   val GroupId = "gomysql2pgspark"
-
-  /** The comment marker carried by every generated page/probe SQL
-    * (root.go:373,394) — `Pagination.SqlTag` — so the source database can
-    * identify in-flight graft queries. */
-  val Tag: String = Pagination.SqlTag
-
-  def registerStatement(st: Statement): Unit = StatementRegistry.register(st)
-  def deregisterStatement(st: Statement): Unit = StatementRegistry.deregister(st)
 
   /** Run `body` inside the cancellable job group. */
   def interruptible[A](spark: SparkSession, desc: String)(body: => A): A = {

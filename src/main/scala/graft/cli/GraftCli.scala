@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.config.{GraftConfig, YamlConfig}
+import graft.io.Jdbc
 
 /** Subcommand surface (C7, cmd/create.go:18-281 / compare.go / version.go):
   *
@@ -80,7 +81,8 @@ object GraftCli {
   private def runCommand(spark: SparkSession, cfg: GraftConfig, cmd: String): Unit = {
     {
       val source = new JdbcCatalogSource(spark, cfg)
-      val sink = new JdbcSink(spark, cfg)
+      val sink = new JdbcSink(spark,
+        Jdbc.ConnInfo(cfg.dest.pgJdbcUrl, cfg.dest.username, cfg.dest.password))
       // per-run timestamped artifact dir (CreateDateDir, app.go:219-236)
       val flog = new FailureLog(Paths.get(""))
       val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))

@@ -2,35 +2,32 @@ package graft.cli
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.GraftConfig
-import graft.io.Jdbc
+import graft.io.{Jdbc, PgCopyLoad, PgJdbcCopyTransportFactory}
 import graft.types.ColumnMeta
 
-/** Live JDBC wiring for the Migration pipeline: the catalog queries the
-  * reference generates as SQL strings (cmd/tablemeta.go, cmd/root.go)
-  * become filtered DataFrame reads over `information_schema`, letting
-  * Catalyst push the predicates down to MySQL.
+/** Live JDBC wiring for the Migration pipeline. JdbcCatalogSource turns
+  * the catalog queries the reference generates as SQL strings
+  * (cmd/tablemeta.go, cmd/root.go) into filtered DataFrame reads over
+  * `information_schema`, letting Catalyst push the predicates down to
+  * MySQL; table data goes through the one page planner, Jdbc.readTable,
+  * which also owns the source SQL dialect. JdbcSink (below) is the one
+  * target sink.
   *
   * No MySQL/PG is reachable in this build environment; the catalog
-  * queries, page probes, and both page-read strategies run end to end
-  * against an embedded-Derby information_schema fixture in
-  * MigrationEndToEndSpec (plus fixture-backed CatalogSource/
-  * MigrationSink specs) — only the vendor wire protocols stay untested.
+  * queries, page probes, every page-read strategy and the sink's INSERT
+  * path run end to end against embedded Derby in MigrationEndToEndSpec
+  * (plus fixture-backed CatalogSource/MigrationSink specs) — only the
+  * vendor wire protocols stay untested.
   */
 final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
                               urlOverride: Option[String] = None)
     extends Migration.CatalogSource {
   private val conn = Jdbc.ConnInfo(urlOverride.getOrElse(cfg.src.mysqlJdbcUrl),
     cfg.src.username, cfg.src.password)
-
-  /** Identifier quote for generated probe SQL: backtick on MySQL, the
-    * standard double quote elsewhere (lets the whole catalog+data path
-    * run against an embedded information_schema fixture in tests). */
-  private val qc = if (conn.url.startsWith("jdbc:mysql")) "`" else "\""
-  private def q(id: String): String = s"$qc$id$qc"
 
   private def schemaTable(name: String): DataFrame =
     spark.read.jdbc(conn.url, s"information_schema.$name", conn.props)
@@ -66,33 +63,14 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     Set("tinyint", "smallint", "mediumint", "int", "integer", "bigint")
 
   /** S1 (root.go:389-516): PK-partitioned page read. Range predicates
-    * need the PK's REAL bounds (a MIN/MAX probe, not the row count —
-    * auto-increment keys start at 1, sparse keys leave gaps) and a
-    * verified numeric PK type; everything else takes the reference's
-    * deferred-join page SQLs (prepareSqlStr, root.go:335-386). */
+    * need a verified numeric PK type; everything else takes the
+    * reference's deferred-join page SQLs (prepareSqlStr, root.go:335-386).
+    * Jdbc.readTable probes the bounds and plans the pages. */
   override def tableData(table: String): DataFrame = {
     val pk = primaryKeyCols(table)
     val pkNumeric = pk.size == 1 && columns(table).exists(c =>
       c.columnName.equalsIgnoreCase(pk.head) && NumericPkTypes(c.dataType))
-    if (pkNumeric) {
-      val k = pk.head
-      val stats = spark.read.jdbc(conn.url,
-        s"(select ${graft.catalog.Pagination.SqlTag} count(*) c, " +
-          s"min(${q(k)}) mn, max(${q(k)}) mx from ${q(table)}) t",
-        conn.props).collect().head
-      val rows = Option(stats.get(0)).fold(0L)(_.toString.toLong)
-      val mn = Option(stats.get(1)).fold(0L)(_.toString.toLong)
-      val mx = Option(stats.get(2)).fold(0L)(_.toString.toLong)
-      Jdbc.readTable(spark, conn, table, pk, pkIsNumeric = true,
-        rowCount = rows, pkMin = mn, pkMax = mx, pageSize = cfg.pageSize)
-    } else {
-      val stats = spark.read.jdbc(conn.url,
-        s"(select ${graft.catalog.Pagination.SqlTag} count(*) c from ${q(table)}) t",
-        conn.props).collect().head
-      val rows = stats.get(0).toString.toLong
-      Jdbc.readTable(spark, conn, table, pk, pkIsNumeric = false,
-        rowCount = rows, pkMin = 0, pkMax = 0, pageSize = cfg.pageSize)
-    }
+    Jdbc.readTable(spark, conn, table, pk, pkNumeric, cfg.pageSize)
   }
 
   /** Custom-SQL extraction (root.go:97-98, 305-309): each configured SQL
@@ -158,54 +136,43 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
       .select(col("trigger_name"), col("action_statement"))
 }
 
-/** PG-side sink: batched-INSERT writes + driver DDL (K1/K2). */
-final class JdbcSink(spark: SparkSession, cfg: GraftConfig) extends Migration.MigrationSink {
-  private val conn = Jdbc.ConnInfo(cfg.dest.pgJdbcUrl, cfg.dest.username, cfg.dest.password)
-  private val ddl = new Jdbc.DdlExecutor(conn)
-
-  override def executeDdl(sql: String): Try[Unit] = Try {
-    var err: Throwable = null
-    ddl.execute(Seq(sql))((_, e) => err = e)
-    if (err != null) throw err
-  }
-
-  override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
-    // COPY bulk load, truncate-first (root.go:297,412); row count comes
-    // from the write itself — no second scan of the source
-    Jdbc.writeTableCopy(df, conn, table, truncate = true)
-  }
-
-  override def rowCount(table: String): Option[Long] = Try {
-    spark.read.jdbc(conn.url, s"""(select count(*) c from "$table") t""", conn.props)
-      .collect().head.get(0).toString.toLong
-  }.toOption
-}
-
-/** Portable sink (K1 mode A): batched INSERT through Spark's JDBC writer
-  * — for targets without the PG COPY protocol (and the embedded-Derby
-  * integration test). Same DDL/rowCount surface as JdbcSink. */
-final class JdbcInsertSink(spark: SparkSession, url: String,
-                           user: String, password: String)
+/** Target-side sink (K1/K2). DDL runs through Jdbc.executeDdl. Data
+  * takes the reference's COPY bulk load (`pq.CopyIn`, root.go:408-511) on
+  * PostgreSQL and Spark's batched-INSERT JDBC writer on any other target
+  * (the embedded-Derby integration test); the target URL picks the path.
+  * Both truncate first (root.go:297), so a re-run reloads. */
+final class JdbcSink(spark: SparkSession, conn: Jdbc.ConnInfo)
     extends Migration.MigrationSink {
-  private val conn = Jdbc.ConnInfo(url, user, password)
-  private val ddl = new Jdbc.DdlExecutor(conn)
 
-  override def executeDdl(sql: String): Try[Unit] = Try {
-    var err: Throwable = null
-    ddl.execute(Seq(sql))((_, e) => err = e)
-    if (err != null) throw err
-  }
+  override def executeDdl(sql: String): Try[Unit] = Try(Jdbc.executeDdl(conn, sql))
 
   override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
-    // Overwrite mode would silently CREATE a missing target table (with
-    // Spark-inferred DDL); the migration contract is the reference's
-    // (root.go:412): data loads into the table phase 1 created, or the
-    // table is a counted failure
-    if (rowCount(table).isEmpty)
-      throw new IllegalStateException(s"target table $table does not exist")
-    // the created DDL quotes lowercase identifiers, so the writer must too
-    Jdbc.writeTable(df, conn, s""""$table"""", truncate = true)
-    rowCount(table).getOrElse(0L)
+    if (conn.url.startsWith("jdbc:postgresql")) {
+      // a failed TRUNCATE must fail the write — COPYing after a silently
+      // skipped truncate would append onto stale data on re-runs. The row
+      // count comes from the write itself — no second scan of the source
+      Jdbc.executeDdl(conn, s"""truncate table "$table"""")
+      PgCopyLoad.copyInto(df, table,
+        new PgJdbcCopyTransportFactory(conn.url, conn.user, conn.password))
+    } else {
+      // Overwrite mode would silently CREATE a missing target table (with
+      // Spark-inferred DDL); the migration contract is the reference's
+      // (root.go:412): data loads into the table phase 1 created, or the
+      // table is a counted failure
+      if (rowCount(table).isEmpty)
+        throw new IllegalStateException(s"target table $table does not exist")
+      val props = conn.props
+      props.setProperty("rewriteBatchedStatements", "true")
+      // Overwrite + the JDBC truncate option issues TRUNCATE instead of
+      // DROP/CREATE, so the target DDL survives; the created DDL quotes
+      // lowercase identifiers, so the writer must too
+      df.write.mode(SaveMode.Overwrite)
+        .option("truncate", true)
+        .option("batchsize", 10000)
+        .option("isolationLevel", "READ_COMMITTED")
+        .jdbc(conn.url, s""""$table"""", props)
+      rowCount(table).getOrElse(0L)
+    }
   }
 
   override def rowCount(table: String): Option[Long] = Try {

@@ -64,7 +64,7 @@ object Migration {
                      failureLog: Option[FailureLog] = None) {
     private val results = mutable.ArrayBuffer[PhaseResult]()
 
-    private def phase[A](name: String)(body: => (Long, Long)): Unit = {
+    private def phase(name: String)(body: => (Long, Long)): Unit = {
       val t0 = System.nanoTime()
       val (objects, failed) = body
       results += PhaseResult(name, objects, failed, (System.nanoTime() - t0) / 1000000)
@@ -243,14 +243,9 @@ object Migration {
     def compare(): DataFrame = {
       import spark.implicits._
       val rows = runConcurrently(workList, "graft-compare") { t =>
-        Try {
-          val s = source.tableData(t).count()
-          sink.rowCount(t.toLowerCase) match {
-            case Some(c) => CompareDb.TableReport(t, s, c, "YES", if (s == c) "YES" else "NO")
-            case None    => CompareDb.TableReport(t, s, -1L, "NO", "NO")
-          }
-        }.getOrElse( // unreadable source counts as a failed comparison row
-          CompareDb.TableReport(t, -1L, -1L, "NO", "NO"))
+        Try(CompareDb.TableReport(t, source.tableData(t).count(), sink.rowCount(t.toLowerCase)))
+          // unreadable source counts as a failed comparison row
+          .getOrElse(CompareDb.TableReport(t, -1L, None))
       }
       rows.toDF().orderBy("table_name")
     }

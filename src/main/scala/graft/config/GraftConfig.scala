@@ -22,7 +22,6 @@ case class ConnConfig(host: String = "", port: Int = 0, database: String = "",
 case class GraftConfig(
     src: ConnConfig = ConnConfig(),
     dest: ConnConfig = ConnConfig(),
-    dbType: String = "",                      // "Gauss" switches DSN (app.go:70-72)
     pageSize: Long = 100000,                  // example.yml:13
     maxParallel: Int = 20,                    // default when unset (root.go:107-109)
     charInLength: Boolean = false,            // example.yml:15
@@ -77,7 +76,6 @@ object YamlConfig {
                 case "useNvarchar2" => cfg = cfg.copy(useNvarchar2 = value.toBoolean)
                 case "Distributed" | "distributed" => cfg = cfg.copy(distributed = value.toBoolean)
                 case "logInvalidData" => cfg = cfg.copy(logInvalidData = value.toBoolean)
-                case "dbType" => cfg = cfg.copy(dbType = value)
                 case _ => ()
               }
             case Array(k, _) => section = k.trim

@@ -1,18 +1,19 @@
 package graft.io
 
-import java.sql.{Connection, DriverManager}
+import java.sql.DriverManager
 import java.util.Properties
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.Pagination
 
-/** JDBC source/sink layer — the Spark-native replacement for the
-  * reference's goroutine-per-page extraction (cmd/root.go:389-516) and
-  * COPY bulk load (cmd/root.go:408-511).
+/** JDBC source layer and DDL side-channel — the Spark-native replacement
+  * for the reference's goroutine-per-page extraction (cmd/root.go:389-516)
+  * and its driver-side DDL (cmd/tablemeta.go K2). The write side is
+  * cli.JdbcSink.
   *
-  * No live MySQL/PG exists in this environment; the read paths (both PK
-  * page strategies) run against embedded Derby in JdbcReadSpec and the
+  * No live MySQL/PG exists in this environment; the read paths (every PK
+  * page strategy) run against embedded Derby in JdbcReadSpec and the
   * full phase chain in MigrationEndToEndSpec — only the two vendor wire
   * protocols are untested offline.
   */
@@ -27,96 +28,50 @@ object Jdbc {
     }
   }
 
-  /** Page-parallel table read: numeric single-column PK → range predicates
-    * (index range scans, no OFFSET — strictly better than the reference's
-    * deferred join, cmd/root.go:382); composite/non-numeric PK → the
-    * reference's LIMIT/OFFSET deferred-join page SQLs as dbtable
-    * subqueries; no PK → single full scan (root.go:356-359).
+  /** Page-parallel table read, the one page planner: no PK → single full
+    * scan (root.go:356-359), no probe. Otherwise one tagged probe
+    * (`count(*), min(k0), max(k0)`) sizes the pages: a numeric single-
+    * column PK gets range predicates over its REAL bounds (auto-increment
+    * keys start at 1, sparse keys leave gaps) — index range scans, no
+    * OFFSET, strictly better than the reference's deferred join
+    * (cmd/root.go:382); a composite/non-numeric PK gets the reference's
+    * LIMIT/OFFSET deferred-join page SQLs as predicates.
     * One JDBC partition per page = one Spark task per page; concurrent
     * connections are bounded by the scheduler exactly like the reference's
     * maxParallel semaphore (root.go:106-117).
     */
   def readTable(spark: SparkSession, conn: ConnInfo, table: String,
-                pkCols: Seq[String], pkIsNumeric: Boolean,
-                rowCount: Long, pkMin: Long, pkMax: Long,
-                pageSize: Long): DataFrame = {
-    if (pkCols.isEmpty) {
-      spark.read.jdbc(conn.url, table, conn.props)
-    } else if (pkCols.size == 1 && pkIsNumeric) {
-      val pages = Pagination.pageCount(rowCount, pageSize).toInt
-      spark.read.jdbc(conn.url, table,
-        Pagination.rangePredicates(pkCols.head, pkMin, pkMax, pages), conn.props)
-    } else {
-      // one predicates-array read: every deferred-join page is a WHERE
-      // predicate on a SINGLE scan relation — one JDBC partition per
-      // page, and the plan stays flat at any page count (a union of
-      // per-page DataFrames would grow an N-deep union plan whose
-      // analysis cost explodes at 10k+ pages)
-      spark.read.jdbc(conn.url, table,
-        Pagination.deferredJoinPredicates(table, pkCols, pageSize, rowCount,
-          Pagination.dialectFor(conn.url)),
-        conn.props)
+                pkCols: Seq[String], pkIsNumeric: Boolean, pageSize: Long): DataFrame =
+    if (pkCols.isEmpty) spark.read.jdbc(conn.url, table, conn.props)
+    else {
+      val dialect = Pagination.dialectFor(conn.url)
+      val k = dialect.quote(pkCols.head)
+      val stats = spark.read.jdbc(conn.url,
+        s"(select ${Pagination.SqlTag} count(*) c, min($k) mn, max($k) mx " +
+          s"from ${dialect.quote(table)}) t", conn.props).collect().head
+      def long(i: Int): Long = Option(stats.get(i)).fold(0L)(_.toString.toLong)
+      val predicates =
+        if (pkCols.size == 1 && pkIsNumeric)
+          Pagination.rangePredicates(pkCols.head, long(1), long(2),
+            Pagination.pageCount(long(0), pageSize).toInt)
+        // one predicates-array read: every deferred-join page is a WHERE
+        // predicate on a SINGLE scan relation — one JDBC partition per
+        // page, and the plan stays flat at any page count (a union of
+        // per-page DataFrames would grow an N-deep union plan whose
+        // analysis cost explodes at 10k+ pages)
+        else Pagination.deferredJoinPredicates(table, pkCols, pageSize, long(0), dialect)
+      spark.read.jdbc(conn.url, table, predicates, conn.props)
     }
-  }
 
-  /** Bulk write, mode A: Spark's batched-INSERT JDBC writer with
-    * rewriteBatchedStatements — the portable path (works on any JDBC
-    * target). Mode B below is the COPY path the reference actually uses.
-    *
-    * `truncate = true` empties the target first (the reference's
-    * pre-migration truncate, root.go:297) via Overwrite + the JDBC
-    * truncate option, which issues TRUNCATE instead of DROP/CREATE so
-    * target DDL survives; `false` appends. */
-  def writeTable(df: DataFrame, conn: ConnInfo, table: String,
-                 batchSize: Int = 10000, truncate: Boolean = true): Unit = {
-    val props = conn.props
-    props.setProperty("rewriteBatchedStatements", "true")
-    df.write
-      .mode(if (truncate) SaveMode.Overwrite else SaveMode.Append)
-      .option("truncate", truncate)
-      .option("batchsize", batchSize)
-      .option("isolationLevel", "READ_COMMITTED")
-      .jdbc(conn.url, table, props)
-  }
-
-  /** Bulk write, mode B — COPY fidelity (`pq.CopyIn`, cmd/root.go:408-511):
-    * truncate-first idempotence, then every partition streams COPY text
-    * through its own transaction (PgCopyLoad). Returns rows written
-    * (accumulator-counted — no second scan). This is the path that makes
-    * the reference's data phase fast; batched INSERT (mode A) stays as
-    * the portable fallback. */
-  def writeTableCopy(df: DataFrame, conn: ConnInfo, table: String,
-                     truncate: Boolean = true,
-                     flushBytes: Int = 64 * 1024): Long = {
-    if (truncate) {
-      // a failed TRUNCATE must fail the write — COPYing after a silently
-      // skipped truncate would append onto stale data on re-runs
-      var err: Throwable = null
-      new DdlExecutor(conn).execute(Seq(s"""truncate table "$table""""))((_, e) => err = e)
-      if (err != null) throw err
-    }
-    PgCopyLoad.copyInto(df, table,
-      new PgJdbcCopyTransportFactory(conn.url, conn.user, conn.password), flushBytes)
-  }
-
-  /** DDL side-channel (cmd/tablemeta.go K2): target-side DDL has no
-    * DataFrame form — plain driver JDBC with per-statement failure
-    * counting (the reference's per-phase FailedTotal, root.go:166-209). */
-  class DdlExecutor(conn: ConnInfo) {
-    @volatile var failed: Long = 0L
-    @volatile var succeeded: Long = 0L
-
-    def execute(sqls: Seq[String])(onError: (String, Throwable) => Unit = (_, _) => ()): Unit = {
-      var c: Connection = null
-      try {
-        c = DriverManager.getConnection(conn.url, conn.user, conn.password)
-        val st = c.createStatement()
-        StatementRegistry.register(st) // cancellable from the Ctrl-C hook
-        try sqls.foreach { sql =>
-          try { st.execute(sql); succeeded += 1 }
-          catch { case e: Throwable => failed += 1; onError(sql, e) }
-        } finally StatementRegistry.deregister(st)
-      } finally if (c != null) c.close()
-    }
+  /** One target-side DDL statement over plain driver JDBC (target DDL has
+    * no DataFrame form); throws on failure. The statement is registered
+    * while it runs so the Ctrl-C hook can cancel it. */
+  def executeDdl(conn: ConnInfo, sql: String): Unit = {
+    val c = DriverManager.getConnection(conn.url, conn.user, conn.password)
+    try {
+      val st = c.createStatement()
+      StatementRegistry.register(st)
+      try st.execute(sql) finally StatementRegistry.deregister(st)
+    } finally c.close()
   }
 }

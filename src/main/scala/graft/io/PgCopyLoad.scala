@@ -44,6 +44,9 @@ trait CopyTransportFactory extends Serializable {
 
 object PgCopyLoad {
 
+  /** COPY chunk size: about one pq message buffer. */
+  private val FlushBytes = 64 * 1024
+
   /** A speculative duplicate of a slow task would COPY its partition
     * TWICE (each task commits its own transaction; there is no task-id
     * dedup). Refuse loudly up front rather than double-load — the data
@@ -61,7 +64,7 @@ object PgCopyLoad {
     * Returns the number of rows written, counted by accumulator — no
     * second scan of the input. */
   def copyInto(df: DataFrame, table: String, factory: CopyTransportFactory,
-               flushBytes: Int = 64 * 1024): Long = {
+               flushBytes: Int = FlushBytes): Long = {
     assertNoSpeculation(df.sparkSession.sparkContext.getConf)
     val stmt = PgCopyText.copyStatement(table, df.columns.toSeq)
     val rows = df.sparkSession.sparkContext.longAccumulator("graft-copy-rows")
@@ -84,14 +87,14 @@ object PgCopyLoad {
     * deterministic partitioning.) */
   def copyIntoLedgered(df: DataFrame, table: String,
                        factory: CopyTransportFactory, ledger: BatchLedger,
-                       batchId: Long, flushBytes: Int = 64 * 1024): Long = {
+                       batchId: Long): Long = {
     assertNoSpeculation(df.sparkSession.sparkContext.getConf)
     val stmt = PgCopyText.copyStatement(table, df.columns.toSeq)
     val rows = df.sparkSession.sparkContext.longAccumulator("graft-copy-rows")
     df.foreachPartition { (it: Iterator[Row]) =>
       val pid = org.apache.spark.TaskContext.get().partitionId()
       if (it.hasNext && !ledger.committed(batchId, pid))
-        rows.add(streamPartition(it, stmt, factory, flushBytes,
+        rows.add(streamPartition(it, stmt, factory, FlushBytes,
           Seq(ledger.recordSql(batchId, pid))))
     }
     rows.value

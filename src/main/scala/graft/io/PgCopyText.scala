@@ -12,10 +12,10 @@ import org.apache.spark.sql.Row
   * The byte-level rules COPY FROM STDIN expects:
   * tab-separated fields, newline-terminated rows, `\N` for NULL, and
   * backslash escapes for `\`, tab, LF, CR inside data; bytea as `\\x` hex.
-  * `foreachPartition` + pgjdbc's CopyManager streams these rows — that
-  * driver isn't on this classpath, so the transport stays an extension
-  * point (io.Jdbc.writeTable mode B) while the encoding, the part with
-  * correctness content, is implemented and tested here.
+  * PgCopyLoad streams these rows from `foreachPartition` through a
+  * CopyTransport — pgjdbc's CopyManager (bound reflectively, since that
+  * driver isn't on this classpath) behind cli.JdbcSink's PostgreSQL path.
+  * The encoding, the part with correctness content, is tested here.
   */
 object PgCopyText {
 

@@ -24,13 +24,12 @@ object CopyStream {
     * schema matches the target table's columns; `ledger` is typically a
     * graft.io.JdbcBatchLedger pointed at the same target database. */
   def start(stream: DataFrame, table: String, factory: CopyTransportFactory,
-            ledger: BatchLedger, checkpointDir: String,
-            flushBytes: Int = 64 * 1024): StreamingQuery =
+            ledger: BatchLedger, checkpointDir: String): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PgCopyLoad.copyIntoLedgered(batch, table, factory, ledger, batchId, flushBytes)
+        PgCopyLoad.copyIntoLedgered(batch, table, factory, ledger, batchId)
         ()
       }
       .start()

@@ -30,10 +30,6 @@ object ValueTransforms {
   def lowercaseColumns(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.toLowerCase): _*)
 
-  /** Go `StrVal` equivalent (cmd/app.go:131-184): any value → string for
-    * error logging; structs via JSON. */
-  def strVal(c: Column): Column = c.cast("string")
-
   /** Scrub NULs across all string columns (the whole-row form of the
     * reference's per-value loop). */
   def scrubNulAll(df: DataFrame): DataFrame =

@@ -16,22 +16,22 @@ object CompareDb {
   case class TableReport(table_name: String, src_rows: Long, dest_rows: Long,
                          dest_is_exist: String, is_ok: String)
 
-  /** Count-compare a set of (name, source df, optional target df) pairs.
-    * Missing target → DestIsExist=NO, isOk=NO (compare.go:124-126 /
-    * readme.md:152-166 outcome shapes). */
+  object TableReport {
+    /** The outcome shapes (compare.go:124-126 / readme.md:152-166): equal
+      * or unequal counts, or a missing target → DestIsExist=NO, isOk=NO
+      * with dest_rows -1. */
+    def apply(table: String, src: Long, dest: Option[Long]): TableReport = dest match {
+      case Some(d) => TableReport(table, src, d, "YES", if (src == d) "YES" else "NO")
+      case None    => TableReport(table, src, -1L, "NO", "NO")
+    }
+  }
+
+  /** Count-compare a set of (name, source df, optional target df) pairs. */
   def countCompare(spark: SparkSession,
                    pairs: Seq[(String, DataFrame, Option[DataFrame])]): DataFrame = {
     import spark.implicits._
-    val rows = pairs.map { case (name, src, dst) =>
-      val s = src.count()
-      dst match {
-        case Some(d) =>
-          val t = d.count()
-          TableReport(name, s, t, "YES", if (s == t) "YES" else "NO")
-        case None => TableReport(name, s, -1L, "NO", "NO")
-      }
-    }
-    rows.toDS().toDF().orderBy("table_name")
+    pairs.map { case (name, src, dst) => TableReport(name, src.count(), dst.map(_.count())) }
+      .toDS().toDF().orderBy("table_name")
   }
 
   /** Failed-only view (compare.go:71-98 second report table). */

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.config.{ConnConfig, GraftConfig}
+import graft.io.{Jdbc, StatementRegistry}
 
 /** The full migration, end to end, against REAL JDBC endpoints on BOTH
   * sides (embedded Derby): an information_schema-shaped fixture database
@@ -117,7 +118,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
 
     val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4)
     val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
-    val sink = new JdbcInsertSink(spark, tgtUrl, "", "")
+    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""))
     val flog = new FailureLog(graft.TempScratch.fresh("graft-e2e"))
     val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))
 
@@ -154,5 +155,16 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     runner2.run()
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"orders\"") == 37L)
+  }
+
+  test("a failing DDL through JdbcSink returns Failure and deregisters its statement") {
+    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""))
+    val before = StatementRegistry.activeCount
+    val r = sink.executeDdl("CREATE TABLE \"no_such_schema\".\"t\" (x INT) BOGUS")
+    assert(r.isFailure)
+    assert(r.failed.get.isInstanceOf[java.sql.SQLException])
+    assert(StatementRegistry.activeCount == before)
+    assert(sink.executeDdl("DROP TABLE \"never_created\"").isFailure)
+    assert(StatementRegistry.activeCount == before)
   }
 }

@@ -101,6 +101,12 @@ class MigrationSpec extends AnyFunSuite {
     val r2 = new Migration.Runner(spark, cfg, fixtureSource, emptySink)
     val missing = r2.compare().collect().head
     assert(missing.getString(3) == "NO" && missing.getLong(2) == -1L)
+    val shortSink = new RecordingSink
+    shortSink.written("t1") = Array(org.apache.spark.sql.Row(1, "a"))
+    val r3 = new Migration.Runner(spark, cfg, fixtureSource, shortSink)
+    val unequal = r3.compare().collect().head
+    assert((unequal.getLong(1), unequal.getLong(2), unequal.getString(3), unequal.getString(4)) ==
+      ((2L, 1L, "YES", "NO")))
   }
 
   test("structureOnly / dataOnly slices match the -s and onlyData subcommands") {

@@ -21,6 +21,7 @@ class YamlConfigSpec extends AnyFunSuite {
                |charInLength: false
                |useNvarchar2: true
                |Distributed: false
+               |dbType: Gauss
                |tables:
                |  test1:
                |    - select * from test1

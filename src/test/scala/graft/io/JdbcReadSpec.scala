@@ -11,7 +11,8 @@ import graft.catalog.Pagination
   * Derby, the JDBC engine Spark ships with — instead of fakes: proves the
   * composite-PK path plans ONE flat scan relation with one partition per
   * page at 100+ pages (the shape that replaced the union-of-DataFrames
-  * fallback), and that both page strategies return exactly the table's
+  * fallback), and that every page strategy (numeric range, composite and
+  * VARCHAR deferred join, no-PK full scan) returns exactly the table's
   * rows. */
 object DerbyTestDb {
   val url = "jdbc:derby:memory:graftread;create=true"
@@ -54,7 +55,7 @@ class JdbcReadSpec extends AnyFunSuite {
     } finally c.close()
 
     val df = Jdbc.readTable(spark, conn, "COMPO", Seq("A", "B"),
-      pkIsNumeric = false, rowCount = 240, pkMin = 0, pkMax = 0, pageSize = 2)
+      pkIsNumeric = false, pageSize = 2)
     // one Spark task per page...
     assert(df.rdd.getNumPartitions == 120)
     // ...but ONE leaf scan relation: the plan is flat at any page count
@@ -86,9 +87,51 @@ class JdbcReadSpec extends AnyFunSuite {
     } finally c.close()
 
     val df = Jdbc.readTable(spark, conn, "SOLO", Seq("ID"),
-      pkIsNumeric = true, rowCount = 100, pkMin = 0, pkMax = 99, pageSize = 25)
+      pkIsNumeric = true, pageSize = 25)
     assert(df.rdd.getNumPartitions == 4)
     assert(rows(df) == rows(spark.read.jdbc(conn.url, "SOLO", conn.props)))
+  }
+
+  test("no-PK read: one full-scan partition, row-identical") {
+    DerbyTestDb.exec(
+      "DROP TABLE NOPK",
+      "CREATE TABLE NOPK (A INT NOT NULL, B VARCHAR(16) NOT NULL, V VARCHAR(24))")
+    val c = DerbyTestDb.connection()
+    try {
+      val ps = c.prepareStatement("INSERT INTO NOPK VALUES (?, ?, ?)")
+      (0 until 30).foreach { i =>
+        ps.setInt(1, i % 7); ps.setString(2, s"k$i"); ps.setString(3, s"v$i"); ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally c.close()
+
+    val df = Jdbc.readTable(spark, conn, "NOPK", Nil, pkIsNumeric = false, pageSize = 4)
+    assert(df.rdd.getNumPartitions == 1)
+    val got = rows(df)
+    assert(got.size == 30)
+    assert(got == rows(spark.read.jdbc(conn.url, "NOPK", conn.props)))
+  }
+
+  test("single VARCHAR-PK read: deferred-join predicates, ceil(n/pageSize) partitions") {
+    DerbyTestDb.exec(
+      "DROP TABLE VPK",
+      "CREATE TABLE VPK (K VARCHAR(16) NOT NULL PRIMARY KEY, N INT NOT NULL, V VARCHAR(24))")
+    val c = DerbyTestDb.connection()
+    try {
+      val ps = c.prepareStatement("INSERT INTO VPK VALUES (?, ?, ?)")
+      (0 until 23).foreach { i =>
+        ps.setString(1, s"key$i"); ps.setInt(2, i); ps.setString(3, s"v$i"); ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally c.close()
+
+    val df = Jdbc.readTable(spark, conn, "VPK", Seq("K"), pkIsNumeric = false, pageSize = 5)
+    assert(df.rdd.getNumPartitions == 5) // ceil(23 / 5)
+    val got = df.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(got.size == 23 && got.map(_._1).distinct.size == 23)
+    assert(got == spark.read.jdbc(conn.url, "VPK", conn.props).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(_._1).toSeq)
   }
 
   test("deferredJoinPredicates carry the kill tag and the dialect's limit clause") {
