@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.{AdaptiveJoin, CorpusAuditQueries, EvalMetricQueries, GraphQueries}
 
 /** Dev-only: write `.explain("formatted")` of named queries to files —
   * the plans/rNN before/after evidence the optimization rounds commit.
@@ -15,22 +17,24 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   /** Synthetic entries for sub-pipelines a query materializes behind a
     * localCheckpoint (whose formatted plan would otherwise collapse to a
-    * LogicalRDD leaf): the exact builder the query calls, un-checkpointed,
-    * so the committed plan evidence shows the real candidate/verify shape.
+    * LogicalRDD leaf): the builder the query calls, un-checkpointed, so
+    * the dump shows the real candidate/verify shape.
     */
-  private val builders: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-    // q410's checkpointed pair table — the SAME builder the query calls
-    // (Round11nQueries.q410PairTable), so this dump cannot drift from
-    // what actually runs
-    "sub_q410_ppjoin_micro" ->
-      ((s: SparkSession, d: String) => operators.Round11nQueries.q410PairTable(s, d)),
-    // q353's slice 0 — the staged loop's exact per-slice chain (same
-    // shared builder), un-checkpointed so the fanout/aggregate shape
-    // is visible
-    "sub_q353_slice" ->
-      ((s: SparkSession, d: String) => operators.Round8zQueries
-        .adamicAdarSliceForPlan(s, d, operators.Round9Queries.AaCap,
-          operators.Round11Queries.StagedSlices)))
+  private val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "sub_q410_ppjoin_micro" -> CorpusAuditQueries.q410PairTable _,
+    "sub_q353_slice" -> adamicAdarSlice _)
+
+  /** Slice 0 of q353's staged loop, un-checkpointed, built from the same
+    * inputs the loop uses (checkpointed weight table, measured anti-join
+    * pick) so the fanout/aggregate shape is visible.
+    */
+  private def adamicAdarSlice(s: SparkSession, dir: String): DataFrame = {
+    val (pairs, sym, wts0) =
+      EvalMetricQueries.wedgeInputs(s, dir, EvalMetricQueries.AaCap)
+    val leg1 = sym.join(wts0.localCheckpoint(), Seq("w"))
+    EvalMetricQueries.sliceTop(s, leg1, sym, pairs, AdaptiveJoin.isSmall(pairs),
+      GraphQueries.StagedSlices, 0)
+  }
 
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

@@ -1,25 +1,20 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-import graft.operators.{CoreQueries, DdlQueries, ExtQueries, Round3Queries, Round6Queries, Round7Queries, Round7bQueries, Round7cQueries, Round7dQueries, Round7eQueries, Round7fQueries, Round8Queries, Round8bQueries, Round8cQueries, Round8dQueries, Round8eQueries, Round8fQueries, Round8gQueries, Round8hQueries, Round8iQueries, Round8jQueries, Round8kQueries, Round8lQueries, Round8mQueries, Round8nQueries, Round8oQueries, Round8pQueries, Round8qQueries, Round8rQueries, Round8sQueries, Round8tQueries, Round8uQueries, Round8vQueries, Round8wQueries, Round8xQueries, Round8yQueries, Round8zQueries, Round8aaQueries, Round8abQueries, Round8acQueries, Round8adQueries, Round8aeQueries, Round8afQueries, Round8agQueries, Round8ahQueries, Round9Queries, Round9bQueries, Round9dQueries, Round9eQueries, Round9fQueries, Round9gQueries, Round9hQueries, Round9iQueries, Round9jQueries, Round9kQueries, Round11Queries, Round11bQueries, Round11cQueries, Round11dQueries, Round11eQueries, Round11fQueries, Round11gQueries, Round11hQueries, Round11iQueries, Round11jQueries, Round11kQueries, Round11lQueries, Round11mQueries, Round11nQueries, Round11oQueries, Round11pQueries, Round12Queries}
+import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  private def registry: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
-    CoreQueries.queries ++ ExtQueries.queries ++ DdlQueries.queries ++
-      Round3Queries.queries ++ Round6Queries.queries ++ Round7Queries.queries ++
-      Round7bQueries.queries ++ Round7cQueries.queries ++ Round7dQueries.queries ++
-      Round7eQueries.queries ++ Round7fQueries.queries ++ Round8Queries.queries ++
-      Round8bQueries.queries ++ Round8cQueries.queries ++ Round8dQueries.queries ++
-      Round8eQueries.queries ++ Round8fQueries.queries ++ Round8gQueries.queries ++
-      Round8hQueries.queries ++ Round8iQueries.queries ++ Round8jQueries.queries ++
-      Round8kQueries.queries ++ Round8lQueries.queries ++ Round8mQueries.queries ++
-      Round8nQueries.queries ++ Round8oQueries.queries ++ Round8pQueries.queries ++
-      Round8qQueries.queries ++ Round8rQueries.queries ++ Round8sQueries.queries ++ Round8tQueries.queries ++ Round8uQueries.queries ++ Round8vQueries.queries ++ Round8wQueries.queries ++ Round8xQueries.queries ++ Round8yQueries.queries ++ Round8zQueries.queries ++ Round8aaQueries.queries ++ Round8abQueries.queries ++ Round8acQueries.queries ++ Round8adQueries.queries ++ Round8aeQueries.queries ++ Round8afQueries.queries ++ Round8agQueries.queries ++ Round8ahQueries.queries ++
-      Round9Queries.queries ++ Round9bQueries.queries ++ Round9dQueries.queries ++ Round9eQueries.queries ++ Round9fQueries.queries ++ Round9gQueries.queries ++ Round9hQueries.queries ++ Round9iQueries.queries ++ Round9jQueries.queries ++ Round9kQueries.queries ++
-      Round11Queries.queries ++ Round11bQueries.queries ++ Round11cQueries.queries ++ Round11dQueries.queries ++ Round11eQueries.queries ++ Round11fQueries.queries ++ Round11gQueries.queries ++ Round11hQueries.queries ++ Round11iQueries.queries ++ Round11jQueries.queries ++ Round11kQueries.queries ++ Round11lQueries.queries ++ Round11mQueries.queries ++ Round11nQueries.queries ++ Round11oQueries.queries ++ Round11pQueries.queries ++
-      Round12Queries.queries
+  /** Every family module once, in docs/OPERATORS.md section order. */
+  private def registry: Seq[Entry] =
+    ParityQueries.queries ++ RelationalQueries.queries ++ GraphQueries.queries ++
+      DedupQueries.queries ++ AnnQueries.queries ++
+      TextSignalQueries.queries ++ CurationQueries.queries ++
+      CorpusStatsQueries.queries ++ EvalMetricQueries.queries ++
+      MultimodalQueries.queries ++
+      StorageLayoutQueries.queries ++ StatTestQueries.queries ++
+      CorpusAuditQueries.queries
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.config.{GraftConfig, YamlConfig}
-import graft.io.Jdbc
+import graft.io.{Jdbc, PgJdbcCopyTransportFactory}
 
 /** Subcommand surface (C7, cmd/create.go:18-281 / compare.go / version.go):
   *
@@ -23,11 +23,11 @@ object GraftCli {
 
   /** Parsed command line: the reference's cobra flag surface
     * (root.go:526-531, create.go:24). `-s`/`--selFromYml` takes the work
-    * list from the yml `tables:` map; `-t`/`--tableOnly` on createTable
-    * skips data-SQL planning (a no-op here — page planning is lazy in
-    * the data phase — accepted for flag parity). */
-  case class CliArgs(cfgPath: String, cmd: String,
-                     selFromYml: Boolean, tableOnly: Boolean)
+    * list from the yml `tables:` map. `-t`/`--tableOnly` parses like any
+    * other unknown flag and is ignored: in the reference it skips
+    * data-SQL planning on createTable, and page planning here is lazy in
+    * the data phase already. */
+  case class CliArgs(cfgPath: String, cmd: String, selFromYml: Boolean)
 
   def parseArgs(args: Array[String]): CliArgs = {
     val (flags, cmds) = args.partition(_.startsWith("-"))
@@ -35,8 +35,7 @@ object GraftCli {
       cfgPath = flags.collectFirst { case f if f.startsWith("--config=") => f.drop(9) }
         .getOrElse("graft.yml"),
       cmd = cmds.headOption.getOrElse("help"),
-      selFromYml = flags.contains("-s") || flags.contains("--selFromYml"),
-      tableOnly = flags.contains("-t") || flags.contains("--tableOnly"))
+      selFromYml = flags.contains("-s") || flags.contains("--selFromYml"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -81,8 +80,10 @@ object GraftCli {
   private def runCommand(spark: SparkSession, cfg: GraftConfig, cmd: String): Unit = {
     {
       val source = new JdbcCatalogSource(spark, cfg)
+      val dest = cfg.dest
       val sink = new JdbcSink(spark,
-        Jdbc.ConnInfo(cfg.dest.pgJdbcUrl, cfg.dest.username, cfg.dest.password))
+        Jdbc.ConnInfo(dest.pgJdbcUrl, dest.username, dest.password),
+        new PgJdbcCopyTransportFactory(dest.pgJdbcUrl, dest.username, dest.password))
       // per-run timestamped artifact dir (CreateDateDir, app.go:219-236)
       val flog = new FailureLog(Paths.get(""))
       val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))

@@ -2,11 +2,11 @@ package graft.cli
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.GraftConfig
-import graft.io.{Jdbc, PgCopyLoad, PgJdbcCopyTransportFactory}
+import graft.io.{CopyTransportFactory, Jdbc, PgCopyLoad}
 import graft.types.ColumnMeta
 
 /** Live JDBC wiring for the Migration pipeline. JdbcCatalogSource turns
@@ -18,8 +18,9 @@ import graft.types.ColumnMeta
   * target sink.
   *
   * No MySQL/PG is reachable in this build environment; the catalog
-  * queries, page probes, every page-read strategy and the sink's INSERT
-  * path run end to end against embedded Derby in MigrationEndToEndSpec
+  * queries, page probes, every page-read strategy and the sink's COPY
+  * path (through a Derby COPY transport) run end to end against
+  * embedded Derby in MigrationEndToEndSpec
   * (plus fixture-backed CatalogSource/MigrationSink specs) — only the
   * vendor wire protocols stay untested.
   */
@@ -137,42 +138,21 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
 }
 
 /** Target-side sink (K1/K2). DDL runs through Jdbc.executeDdl. Data
-  * takes the reference's COPY bulk load (`pq.CopyIn`, root.go:408-511) on
-  * PostgreSQL and Spark's batched-INSERT JDBC writer on any other target
-  * (the embedded-Derby integration test); the target URL picks the path.
-  * Both truncate first (root.go:297), so a re-run reloads. */
-final class JdbcSink(spark: SparkSession, conn: Jdbc.ConnInfo)
+  * truncates first (root.go:297), so a re-run reloads, then takes the
+  * reference's COPY bulk load (`pq.CopyIn`, root.go:408-511) through
+  * `copy`, one transport per partition. */
+final class JdbcSink(spark: SparkSession, conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
     extends Migration.MigrationSink {
 
   override def executeDdl(sql: String): Try[Unit] = Try(Jdbc.executeDdl(conn, sql))
 
   override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
-    if (conn.url.startsWith("jdbc:postgresql")) {
-      // a failed TRUNCATE must fail the write — COPYing after a silently
-      // skipped truncate would append onto stale data on re-runs. The row
-      // count comes from the write itself — no second scan of the source
-      Jdbc.executeDdl(conn, s"""truncate table "$table"""")
-      PgCopyLoad.copyInto(df, table,
-        new PgJdbcCopyTransportFactory(conn.url, conn.user, conn.password))
-    } else {
-      // Overwrite mode would silently CREATE a missing target table (with
-      // Spark-inferred DDL); the migration contract is the reference's
-      // (root.go:412): data loads into the table phase 1 created, or the
-      // table is a counted failure
-      if (rowCount(table).isEmpty)
-        throw new IllegalStateException(s"target table $table does not exist")
-      val props = conn.props
-      props.setProperty("rewriteBatchedStatements", "true")
-      // Overwrite + the JDBC truncate option issues TRUNCATE instead of
-      // DROP/CREATE, so the target DDL survives; the created DDL quotes
-      // lowercase identifiers, so the writer must too
-      df.write.mode(SaveMode.Overwrite)
-        .option("truncate", true)
-        .option("batchsize", 10000)
-        .option("isolationLevel", "READ_COMMITTED")
-        .jdbc(conn.url, s""""$table"""", props)
-      rowCount(table).getOrElse(0L)
-    }
+    // a failed TRUNCATE (e.g. the table phase 1 should have created is
+    // missing) fails the write — COPYing after a silently skipped
+    // truncate would append onto stale data on re-runs. The row count
+    // comes from the write itself — no second scan of the source
+    Jdbc.executeDdl(conn, s"""truncate table "$table"""")
+    PgCopyLoad.copyInto(df, table, copy)
   }
 
   override def rowCount(table: String): Option[Long] = Try {

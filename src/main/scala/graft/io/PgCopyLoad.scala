@@ -3,6 +3,7 @@ package graft.io
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** K1 mode B — the reference's COPY bulk load (`pq.CopyIn`,
@@ -45,7 +46,7 @@ trait CopyTransportFactory extends Serializable {
 object PgCopyLoad {
 
   /** COPY chunk size: about one pq message buffer. */
-  private val FlushBytes = 64 * 1024
+  private[io] val FlushBytes = 64 * 1024
 
   /** A speculative duplicate of a slow task would COPY its partition
     * TWICE (each task commits its own transaction; there is no task-id
@@ -59,21 +60,12 @@ object PgCopyLoad {
         "speculative duplicate of a slow task would load its partition twice")
 
   /** Stream `df` into `table` via COPY. Rows are encoded with
-    * `PgCopyText.encodeRow` and flushed in ~`flushBytes` chunks (the
+    * `PgCopyText.encodeRow` and flushed in ~`FlushBytes` chunks (the
     * buffering the reference gets from pq's internal message buffer).
     * Returns the number of rows written, counted by accumulator — no
     * second scan of the input. */
-  def copyInto(df: DataFrame, table: String, factory: CopyTransportFactory,
-               flushBytes: Int = FlushBytes): Long = {
-    assertNoSpeculation(df.sparkSession.sparkContext.getConf)
-    val stmt = PgCopyText.copyStatement(table, df.columns.toSeq)
-    val rows = df.sparkSession.sparkContext.longAccumulator("graft-copy-rows")
-    df.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext)
-        rows.add(streamPartition(it, stmt, factory, flushBytes, Nil))
-    }
-    rows.value
-  }
+  def copyInto(df: DataFrame, table: String, factory: CopyTransportFactory): Long =
+    load(df, table, factory)(_ => Some(Nil))
 
   /** Exactly-once variant for the streaming sink (CopyStream): a
     * partition whose (batchId, partitionId) is already in the ledger is
@@ -87,15 +79,26 @@ object PgCopyLoad {
     * deterministic partitioning.) */
   def copyIntoLedgered(df: DataFrame, table: String,
                        factory: CopyTransportFactory, ledger: BatchLedger,
-                       batchId: Long): Long = {
+                       batchId: Long): Long =
+    load(df, table, factory) { pid =>
+      if (ledger.committed(batchId, pid)) None
+      else Some(Seq(ledger.recordSql(batchId, pid)))
+    }
+
+  /** The one COPY write path: the speculation guard, then one transport
+    * per non-empty partition. `sideSqls(partitionId)` runs once per
+    * non-empty partition: None skips it, Some(sqls) loads it and commits
+    * `sqls` inside its transaction. */
+  private def load(df: DataFrame, table: String, factory: CopyTransportFactory)
+                  (sideSqls: Int => Option[Seq[String]]): Long = {
     assertNoSpeculation(df.sparkSession.sparkContext.getConf)
     val stmt = PgCopyText.copyStatement(table, df.columns.toSeq)
     val rows = df.sparkSession.sparkContext.longAccumulator("graft-copy-rows")
     df.foreachPartition { (it: Iterator[Row]) =>
-      val pid = org.apache.spark.TaskContext.get().partitionId()
-      if (it.hasNext && !ledger.committed(batchId, pid))
-        rows.add(streamPartition(it, stmt, factory, FlushBytes,
-          Seq(ledger.recordSql(batchId, pid))))
+      if (it.hasNext)
+        sideSqls(TaskContext.get().partitionId()).foreach { sqls =>
+          rows.add(streamPartition(it, stmt, factory, sqls))
+        }
     }
     rows.value
   }
@@ -103,19 +106,19 @@ object PgCopyLoad {
   /** One partition's COPY: begin → encode/flush → commit(sideSqls), with
     * rollback on any failure. Returns rows streamed. */
   private def streamPartition(it: Iterator[Row], stmt: String,
-                              factory: CopyTransportFactory, flushBytes: Int,
+                              factory: CopyTransportFactory,
                               sideSqls: Seq[String]): Long = {
     val t = factory.open()
     var ok = false
     var n = 0L
     try {
       t.begin(stmt)
-      val buf = new ByteArrayOutputStream(flushBytes + 4096)
+      val buf = new ByteArrayOutputStream(FlushBytes + 4096)
       it.foreach { row =>
         buf.write(PgCopyText.encodeRow(row).getBytes(StandardCharsets.UTF_8))
         buf.write('\n')
         n += 1
-        if (buf.size >= flushBytes) {
+        if (buf.size >= FlushBytes) {
           val b = buf.toByteArray; t.write(b, 0, b.length); buf.reset()
         }
       }

@@ -1,7 +1,7 @@
 package graft.operators
 
 /** Sizing helper for the staged out-of-core wedge forms
-  * (Round8zQueries.adamicAdarStaged / Round8tQueries
+  * (EvalMetricQueries.adamicAdarStaged / GraphQueries
   * .localClusteringStaged): turns the r11/r12 measured dial rule into
   * code so callers don't hand-pick slice counts.
   *

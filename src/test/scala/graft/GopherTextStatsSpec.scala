@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{TextAnalysis => TA}
 import graft.functions.GopherTextStats
-import graft.operators.Round11bQueries
+import graft.operators.StatTestQueries
 
 /** The fused GopherTextStats kernel must be BIT-EQUAL to the expression
   * chain it replaces (normText → split → length/regexp_count/
@@ -18,7 +18,7 @@ class GopherTextStatsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val Stops = Round11bQueries.GopherStops
+  private val Stops = StatTestQueries.GopherStops
 
   /** The pre-kernel gopherDoc statistics chain (round-11 form). */
   private def exprChain(dfText: org.apache.spark.sql.DataFrame) = dfText

@@ -811,14 +811,14 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(fanouts.size == 1, s"expected exactly one wedge fanout join:\n$plan")
     val capBelow = fanouts.head.children.exists(_.collectFirst {
       case f: LFilter
-          if f.condition.toString.contains(s"<= ${operators.Round9Queries.AaCap}") => f
+          if f.condition.toString.contains(s"<= ${operators.EvalMetricQueries.AaCap}") => f
     }.isDefined)
     assert(capBelow, s"cap filter not below the wedge fanout join:\n$plan")
     // and nothing above the fanout re-filters on deg — the cap is the
     // ONLY degree gate, applied once, before the fanout
     val capAbove = plan.collectFirst {
       case f: LFilter
-          if f.condition.toString.contains(s"<= ${operators.Round9Queries.AaCap}") &&
+          if f.condition.toString.contains(s"<= ${operators.EvalMetricQueries.AaCap}") &&
             !fanouts.head.exists(_ eq f) => f
     }
     assert(capAbove.isEmpty, s"a second cap filter sits above the fanout:\n$plan")
@@ -872,7 +872,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // pre-checkpoint stats DAG (the query hides it behind a
     // localCheckpoint).
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    val plan = operators.Round9fQueries.fsLinkageStats(spark, TestSpark.Sf)
+    val plan = operators.DedupQueries.fsLinkageStats(spark, TestSpark.Sf)
       .queryExecution.optimizedPlan
     val joins = plan.collect { case j: Join => j }
     assert(joins.nonEmpty, s"expected the truth join + scalar crosses:\n$plan")
@@ -1358,7 +1358,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // be the one pruned corpus scan, and (b) the final plans must be
     // entirely grid-sized: ZERO parquet scans, no row-level cross join
     val gplan = PlanText.planStr(
-      graft.operators.Round12Queries.driftGrid(spark, TestSpark.Sf))
+      graft.operators.CorpusStatsQueries.driftGrid(spark, TestSpark.Sf))
     assert("Scan parquet".r.findAllIn(gplan).length == 1,
       s"drift grid reads the corpus more than once:\n$gplan")
     assert(gplan.contains("ReadSchema: struct<doc_id:bigint,n_chars:bigint>"),
@@ -1456,7 +1456,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "q97_dedup_prefix_filter" ->
         SparkEntry.queries("q97_dedup_prefix_filter")(spark, TestSpark.Sf),
       "q410 pair table" ->
-        operators.Round11nQueries.q410PairTable(spark, TestSpark.Sf))
+        operators.CorpusAuditQueries.q410PairTable(spark, TestSpark.Sf))
     for ((name, df) <- dfs) {
       df.collect()
       val nodes = PlanText.finalNodes(df)

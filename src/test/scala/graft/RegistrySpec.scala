@@ -2,12 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Integrity gate for the SparkEntry registry itself — 46 operator
-  * files now feed it, and the oracle gate silently weakens if a name
-  * collides (later Map entry wins), drifts from the published
-  * CORRECTNESS artifact (a rename would erase a query's verification
-  * history), or ships without a SQL oracle (the driver then records
-  * only a rows>0 check).
+/** Integrity gate for the SparkEntry registry itself — the family
+  * modules in `graft.operators` feed it, and the oracle gate silently
+  * weakens if a name collides (later Map entry wins), drifts from the
+  * published CORRECTNESS artifact (a rename would erase a query's
+  * verification history), or ships without a SQL oracle (the oracle
+  * gate then records only a rows>0 check).
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -18,6 +18,23 @@ class RegistrySpec extends AnyFunSuite {
     * SQL-expressible gate projection.
     */
   private val rowsOnlyAllowed: Map[String, String] = Map.empty
+
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  test("registry names and oracle SQL are byte-identical to the pinned digests") {
+    // moving a query between modules must not change what the gate
+    // checks; an intended change to a name or an oracle updates these
+    // digests in the same commit
+    val names = SparkEntry.queries.keySet.toSeq.sorted.mkString("\n")
+    val oracle = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (n, sql) => s"$n\t$sql" }.mkString("\n")
+    assert(sha256(names) ==
+      "0ecd215a8363aa51c974f39eaae8e5e09fe52ba496080250abb031509769bc49")
+    assert(sha256(oracle) ==
+      "4c2bfaadaf5ed2767b73c4ef5f40cbc7a5fd91ae319dd6f4b4bd06483e84d297")
+  }
 
   test("registry names are unique (no Map-collapse in the gate)") {
     val (total, distinct) = SparkEntry.registrySize

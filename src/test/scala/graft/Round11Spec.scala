@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{Round8tQueries, Round8zQueries, Round9Queries, Round11Queries}
+import graft.operators.{EvalMetricQueries, GraphQueries}
 
 /** Behavior pins for the round-11 staged execution forms: slicing is a
   * pure physical re-plan, so EVERY slice count must reproduce the
@@ -22,8 +22,8 @@ class Round11Spec extends AnyFunSuite {
     val single = rows(SparkEntry.queries("q321_adamic_adar_capped")(spark, TestSpark.Sf))
     assert(single.nonEmpty)
     for (b <- Seq(1, 3, 4)) {
-      val staged = rows(Round8zQueries.adamicAdarStaged(
-        spark, TestSpark.Sf, Round9Queries.AaCap, b))
+      val staged = rows(EvalMetricQueries.adamicAdarStaged(
+        spark, TestSpark.Sf, EvalMetricQueries.AaCap, b))
       assert(staged == single, s"staged AA diverged at slices=$b")
     }
   }
@@ -32,13 +32,13 @@ class Round11Spec extends AnyFunSuite {
     val single = rows(SparkEntry.queries("q272_local_clustering")(spark, TestSpark.Sf))
     assert(single.nonEmpty)
     for (b <- Seq(1, 3, 4)) {
-      val staged = rows(Round8tQueries.localClusteringStaged(spark, TestSpark.Sf, b))
+      val staged = rows(GraphQueries.localClusteringStaged(spark, TestSpark.Sf, b))
       assert(staged == single, s"staged clustering diverged at slices=$b")
     }
   }
 
   test("the gated entries run the shipped dial and share the single-shot oracles") {
-    assert(Round11Queries.StagedSlices > 1) // staging actually engaged
+    assert(GraphQueries.StagedSlices > 1) // staging actually engaged
     assert(SparkEntry.oracleSql("q353_adamic_adar_staged") ==
       SparkEntry.oracleSql("q321_adamic_adar_capped"))
     assert(SparkEntry.oracleSql("q354_local_clustering_staged") ==

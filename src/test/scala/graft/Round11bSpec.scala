@@ -161,7 +161,7 @@ class Round11bSpec extends AnyFunSuite {
   }
 
   test("q359 BH-FDR permutation p-values and step-up equal the Scala replay") {
-    val seeds = graft.operators.Round11bQueries.FdrSeeds
+    val seeds = graft.operators.StatTestQueries.FdrSeeds
     val n = docs.size.toLong
     val stot = docs.map(_._5).sum
     val grand = stot.toDouble / n.toDouble

@@ -39,7 +39,7 @@ class Round11dSpec extends AnyFunSuite {
       .map(g => g.size.toLong).map(t => t * t * t - t).sum
     val sig2base = n.toDouble * (n.toDouble + 1.0) / 12.0 -
       tsum.toDouble / (12.0 * (n.toDouble - 1.0))
-    val zcrit = operators.Round11dQueries.DunnZCrit.toDouble
+    val zcrit = operators.StatTestQueries.DunnZCrit.toDouble
     val expected = (for {
       i <- bySrc.indices; j <- (i + 1) until bySrc.size
     } yield {

@@ -56,7 +56,7 @@ class Round11eSpec extends AnyFunSuite {
 
   private lazy val flags: Seq[(String, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean)] = {
     import spark.implicits._
-    operators.Round11bQueries.gopherDoc(spark, TestSpark.Sf)
+    operators.StatTestQueries.gopherDoc(spark, TestSpark.Sf)
       .select($"source", $"r_wc", $"r_mwl", $"r_alpha", $"r_stop", $"r_rep", $"r_sym")
       .as[(String, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean)]
       .collect().toSeq

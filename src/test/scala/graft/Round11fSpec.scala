@@ -152,7 +152,7 @@ class Round11fSpec extends AnyFunSuite {
 
   test("q386 MH pooled OR equals the per-stratum fold replay") {
     import spark.implicits._
-    val flags = operators.Round11bQueries.gopherDoc(spark, TestSpark.Sf)
+    val flags = operators.StatTestQueries.gopherDoc(spark, TestSpark.Sf)
       .select($"source", $"r_mwl", $"r_rep")
       .as[(String, Boolean, Boolean)].collect().toSeq
     val strata = flags.groupBy(_._1).toSeq.sortBy(_._1).map { case (src, rows) =>

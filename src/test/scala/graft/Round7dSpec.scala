@@ -5,15 +5,12 @@ import graft.PlanText.PlanTextOps
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round7dQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round7d operators beyond the oracle gate. */
 class Round7dSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round7dQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def quantized: Array[(Long, IndexedSeq[Double], Int)] = {
     val embs = Tables.t(spark, TestSpark.Sf, "embeddings")

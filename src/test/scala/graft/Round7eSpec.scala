@@ -5,15 +5,12 @@ import graft.PlanText.PlanTextOps
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round7eQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round7e operators beyond the oracle gate. */
 class Round7eSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round7eQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

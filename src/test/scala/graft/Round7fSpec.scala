@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, TextAnalysis => TA}
-import graft.operators.Round7fQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round7f operators (q194–q197) beyond the
   * oracle gate: imperative recomputations of each statistic plus the
@@ -14,9 +14,6 @@ import graft.operators.Round7fQueries
 class Round7fSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round7fQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

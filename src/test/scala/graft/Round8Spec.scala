@@ -6,16 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, TextAnalysis => TA}
-import graft.operators.Round8Queries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8 operators (q198–q199) beyond the
   * oracle gate. */
 class Round8Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8Queries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
@@ -29,9 +26,7 @@ class Round8Spec extends AnyFunSuite {
   // ----- q200 multi-probe kNN graph -------------------------------------
 
   test("q200 dominates q158's single-bucket top-3; bucket join is an equi-join") {
-    import graft.operators.Round7Queries
-    val single = Round7Queries.queries
-      .collectFirst { case ("q158_knn_graph", fn, _) => fn }.get
+    val single = q("q158_knn_graph")
       .apply(spark, TestSpark.Sf)
       .select($"q_id", $"rnk", $"cos_sim")
       .as[(Long, Long, Double)].collect()

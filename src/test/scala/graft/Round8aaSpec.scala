@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8aaQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8aa operators (q297–q299): imperative
   * recomputation of each result plus the defining invariants (the
@@ -15,9 +15,6 @@ import graft.operators.Round8aaQueries
 class Round8aaSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8aaQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

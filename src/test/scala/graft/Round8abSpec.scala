@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.operators.Round8abQueries
+import graft.operators.EvalMetricQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ab operators (q300–q302): imperative
   * recomputation of each statistic plus the defining invariants (the
@@ -18,9 +19,6 @@ import graft.operators.Round8abQueries
 class Round8abSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8abQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -71,10 +69,10 @@ class Round8abSpec extends AnyFunSuite {
     // re-cast to DECIMAL(38,0) before multiplying by ix / (sa+sb) — at
     // n ~ 2e6 the products reach ~2e24 and the un-recast form wraps (or
     // throws under ANSI). Pin the SHIPPED expression (the shared
-    // Round8abQueries.AriExprSql constant — the exact string the query
+    // EvalMetricQueries.AriExprSql constant — the exact string the query
     // evaluates, so an edit to the production SQL re-runs this pin)
     // against a BigInt-exact recompute at that scale.
-    val ariExpr = operators.Round8abQueries.AriExprSql
+    val ariExpr = operators.EvalMetricQueries.AriExprSql
     val (n, ix, sa, sb) = (2000000L, 987654321098L, 1543219876543L, 1212121212121L)
     val got = Seq((n, ix, sa, sb)).toDF("n", "ix", "sa", "sb")
       .select(expr(ariExpr).as("ari_micro")).head.getLong(0)

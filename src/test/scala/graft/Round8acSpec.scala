@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.ext.Similarity
-import graft.operators.Round8acQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ac operators (q303–q305): an imperative
   * Wasserstein-1 recompute from raw lengths, the MMR greedy replayed
@@ -16,9 +16,6 @@ import graft.operators.Round8acQueries
 class Round8acSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8acQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8adQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ad operators (q306–q308): imperative
   * recomputation of the Heaps OLS over the geometric checkpoint grid,
@@ -13,9 +13,6 @@ import graft.operators.Round8adQueries
 class Round8adSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8adQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

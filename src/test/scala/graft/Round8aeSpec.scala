@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8aeQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ae operators (q309–q311): the operating
   * points replayed against an imperative threshold sweep, the Murphy
@@ -13,9 +13,6 @@ import graft.operators.Round8aeQueries
 class Round8aeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8aeQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8afQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8af operators (q312–q314): the EWMA
   * replayed with exact integer weights (whose mass identity
@@ -14,9 +14,6 @@ import graft.operators.Round8afQueries
 class Round8afSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8afQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

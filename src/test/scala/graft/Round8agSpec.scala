@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8agQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ag operators (q315–q317): the Turing
   * mass recomputed per source, the tank estimator replayed over the
@@ -14,9 +14,6 @@ import graft.operators.Round8agQueries
 class Round8agSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8agQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8ahQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8ah operators (q318–q320): the jackknife
   * replayed source-by-source, the SPRT walk replayed day-by-day with
@@ -14,9 +14,6 @@ import graft.operators.Round8ahQueries
 class Round8ahSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8ahQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def lnm(x: Double): Long = math.floor(math.log(x) * 1e6 + 0.5).toLong
 

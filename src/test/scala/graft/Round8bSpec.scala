@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.operators.Round8bQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8b operators (q203–q207): full imperative
   * recomputations in plain Scala (independent of the Spark plans) plus
@@ -14,9 +14,6 @@ import graft.operators.Round8bQueries
 class Round8bSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8bQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

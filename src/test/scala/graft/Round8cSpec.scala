@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.operators.Round8cQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8c operators (q208–q210): full imperative
   * recomputations (Lloyd-L2 PQ training, centroid drift, LSH recall)
@@ -83,8 +83,7 @@ class Round8cSpec extends AnyFunSuite {
       adc.zipWithIndex.map { case ((cid, d), i) =>
         (q, (i + 1).toLong, cid, d, if (ex3(cid)) 1L else 0L) }
     }
-    val df = Round8cQueries.queries
-      .collectFirst { case ("q208_pq_adc", fn, _) => fn }.get
+    val df = q("q208_pq_adc")
       .apply(spark, TestSpark.Sf)
     val got = df.as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(got == expected)
@@ -117,8 +116,7 @@ class Round8cSpec extends AnyFunSuite {
         1000000L * old.size / to, 1000000L * nw.size / tn,
         dot(diff, diff).toLong)
     }
-    val got = Round8cQueries.queries
-      .collectFirst { case ("q209_embedding_drift", fn, _) => fn }.get
+    val got = q("q209_embedding_drift")
       .apply(spark, TestSpark.Sf)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(got == expected)
@@ -153,8 +151,7 @@ class Round8cSpec extends AnyFunSuite {
       }
       (q, hits, rr)
     }
-    val got = Round8cQueries.queries
-      .collectFirst { case ("q210_ann_recall_cert", fn, _) => fn }.get
+    val got = q("q210_ann_recall_cert")
       .apply(spark, TestSpark.Sf)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == expected)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity}
-import graft.operators.Round8dQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8d operators (q211–q213): imperative
   * recomputations of the banding S-curve, the Poisson bootstrap, and the
@@ -14,9 +14,6 @@ import graft.operators.Round8dQueries
 class Round8dSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8dQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

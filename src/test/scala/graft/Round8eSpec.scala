@@ -5,7 +5,7 @@ import graft.PlanText.PlanTextOps
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8eQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8e operators (q214–q215): imperative
   * recomputations of the pruned-top-k certificate and the coverage
@@ -13,9 +13,6 @@ import graft.operators.Round8eQueries
 class Round8eSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8eQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8fQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8f operators (q216–q217): imperative
   * recomputations plus structural invariants (reconciliation closes,
@@ -11,9 +11,6 @@ import graft.operators.Round8fQueries
 class Round8fSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8fQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

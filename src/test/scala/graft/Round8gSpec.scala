@@ -3,16 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8gQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8g operators (q218–q219): imperative
   * recomputations of keyframe selection and the l-diversity ladder. */
 class Round8gSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8gQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   // ----- q218 keyframe selection ----------------------------------------
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
-import graft.operators.Round8hQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8h operators (q220–q222): imperative
   * recomputations of the variance decomposition, the negative-sampling
@@ -12,9 +12,6 @@ import graft.operators.Round8hQueries
 class Round8hSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8hQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

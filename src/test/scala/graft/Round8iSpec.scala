@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8iQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8i operators (q223–q224): imperative
   * recomputations, plus chi-square null calibration on a synthetic
@@ -12,9 +12,6 @@ import graft.operators.Round8iQueries
 class Round8iSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8iQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   // ----- q223 forecast backtest ------------------------------------------
 

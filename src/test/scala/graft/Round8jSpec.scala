@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8jQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8j operators (q225–q227). q225's pin is
   * the strongest kind: the sort-based window form checked against the
@@ -11,9 +11,6 @@ import graft.operators.Round8jQueries
 class Round8jSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8jQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8kQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8k operators (q228–q233): each query's
   * relational form checked against a direct imperative recomputation,
@@ -13,9 +13,6 @@ import graft.operators.Round8kQueries
 class Round8kSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8kQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8lQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8l operators (q234–q239): imperative
   * recomputation of each statistic plus its defining algebraic
@@ -13,9 +13,6 @@ import graft.operators.Round8lQueries
 class Round8lSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8lQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

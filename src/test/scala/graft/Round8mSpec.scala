@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8mQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8m operators (q240–q244): imperative
   * recomputation of each statistic plus the defining invariants
@@ -12,9 +12,6 @@ import graft.operators.Round8mQueries
 class Round8mSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8mQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8nQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8n operators (q245–q250): imperative
   * recomputation of each statistic plus the defining invariants
@@ -14,9 +14,6 @@ import graft.operators.Round8nQueries
 class Round8nSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8nQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -5,7 +5,7 @@ import graft.PlanText.PlanTextOps
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8oQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8o operators (q251–q255): imperative
   * recomputation of each result plus the defining invariants (BFS
@@ -16,9 +16,6 @@ import graft.operators.Round8oQueries
 class Round8oSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8oQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8qQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8q operators (q259–q262): imperative
   * recomputation of each result plus the defining invariants (the
@@ -14,9 +14,6 @@ import graft.operators.Round8qQueries
 class Round8qSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8qQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
-import graft.operators.Round8sQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8s operators (q267–q269): an independent
   * imperative MinHash+LSH pipeline recomputes the pair set, then each
@@ -15,9 +15,6 @@ import graft.operators.Round8sQueries
 class Round8sSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8sQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8tQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8t operators (q270–q274): imperative
   * recomputation of each result plus the defining invariants (seasonal
@@ -15,9 +15,6 @@ import graft.operators.Round8tQueries
 class Round8tSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8tQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

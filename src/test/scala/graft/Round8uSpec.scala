@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8uQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8u operators (q275–q278): imperative
   * recomputation of each result plus the defining invariants (cosine
@@ -13,9 +13,6 @@ import graft.operators.Round8uQueries
 class Round8uSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8uQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

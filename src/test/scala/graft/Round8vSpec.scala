@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8vQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8v operators (q279–q282): imperative
   * recomputation of each result plus the defining invariants (TwoNN
@@ -14,9 +14,6 @@ import graft.operators.Round8vQueries
 class Round8vSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8vQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8xQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8x operators (q287–q290): imperative
   * recomputation of each result plus the defining invariants (ACF
@@ -14,9 +14,6 @@ import graft.operators.Round8xQueries
 class Round8xSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8xQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8yQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8y operators (q291–q293): imperative
   * recomputation of each result plus the defining invariants (sorted
@@ -13,9 +13,6 @@ import graft.operators.Round8yQueries
 class Round8ySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8yQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round8zQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round8z operators (q294–q296): imperative
   * recomputation of each result plus the defining invariants
@@ -14,9 +14,6 @@ import graft.operators.Round8zQueries
 class Round8zSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round8zQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Round8zQueries, Round9Queries}
+import graft.operators.EvalMetricQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-1 operator (q321, the
   * Adamic–Adar hub-cap dial) and the dial's defining equality: a cap
@@ -14,9 +15,6 @@ import graft.operators.{Round8zQueries, Round9Queries}
 class Round9Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9Queries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   /** Imperative AA scorer with a center-degree cap; cap = Long.MaxValue
     * is the exact form (mirrors Round8zSpec's q296 recomputation).
@@ -61,16 +59,16 @@ class Round9Spec extends AnyFunSuite {
 
   test("q321 cap >= max-degree reproduces q296's exact result bit-for-bit") {
     val d = maxDeg
-    assert(d > Round9Queries.AaCap) // the dial genuinely bites at this SF
-    val exact = Round8zQueries.adamicAdar(spark, TestSpark.Sf, Long.MaxValue)
+    assert(d > EvalMetricQueries.AaCap) // the dial genuinely bites at this SF
+    val exact = EvalMetricQueries.adamicAdar(spark, TestSpark.Sf, Long.MaxValue)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    val atMax = Round8zQueries.adamicAdar(spark, TestSpark.Sf, d)
+    val atMax = EvalMetricQueries.adamicAdar(spark, TestSpark.Sf, d)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(atMax == exact)
   }
 
   test("q321 matches an imperative capped AA scorer; scores lower-bound exact") {
-    val (edges, expected) = aaScores(Round9Queries.AaCap)
+    val (edges, expected) = aaScores(EvalMetricQueries.AaCap)
     val got = q("q321_adamic_adar_capped")(spark, TestSpark.Sf)
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == expected)

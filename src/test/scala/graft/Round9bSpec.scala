@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9bQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-2 operators (q322–q324):
   * the column profile recomputed from collected rows, median/MAD
@@ -13,9 +13,6 @@ import graft.operators.Round9bQueries
 class Round9bSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9bQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9dQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-4 operators (q328–q330):
   * blocking quality replayed over planted clone pairs, the label-noise
@@ -13,9 +13,6 @@ import graft.operators.Round9dQueries
 class Round9dSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9dQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

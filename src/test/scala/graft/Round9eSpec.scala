@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9eQueries
+import graft.operators.StatTestQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-5 operators (q331–q332): the
   * sampled partition plan replayed rate-by-rate, and the log-rank
@@ -12,9 +13,6 @@ import graft.operators.Round9eQueries
 class Round9eSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9eQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
@@ -113,12 +111,12 @@ class Round9eSpec extends AnyFunSuite {
   test("q332 expected-events term stays exact past the int64 product boundary") {
     // 1000000·dd·na wraps int64 once dd·na > ~9.2e12 (cohorts ~3e6+);
     // the shipped term carries the product in DECIMAL(38,0). Pin the
-    // SHIPPED expression (the shared Round9eQueries.ExpEventsSql
+    // SHIPPED expression (the shared StatTestQueries.ExpEventsSql
     // constant — the exact string the query sums, so an edit to the
     // production SQL re-runs this pin) against a BigInt recompute.
     val (dd, na, n) = (4000000L, 3500000L, 7000000L)
     val got = Seq((dd, na, n)).toDF("dd", "na", "n")
-      .select(expr(operators.Round9eQueries.ExpEventsSql).as("e"))
+      .select(expr(operators.StatTestQueries.ExpEventsSql).as("e"))
       .head.getLong(0)
     val expected = (BigInt(1000000) * dd * na / n).toLong
     assert(got == expected)

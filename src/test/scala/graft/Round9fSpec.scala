@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9fQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-6 operators (q334–q336): the
   * lift table replayed from an imperative re-scoring, the FS weights
@@ -14,9 +14,6 @@ import graft.operators.Round9fQueries
 class Round9fSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9fQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

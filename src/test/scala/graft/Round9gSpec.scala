@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9gQueries
+import graft.TestSpark.q
 
 /** Behavior pin for the Round-9 batch-7 operator (q338):
   * trimmed/winsorized means recomputed from a full sort.
@@ -11,9 +11,6 @@ import graft.operators.Round9gQueries
 class Round9gSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9gQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9hQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-8 operators (q340–q341): PPR
   * replayed with an imperative 3-round push, and whitening statistics
@@ -13,9 +13,6 @@ import graft.operators.Round9hQueries
 class Round9hSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9hQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9iQueries
+import graft.TestSpark.q
 
 /** Behavior pin for the Round-9 batch-9 operator (q343): the KMV
   * audit replayed hash-by-hash against the exact sliding distinct.
@@ -11,9 +11,6 @@ import graft.operators.Round9iQueries
 class Round9iSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9iQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9jQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-10 operators (q346–q348): the
   * runs test replayed day-by-day against the exchangeability law, the
@@ -13,9 +13,6 @@ import graft.operators.Round9jQueries
 class Round9jSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def q(name: String) =
-    Round9jQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   test("q346 equals an imperative runs-test replay") {
     val daily = Tables.t(spark, TestSpark.Sf, "events")

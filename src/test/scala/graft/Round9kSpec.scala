@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Round9kQueries
+import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-11 operators (q349–q351): the
   * median CI replayed from a full sort, the half-life fit replayed
@@ -16,9 +16,6 @@ class Round9kSpec extends AnyFunSuite {
 
   private def normText(s: String): String =
     s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
-
-  private def q(name: String) =
-    Round9kQueries.queries.collectFirst { case (`name`, fn, _) => fn }.get
 
   test("q349 equals a full-sort order-statistic replay; CI brackets median") {
     val vs = Tables.t(spark, TestSpark.Sf, "orders")

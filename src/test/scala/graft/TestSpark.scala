@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole test run. */
 object TestSpark {
@@ -14,4 +14,7 @@ object TestSpark {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** A registered query body by name, for specs that pin one operator. */
+  def q(name: String): (SparkSession, String) => DataFrame = SparkEntry.queries(name)
 }

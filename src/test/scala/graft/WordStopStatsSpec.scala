@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{TextAnalysis => TA}
 import graft.functions.WordStopStats
-import graft.operators.Round11bQueries
+import graft.operators.StatTestQueries
 
 /** The fused WordStopStats kernel must be BIT-EQUAL to the regex chain
   * it replaces (normText → length-difference word count → \b-anchored
@@ -16,7 +16,7 @@ class WordStopStatsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val Stops = Round11bQueries.GopherStops
+  private val Stops = StatTestQueries.GopherStops
 
   private def regexChain(dfText: org.apache.spark.sql.DataFrame) = dfText
     .withColumn("nt", TA.normText($"text"))

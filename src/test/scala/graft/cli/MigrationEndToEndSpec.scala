@@ -7,16 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.config.{ConnConfig, GraftConfig}
-import graft.io.{Jdbc, StatementRegistry}
+import graft.io.{DerbyCopyTransportFactory, Jdbc, StatementRegistry}
 
 /** The full migration, end to end, against REAL JDBC endpoints on BOTH
   * sides (embedded Derby): an information_schema-shaped fixture database
   * feeds JdbcCatalogSource (real catalog queries, real page-probe SQL,
   * real page-predicate reads — both PK strategies), Migration.Runner
   * drives every phase, and rows land in a second Derby database through
-  * real DDL + batched INSERT statements. The offline substitute for a
-  * live MySQL→PG wire test (SURVEY §7.4 #8): everything except the two
-  * vendor wire protocols is the production code path. */
+  * real DDL and the production COPY write path (JdbcSink → PgCopyLoad),
+  * whose transport replays each partition's COPY text as INSERTs. The
+  * offline substitute for a live MySQL→PG wire test (SURVEY §7.4 #8):
+  * everything except the two vendor wire protocols is the production
+  * code path. */
 object MigrationEndToEndSpec {
   val srcUrl = "jdbc:derby:memory:graftsrc;create=true"
   val tgtUrl = "jdbc:derby:memory:grafttgt;create=true"
@@ -112,13 +114,13 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     } finally c.close()
   }
 
-  test("full phase chain over real JDBC: catalog → DDL → paged reads → batched INSERT → compare") {
+  test("full phase chain over real JDBC: catalog → DDL → paged reads → COPY → compare") {
     setupSource()
     exec(tgtUrl)("DROP TABLE \"people\"", "DROP TABLE \"orders\"", "DROP TABLE \"badtab\"")
 
     val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4)
     val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
-    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""))
+    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
     val flog = new FailureLog(graft.TempScratch.fresh("graft-e2e"))
     val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))
 
@@ -158,7 +160,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
   }
 
   test("a failing DDL through JdbcSink returns Failure and deregisters its statement") {
-    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""))
+    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
     val before = StatementRegistry.activeCount
     val r = sink.executeDdl("CREATE TABLE \"no_such_schema\".\"t\" (x INT) BOGUS")
     assert(r.isFailure)

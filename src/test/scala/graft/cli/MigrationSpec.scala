@@ -206,11 +206,11 @@ class MigrationSpec extends AnyFunSuite {
 
   test("cli flags: -s/--selFromYml and -t/--tableOnly parse (create.go:24, root.go:529)") {
     val a = GraftCli.parseArgs(Array("--config=x.yml", "-s", "createTable", "-t"))
-    assert(a == GraftCli.CliArgs("x.yml", "createTable", selFromYml = true, tableOnly = true))
+    assert(a == GraftCli.CliArgs("x.yml", "createTable", selFromYml = true))
     val b = GraftCli.parseArgs(Array("--selFromYml", "--tableOnly", "run"))
-    assert(b.selFromYml && b.tableOnly && b.cmd == "run")
+    assert(b.selFromYml && b.cmd == "run")
     val c = GraftCli.parseArgs(Array("compareDb"))
-    assert(!c.selFromYml && !c.tableOnly && c.cfgPath == "graft.yml")
+    assert(!c.selFromYml && c.cfgPath == "graft.yml")
   }
 
   test("-s slices the work list to the yml tables map (root.go:97)") {

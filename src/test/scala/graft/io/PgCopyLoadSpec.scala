@@ -70,15 +70,17 @@ class PgCopyLoadSpec extends AnyFunSuite {
   }
 
   test("flush batching: chunks respect flushBytes, nothing lost") {
-    val df = (1 to 200).map(i => (i.toLong, "v" * 50)).toDF("id", "pad").coalesce(1)
-    PgCopyLoad.copyInto(df, "t2", new FakeFactory("batch"), flushBytes = 512)
+    // ~505-byte rows, ~7.7 chunks' worth: forces several full chunks
+    val df = (1 to 1000).map(i => (i.toLong, "v" * 500)).toDF("id", "pad").coalesce(1)
+    PgCopyLoad.copyInto(df, "t2", new FakeFactory("batch"))
     val r = recorded("batch")
-    assert(r.chunks.size > 5, "small flushBytes must force multiple chunks")
+    assert(r.chunks.size > 5, "rows past 6 x FlushBytes must force multiple chunks")
     // each flushed chunk stops within one row of the threshold
-    assert(r.chunks.asScala.init.forall(c => c.length >= 512 && c.length <= 512 + 64))
+    val limit = PgCopyLoad.FlushBytes
+    assert(r.chunks.asScala.init.forall(c => c.length >= limit && c.length <= limit + 512))
     val lines = payload("batch").split("\n", -1).filter(_.nonEmpty)
-    assert(lines.length == 200)
-    assert(lines.map(_.takeWhile(_ != '\t').toLong).sorted.toSeq == (1L to 200L))
+    assert(lines.length == 1000)
+    assert(lines.map(_.takeWhile(_ != '\t').toLong).sorted.toSeq == (1L to 1000L))
   }
 
   test("rollback (not commit) on transport failure; job fails") {

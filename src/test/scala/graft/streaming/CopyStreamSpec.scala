@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.TestSpark
-import graft.io.{CopyTransport, CopyTransportFactory, JdbcBatchLedger, PgCopyLoad}
+import graft.io.{CopyTransport, CopyTransportFactory, DerbyCopyTransport, JdbcBatchLedger, PgCopyLoad}
 
 /** The continuous COPY sink, end to end against a REAL database (embedded
   * Derby): micro-batches load through a transactional transport, the
@@ -52,40 +52,18 @@ object CopyStreamSpec {
     } finally c.close()
   }
 
-  /** A real transactional load transport for Derby: buffers the COPY text,
-    * turns it into INSERTs at commit time, runs the sideSqls (ledger
-    * insert) on the same connection, then commits — one transaction, like
-    * the pgjdbc transport. Test-only: Derby has no COPY protocol. */
-  final class DerbyLoadTransport extends CopyTransport {
-    private var conn: java.sql.Connection = _
-    private var table: String = _
-    private val buf = new StringBuilder
-
-    override def begin(copySql: String): Unit = {
-      conn = DriverManager.getConnection(url)
-      conn.setAutoCommit(false)
-      table = copySql.split("\"")(1) // COPY "t" (...) FROM STDIN
-    }
+  /** The shared Derby COPY transport plus this spec's failure windows:
+    * a write carrying `failOnMarker` fails, and `failAtCommit` crashes
+    * after the data and ledger statements but before COMMIT. */
+  final class DerbyLoadTransport extends DerbyCopyTransport(url) {
     override def write(bytes: Array[Byte], off: Int, len: Int): Unit = {
-      val s = new String(bytes, off, len, StandardCharsets.UTF_8)
       val m = failOnMarker
-      if (m != null && s.contains(m))
+      if (m != null && new String(bytes, off, len, StandardCharsets.UTF_8).contains(m))
         throw new RuntimeException("injected write failure")
-      buf.append(s)
+      super.write(bytes, off, len)
     }
-    override def commit(sideSqls: Seq[String]): Unit = {
-      val ps = conn.prepareStatement(s"INSERT INTO $table VALUES (?, ?)")
-      try buf.toString.split("\n").filter(_.nonEmpty).foreach { line =>
-        val f = line.split("\t", -1)
-        ps.setLong(1, f(0).toLong); ps.setString(2, f(1)); ps.executeUpdate()
-      } finally ps.close()
-      val st = conn.createStatement()
-      try sideSqls.foreach(st.execute) finally st.close()
+    override protected def beforeCommit(): Unit =
       if (failAtCommit) throw new RuntimeException("injected crash before commit")
-      conn.commit()
-    }
-    override def rollback(): Unit = if (conn != null) conn.rollback()
-    override def close(): Unit = if (conn != null) conn.close()
   }
 
   final class DerbyLoadFactory extends CopyTransportFactory {
@@ -112,7 +90,7 @@ class CopyStreamSpec extends AnyFunSuite {
     val ledger = freshTables("T_STREAM", "LED_STREAM")
     val input = MemoryStream[(Long, String)]
     val ckpt = graft.TempScratch.fresh("graft-copystream").toString
-    val q = CopyStream.start(input.toDF().toDF("id", "v"), "T_STREAM",
+    val q = CopyStream.start(input.toDF().toDF("ID", "V"), "T_STREAM",
       new DerbyLoadFactory, ledger, ckpt)
     try {
       input.addData((1L, "a"), (2L, "b"))
@@ -131,7 +109,7 @@ class CopyStreamSpec extends AnyFunSuite {
     // skips the transport (single-partition, like the one-block batch)
     val before = count("T_STREAM")
     PgCopyLoad.copyIntoLedgered(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1),
+      Seq((1L, "a"), (2L, "b")).toDF("ID", "V").coalesce(1),
       "T_STREAM", new DerbyLoadFactory, ledger, batchId = 0L)
     assert(count("T_STREAM") == before, "replayed batch must re-load nothing")
   }
@@ -142,7 +120,7 @@ class CopyStreamSpec extends AnyFunSuite {
     // it fails AFTER the first commits
     val df = spark.sparkContext.parallelize(
       Seq((1L, "ok1"), (2L, "ok2"), (3L, "POISON"), (4L, "ok4")), 2)
-      .toDF("id", "v")
+      .toDF("ID", "V")
     failOnMarker = "POISON"
     intercept[Exception] {
       PgCopyLoad.copyIntoLedgered(df, "T_PART", new DerbyLoadFactory, ledger, batchId = 5L)
@@ -162,7 +140,7 @@ class CopyStreamSpec extends AnyFunSuite {
 
   test("ledger rides the data transaction: a crash at commit leaves neither") {
     val ledger = freshTables("T_ATOM", "LED_ATOM")
-    val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v").coalesce(1)
+    val df = Seq((1L, "x"), (2L, "y")).toDF("ID", "V").coalesce(1)
     // crash injected after data + ledger statements, before COMMIT: the
     // window ADVICE flagged (data committed, ledger not) cannot exist —
     // rollback takes both
