@@ -1,6 +1,8 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.{ResultSet, Types}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's pagination planner (cmd/root.go:335-386) re-thought for
@@ -9,11 +11,11 @@ import org.apache.spark.sql.functions._
   * The reference splits each table into `ceil(count/pageSize)` pages and
   * extracts each page with the "deferred join" trick
   * (`SELECT t.* FROM (SELECT pk ... LIMIT off,n) temp LEFT JOIN t ...`,
-  * cmd/root.go:382) to avoid deep-OFFSET scans. On Spark the equivalent
-  * plan unit is a JDBC partition predicate (`WHERE pk >= lo AND pk < hi`)
-  * — strictly better: each page is an index range scan, no OFFSET at all,
-  * and pages map 1:1 onto Spark tasks. LIMIT/OFFSET predicates remain the
-  * fallback for composite or non-numeric PKs.
+  * cmd/root.go:382), which still scans the whole offset on every page.
+  * Here every PK shape gets keyset pages instead: one pass over the key
+  * in key order yields every pageSize-th key, and page i is the key range
+  * between two of those boundaries — a WHERE predicate, no OFFSET at all,
+  * one Spark task per page.
   */
 object Pagination {
 
@@ -23,95 +25,78 @@ object Pagination {
     * kill, graft's in-flight queries. */
   val SqlTag = "/* gomysql2pgspark */"
 
-  /** Page math (cmd/root.go:373-379): ceil(count/pageSize) pages; a table
-    * always yields at least one page (root.go:381 uses `<=`). */
-  def pageCount(rows: Long, pageSize: Long): Long =
-    math.max(1L, (rows + pageSize - 1) / pageSize)
-
-  /** Range predicates for a numeric PK: one `lo <= pk < hi` slice per page,
-    * bounds spread evenly over [min, max]. These feed
-    * `spark.read.jdbc(url, table, predicates, props)` — one Spark task per
-    * page, parallelism bounded by the scheduler (the reference's
-    * maxParallel semaphore, cmd/root.go:106-117, for free).
-    */
-  def rangePredicates(pk: String, min: Long, max: Long, pages: Int): Array[String] = {
-    require(pages > 0)
-    val span = max - min + 1
-    (0 until pages).map { i =>
-      val lo = min + span * i / pages
-      val hi = min + span * (i + 1) / pages
-      // the kill marker rides every page predicate too (root.go:394):
-      // without it the PROCESSLIST sweep cannot identify numeric-path
-      // page scans, only deferred-join ones
-      if (i == pages - 1) s"$SqlTag $pk >= $lo AND $pk <= $max"
-      else s"$SqlTag $pk >= $lo AND $pk < $hi"
-    }.toArray
-  }
-
-  /** Source SQL dialect for generated page/probe SQL: the source the
-    * reference reads speaks MySQL (`LIMIT off,n`, backtick identifiers);
-    * everything else gets the ANSI forms (`OFFSET … FETCH`, double-quoted
-    * identifiers), which Derby/PG/Oracle 12c+ all accept — what makes the
+  /** Source SQL dialect of generated probe and page SQL: identifier quotes
+    * and key literals. The source the reference reads speaks MySQL
+    * (backtick identifiers, `\` escapes in strings); everything else gets
+    * the ANSI forms, which Derby/PG/Oracle all accept — what makes the
     * page planner testable against an embedded database. */
-  sealed trait LimitDialect {
-    def clause(offset: Long, n: Long): String
-    def quote(id: String): String
+  sealed abstract class SqlDialect(q: String) {
+    /** Quoted identifier. Names come from the source catalog, so an
+      * embedded quote character is doubled. */
+    def quote(id: String): String = q + id.replace(q, q + q) + q
+
+    /** Quoted string literal. */
+    def string(s: String): String = "'" + s.replace("'", "''") + "'"
+
+    /** How a key column of JDBC type `sqlType` is read from the boundary
+      * probe and written back as SQL literal text; None when the type has
+      * no literal form here. Dates and timestamps use the JDBC escapes,
+      * which both drivers translate. */
+    def literal(sqlType: Int): Option[(ResultSet, Int) => String] = sqlType match {
+      case Types.TINYINT | Types.SMALLINT | Types.INTEGER | Types.BIGINT |
+           Types.DECIMAL | Types.NUMERIC =>
+        Some((rs, i) => rs.getBigDecimal(i).toPlainString)
+      case Types.CHAR | Types.VARCHAR | Types.LONGVARCHAR |
+           Types.NCHAR | Types.NVARCHAR | Types.LONGNVARCHAR =>
+        Some((rs, i) => string(rs.getString(i)))
+      case Types.DATE => Some((rs, i) => s"{d '${rs.getDate(i)}'}")
+      case Types.TIMESTAMP => Some((rs, i) => s"{ts '${rs.getTimestamp(i)}'}")
+      case _ => None
+    }
   }
-  case object MySqlLimit extends LimitDialect {
-    override def clause(offset: Long, n: Long): String = s"LIMIT $offset,$n"
-    override def quote(id: String): String = s"`$id`"
+  case object MySqlDialect extends SqlDialect("`") {
+    override def string(s: String): String = super.string(s.replace("\\", "\\\\"))
   }
-  case object AnsiLimit extends LimitDialect {
-    override def clause(offset: Long, n: Long): String =
-      s"OFFSET $offset ROWS FETCH NEXT $n ROWS ONLY"
-    override def quote(id: String): String = s""""$id""""
-  }
+  case object AnsiDialect extends SqlDialect("\"")
 
   /** Dialect inferred from a JDBC url. */
-  def dialectFor(url: String): LimitDialect =
-    if (url.startsWith("jdbc:mysql")) MySqlLimit else AnsiLimit
+  def dialectFor(url: String): SqlDialect =
+    if (url.startsWith("jdbc:mysql")) MySqlDialect else AnsiDialect
 
-  /** LIMIT/OFFSET fallback predicates in the reference's exact shape
-    * (cmd/root.go:381-384), for composite / non-numeric PKs where range
-    * slicing does not apply. Returned as full page SQLs. */
-  def deferredJoinPageSql(table: String, pkCols: Seq[String], pageSize: Long,
-                          totalRows: Long,
-                          dialect: LimitDialect = MySqlLimit): Array[String] = {
-    val keyList = pkCols.mkString(",")
-    val onCond = pkCols.map(c => s"temp.$c = t.$c").mkString(" and ")
-    (0L until pageCount(totalRows, pageSize)).map { p =>
-      s"SELECT $SqlTag t.* FROM (SELECT $keyList FROM $table ORDER BY $keyList " +
-        s"${dialect.clause(p * pageSize, pageSize)}) temp LEFT JOIN $table t ON $onCond"
-    }.toArray
+  /** The boundary probe: every key of `table` in key order. */
+  def keyProbeSql(table: String, keyCols: Seq[String]): String = {
+    val keys = keyCols.mkString(", ")
+    s"SELECT $SqlTag $keys FROM $table ORDER BY $keys"
   }
 
-  /** The same page list as WHERE *predicates* for a single
-    * `spark.read.jdbc(url, table, predicates, props)` call — one scan
-    * relation with one JDBC partition per page, so the plan stays FLAT at
-    * any page count. (The alternative — one DataFrame per page SQL
-    * unioned together — builds an N-deep union whose analysis cost grows
-    * superlinearly; at 10k pages for a 1B-row composite-PK table the
-    * driver chokes before the first byte moves.)
-    *
-    * Each predicate is the deferred join turned inside out: an
-    * EXISTS-correlated membership test against the page's key slice.
-    * Inner key columns are aliased with the collision-proof gm2ps_k
-    * prefix (a bare k0..kn would CAPTURE the correlation if a PK column
-    * were itself named k0, turning the page predicate tautological) so
-    * the unqualified side binds to the OUTER scanned table — the source
-    * database materializes the tiny key slice once per page query and
-    * probes it, the same access path as the reference's LEFT JOIN page
-    * SQL (cmd/root.go:382) without needing to rewrite the FROM clause
-    * Spark owns. */
-  def deferredJoinPredicates(table: String, pkCols: Seq[String], pageSize: Long,
-                             totalRows: Long,
-                             dialect: LimitDialect = MySqlLimit): Array[String] = {
-    val keyList = pkCols.mkString(",")
-    val aliased = pkCols.zipWithIndex.map { case (c, i) => s"$c AS gm2ps_k$i" }.mkString(",")
-    val corr = pkCols.zipWithIndex.map { case (c, i) => s"temp.gm2ps_k$i = $c" }.mkString(" AND ")
-    (0L until pageCount(totalRows, pageSize)).map { p =>
-      s"$SqlTag EXISTS (SELECT 1 FROM (SELECT $aliased FROM $table ORDER BY $keyList " +
-        s"${dialect.clause(p * pageSize, pageSize)}) temp WHERE $corr)"
+  /** Keyset page predicates for `spark.read.jdbc(url, table, predicates,
+    * props)` — one scan relation with one JDBC partition per page, so the
+    * plan stays flat at any page count. `keyCols` are quoted key columns;
+    * `bounds` are the rendered literals of the keys that open pages 1..m-1
+    * (non-empty). With GE(B) the lexicographic "key sorts at or after B",
+    * page 0 is NOT GE(B1), page i is GE(Bi) AND NOT GE(Bi+1), and the last
+    * page is GE(Bm-1). Key columns are NOT NULL and each boundary's text is
+    * reused verbatim on both sides, so by boolean logic alone the pages
+    * are disjoint and cover the table, whatever the collation; only their
+    * balance depends on the source comparing as it sorted.
+    */
+  def keysetPredicates(keyCols: Seq[String], bounds: Seq[Seq[String]]): Array[String] = {
+    require(bounds.nonEmpty)
+    val k = keyCols.toIndexedSeq
+    def ge(b: Seq[String], i: Int): String =
+      if (i == k.size - 1) s"${k(i)} >= ${b(i)}"
+      else s"${k(i)} > ${b(i)} OR (${k(i)} = ${b(i)} AND (${ge(b, i + 1)}))"
+    // the leading-column bound on each side is implied by the lexicographic
+    // test; it is spelled out so that a source whose optimizer cannot
+    // range-scan an OR still seeks each page through the PK index
+    def from(b: Seq[String]): String =
+      if (k.size == 1) ge(b, 0) else s"${k(0)} >= ${b(0)} AND (${ge(b, 0)})"
+    def before(b: Seq[String]): String =
+      if (k.size == 1) s"NOT (${ge(b, 0)})" else s"${k(0)} <= ${b(0)} AND NOT (${ge(b, 0)})"
+    val lows = None +: bounds.map(Some(_))
+    val highs = bounds.map(Some(_)) :+ None
+    lows.zip(highs).map { case (lo, hi) =>
+      s"$SqlTag ${(lo.map(from) ++ hi.map(before)).mkString(" AND ")}"
     }.toArray
   }
 
@@ -131,7 +116,7 @@ object Pagination {
     // (no global sort), then row_number to drop the first `offset`. The
     // single-partition window is over ≤ offset+n *key-only* rows, which the
     // LIMIT/OFFSET contract bounds by construction; the scale path for deep
-    // pages is rangePredicates, not this operator.
+    // pages is keysetPredicates, not this operator.
     val rn = row_number().over(Window.orderBy(keys: _*))
     val slice = df.select(keys: _*)
       .orderBy(keys: _*)

@@ -81,8 +81,7 @@ object GraftCli {
     {
       val source = new JdbcCatalogSource(spark, cfg)
       val dest = cfg.dest
-      val sink = new JdbcSink(spark,
-        Jdbc.ConnInfo(dest.pgJdbcUrl, dest.username, dest.password),
+      val sink = new JdbcSink(Jdbc.ConnInfo(dest.pgJdbcUrl, dest.username, dest.password),
         new PgJdbcCopyTransportFactory(dest.pgJdbcUrl, dest.username, dest.password))
       // per-run timestamped artifact dir (CreateDateDir, app.go:219-236)
       val flog = new FailureLog(Paths.get(""))

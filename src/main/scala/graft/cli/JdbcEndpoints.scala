@@ -18,7 +18,7 @@ import graft.types.ColumnMeta
   * target sink.
   *
   * No MySQL/PG is reachable in this build environment; the catalog
-  * queries, page probes, every page-read strategy and the sink's COPY
+  * queries, the key probe, keyset page reads and the sink's COPY
   * path (through a Derby COPY transport) run end to end against
   * embedded Derby in MigrationEndToEndSpec
   * (plus fixture-backed CatalogSource/MigrationSink specs) — only the
@@ -59,20 +59,11 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
           r.get(7).toString.toInt)
       }.toSeq
 
-  /** MySQL types a range-predicate page split is sound for. */
-  private val NumericPkTypes =
-    Set("tinyint", "smallint", "mediumint", "int", "integer", "bigint")
-
-  /** S1 (root.go:389-516): PK-partitioned page read. Range predicates
-    * need a verified numeric PK type; everything else takes the
-    * reference's deferred-join page SQLs (prepareSqlStr, root.go:335-386).
-    * Jdbc.readTable probes the bounds and plans the pages. */
-  override def tableData(table: String): DataFrame = {
-    val pk = primaryKeyCols(table)
-    val pkNumeric = pk.size == 1 && columns(table).exists(c =>
-      c.columnName.equalsIgnoreCase(pk.head) && NumericPkTypes(c.dataType))
-    Jdbc.readTable(spark, conn, table, pk, pkNumeric, cfg.pageSize)
-  }
+  /** S1 (root.go:389-516): PK-partitioned page read — keyset pages in
+    * place of the reference's deferred-join page SQLs
+    * (prepareSqlStr, root.go:335-386), planned by Jdbc.readTable. */
+  override def tableData(table: String): DataFrame =
+    Jdbc.readTable(spark, conn, table, primaryKeyCols(table), cfg.pageSize)
 
   /** Custom-SQL extraction (root.go:97-98, 305-309): each configured SQL
     * runs as its own dbtable subquery — its own JDBC partition unit —
@@ -141,7 +132,7 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
   * truncates first (root.go:297), so a re-run reloads, then takes the
   * reference's COPY bulk load (`pq.CopyIn`, root.go:408-511) through
   * `copy`, one transport per partition. */
-final class JdbcSink(spark: SparkSession, conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
+final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
     extends Migration.MigrationSink {
 
   override def executeDdl(sql: String): Try[Unit] = Try(Jdbc.executeDdl(conn, sql))
@@ -155,8 +146,13 @@ final class JdbcSink(spark: SparkSession, conn: Jdbc.ConnInfo, copy: CopyTranspo
     PgCopyLoad.copyInto(df, table, copy)
   }
 
+  /** One `select count(*)` statement on the target, as compareDb counts
+    * (cmd/compare.go:102-132). */
   override def rowCount(table: String): Option[Long] = Try {
-    spark.read.jdbc(conn.url, s"""(select count(*) c from "$table") t""", conn.props)
-      .collect().head.get(0).toString.toLong
+    Jdbc.withStatement(conn) { st =>
+      val rs = st.executeQuery(s"""select count(*) from "$table"""")
+      rs.next()
+      rs.getLong(1)
+    }
   }.toOption
 }

@@ -7,42 +7,24 @@ class PaginationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("pageCount math (root.go:373-381): ceil, and ≥1 page always") {
-    assert(Pagination.pageCount(0, 100) == 1)
-    assert(Pagination.pageCount(1, 100) == 1)
-    assert(Pagination.pageCount(100, 100) == 1)
-    assert(Pagination.pageCount(101, 100) == 2)
-    assert(Pagination.pageCount(250, 100) == 3)
+  test("identifiers and string literals escape their own quote characters") {
+    import Pagination.{AnsiDialect, MySqlDialect}
+    assert(AnsiDialect.quote("Mixed\"T") == "\"Mixed\"\"T\"")
+    assert(AnsiDialect.quote("a`b") == "\"a`b\"")
+    assert(MySqlDialect.quote("or`der") == "`or``der`")
+    assert(AnsiDialect.string("it's a \\") == "'it''s a \\'")
+    assert(MySqlDialect.string("it's a \\") == "'it''s a \\\\'")
+    assert(Pagination.dialectFor("jdbc:mysql://h/db") == MySqlDialect)
+    assert(Pagination.dialectFor("jdbc:derby:memory:x") == AnsiDialect)
   }
 
-  test("rangePredicates cover [min,max] with no gaps or overlaps, tagged") {
-    val tagged = Pagination.rangePredicates("id", 0, 999, 4)
-    // every page predicate carries the kill marker (root.go:394)
-    assert(tagged.forall(_.startsWith(Pagination.SqlTag)))
-    val preds = tagged.map(_.stripPrefix(Pagination.SqlTag).trim)
-    assert(preds.length == 4)
-    assert(preds.head.startsWith("id >= 0"))
-    assert(preds.last == "id >= 750 AND id <= 999")
-    // every value 0..999 matched by exactly one predicate
-    val ranges = preds.map { p =>
-      val nums = "\\d+".r.findAllIn(p).map(_.toLong).toSeq
-      (nums(0), nums(1))
-    }
-    (0L to 999L).foreach { v =>
-      val hits = ranges.zipWithIndex.count { case ((lo, hi), i) =>
-        v >= lo && (if (i == ranges.length - 1) v <= hi else v < hi)
-      }
-      assert(hits == 1, s"value $v matched $hits predicates")
-    }
-  }
-
-  test("deferredJoinPageSql emits the reference's page SQL shape (root.go:382)") {
-    val sqls = Pagination.deferredJoinPageSql("t", Seq("a", "b"), 100, 250)
-    assert(sqls.length == 3)
-    assert(sqls(1) == s"SELECT ${Pagination.SqlTag} t.* FROM (SELECT a,b FROM t ORDER BY a,b " +
-      "LIMIT 100,100) temp LEFT JOIN t t ON temp.a = t.a and temp.b = t.b")
-    // every page SQL carries the kill-marker tag (root.go:394)
-    assert(sqls.forall(_.contains("gomysql2pgspark")))
+  test("keyset predicates: tagged, one per page, leading-column bounds on composite keys") {
+    val tag = Pagination.SqlTag
+    assert(Pagination.keysetPredicates(Seq("id"), Seq(Seq("10"), Seq("20"))).toSeq == Seq(
+      s"$tag NOT (id >= 10)", s"$tag id >= 10 AND NOT (id >= 20)", s"$tag id >= 20"))
+    val ge = "a > 1 OR (a = 1 AND (b > 'x' OR (b = 'x' AND (c >= 2))))"
+    assert(Pagination.keysetPredicates(Seq("a", "b", "c"), Seq(Seq("1", "'x'", "2"))).toSeq == Seq(
+      s"$tag a <= 1 AND NOT ($ge)", s"$tag a >= 1 AND ($ge)"))
   }
 
   test("deferredJoinPage returns exactly rows [offset, offset+n) in PK order") {

@@ -86,8 +86,8 @@ class CancellationSpec extends AnyFunSuite {
 
   test("generated SQL carries the kill-marker tag (root.go:373,394)") {
     assert(Pagination.SqlTag.contains(Cancellation.GroupId))
-    assert(Pagination
-      .deferredJoinPageSql("t", Seq("id"), 10, 25)
-      .forall(_.startsWith(s"SELECT ${Pagination.SqlTag} ")))
+    assert(Pagination.keyProbeSql("t", Seq("id")).startsWith(s"SELECT ${Pagination.SqlTag} "))
+    assert(Pagination.keysetPredicates(Seq("id"), Seq(Seq("10"), Seq("20")))
+      .forall(_.startsWith(s"${Pagination.SqlTag} ")))
   }
 }

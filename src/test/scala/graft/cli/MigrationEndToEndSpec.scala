@@ -11,8 +11,8 @@ import graft.io.{DerbyCopyTransportFactory, Jdbc, StatementRegistry}
 
 /** The full migration, end to end, against REAL JDBC endpoints on BOTH
   * sides (embedded Derby): an information_schema-shaped fixture database
-  * feeds JdbcCatalogSource (real catalog queries, real page-probe SQL,
-  * real page-predicate reads — both PK strategies), Migration.Runner
+  * feeds JdbcCatalogSource (real catalog queries, the real key probe,
+  * real keyset page reads), Migration.Runner
   * drives every phase, and rows land in a second Derby database through
   * real DDL and the production COPY write path (JdbcSink → PgCopyLoad),
   * whose transport replays each partition's COPY text as INSERTs. The
@@ -120,7 +120,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
 
     val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4)
     val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
-    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
+    val sink = new JdbcSink(Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
     val flog = new FailureLog(graft.TempScratch.fresh("graft-e2e"))
     val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))
 
@@ -160,7 +160,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
   }
 
   test("a failing DDL through JdbcSink returns Failure and deregisters its statement") {
-    val sink = new JdbcSink(spark, Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
+    val sink = new JdbcSink(Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
     val before = StatementRegistry.activeCount
     val r = sink.executeDdl("CREATE TABLE \"no_such_schema\".\"t\" (x INT) BOGUS")
     assert(r.isFailure)

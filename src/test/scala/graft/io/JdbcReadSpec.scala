@@ -1,19 +1,20 @@
 package graft.io
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, PreparedStatement, Timestamp}
+import java.time.{LocalDate, LocalDateTime}
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.catalog.Pagination
 
 /** The page-parallel JDBC read (S1) against a REAL database — embedded
   * Derby, the JDBC engine Spark ships with — instead of fakes: proves the
-  * composite-PK path plans ONE flat scan relation with one partition per
-  * page at 100+ pages (the shape that replaced the union-of-DataFrames
-  * fallback), and that every page strategy (numeric range, composite and
-  * VARCHAR deferred join, no-PK full scan) returns exactly the table's
-  * rows. */
+  * keyset page plan is ONE flat scan relation with one partition per
+  * page at 100+ pages, that every PK shape (numeric, composite, VARCHAR,
+  * DECIMAL, DATE, TIMESTAMP, quoted mixed-case names, no PK, empty)
+  * returns exactly the table's rows, and that every page but the last
+  * holds exactly pageSize rows. */
 object DerbyTestDb {
   val url = "jdbc:derby:memory:graftread;create=true"
   def connection(): java.sql.Connection = DriverManager.getConnection(url)
@@ -54,8 +55,7 @@ class JdbcReadSpec extends AnyFunSuite {
       ps.executeBatch()
     } finally c.close()
 
-    val df = Jdbc.readTable(spark, conn, "COMPO", Seq("A", "B"),
-      pkIsNumeric = false, pageSize = 2)
+    val df = Jdbc.readTable(spark, conn, "COMPO", Seq("A", "B"), pageSize = 2)
     // one Spark task per page...
     assert(df.rdd.getNumPartitions == 120)
     // ...but ONE leaf scan relation: the plan is flat at any page count
@@ -64,13 +64,7 @@ class JdbcReadSpec extends AnyFunSuite {
     val got = rows(df)
     assert(got.size == 240 && got.distinct.size == 240)
     assert(got == rows(spark.read.jdbc(conn.url, "COMPO", conn.props)))
-
-    // row-identical to the union-of-page-SQLs form this shape replaced
-    val union = Pagination
-      .deferredJoinPageSql("COMPO", Seq("A", "B"), 2, 240, Pagination.AnsiLimit)
-      .map(sql => spark.read.jdbc(conn.url, s"($sql) page", conn.props))
-      .reduce(_ unionByName _)
-    assert(got == rows(union))
+    assert(pageSizes(df).forall(_ == 2))
   }
 
   test("numeric-PK read: range predicates give one partition per page over a real scan") {
@@ -86,8 +80,7 @@ class JdbcReadSpec extends AnyFunSuite {
       ps.executeBatch()
     } finally c.close()
 
-    val df = Jdbc.readTable(spark, conn, "SOLO", Seq("ID"),
-      pkIsNumeric = true, pageSize = 25)
+    val df = Jdbc.readTable(spark, conn, "SOLO", Seq("ID"), pageSize = 25)
     assert(df.rdd.getNumPartitions == 4)
     assert(rows(df) == rows(spark.read.jdbc(conn.url, "SOLO", conn.props)))
   }
@@ -105,7 +98,7 @@ class JdbcReadSpec extends AnyFunSuite {
       ps.executeBatch()
     } finally c.close()
 
-    val df = Jdbc.readTable(spark, conn, "NOPK", Nil, pkIsNumeric = false, pageSize = 4)
+    val df = Jdbc.readTable(spark, conn, "NOPK", Nil, pageSize = 4)
     assert(df.rdd.getNumPartitions == 1)
     val got = rows(df)
     assert(got.size == 30)
@@ -125,7 +118,7 @@ class JdbcReadSpec extends AnyFunSuite {
       ps.executeBatch()
     } finally c.close()
 
-    val df = Jdbc.readTable(spark, conn, "VPK", Seq("K"), pkIsNumeric = false, pageSize = 5)
+    val df = Jdbc.readTable(spark, conn, "VPK", Seq("K"), pageSize = 5)
     assert(df.rdd.getNumPartitions == 5) // ceil(23 / 5)
     val got = df.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
       .sortBy(_._1).toSeq
@@ -134,18 +127,99 @@ class JdbcReadSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(_._1).toSeq)
   }
 
-  test("deferredJoinPredicates carry the kill tag and the dialect's limit clause") {
-    val preds = Pagination.deferredJoinPredicates("t", Seq("a", "b"), 100, 250)
-    assert(preds.length == 3)
-    assert(preds.forall(_.contains("gomysql2pgspark")))
-    assert(preds(1).contains("LIMIT 100,100"))
-    val ansi = Pagination.deferredJoinPredicates("t", Seq("a"), 100, 250, Pagination.AnsiLimit)
-    assert(ansi(2).contains("OFFSET 200 ROWS FETCH NEXT 100 ROWS ONLY"))
-    // a PK column literally named k0 must not be captured by the inner
-    // alias (a bare `k0 AS k0` correlation would be tautological)
-    val capture = Pagination.deferredJoinPredicates("t", Seq("k0"), 100, 100)
-    assert(capture.head.contains("temp.gm2ps_k0 = k0"))
-    assert(Pagination.dialectFor("jdbc:mysql://h/db") == Pagination.MySqlLimit)
-    assert(Pagination.dialectFor("jdbc:derby:memory:x") == Pagination.AnsiLimit)
+  test("mixed-case table and PK column names are quoted in the probe, pages and relation") {
+    DerbyTestDb.exec(
+      "DROP TABLE \"MixedT\"",
+      "CREATE TABLE \"MixedT\" (\"Id\" INT NOT NULL PRIMARY KEY, \"Val\" VARCHAR(16))")
+    insert("INSERT INTO \"MixedT\" VALUES (?, ?)", 17) { (ps, i) =>
+      ps.setInt(1, i * 3); ps.setString(2, s"v$i")
+    }
+    val df = Jdbc.readTable(spark, conn, "MixedT", Seq("Id"), pageSize = 4)
+    assertPages(df, rows = 17, pageSize = 4)
+    assert(sorted(df) == sorted(spark.read.jdbc(conn.url, "\"MixedT\"", conn.props)))
+  }
+
+  // (PK type, binds row i's key, rows, pageSize). The row counts take in
+  // an empty table, an exact multiple of pageSize and one more than one.
+  private val keyTypes: Seq[(String, (PreparedStatement, Int) => Unit, Int, Int)] = Seq(
+    ("DECIMAL(12,2)",
+      (ps, i) => ps.setBigDecimal(1, java.math.BigDecimal.valueOf(i * 731L - 5000, 2)), 31, 10),
+    ("DATE",
+      (ps, i) => ps.setDate(1, java.sql.Date.valueOf(LocalDate.of(1999, 12, 20).plusDays(i * 3L))),
+      40, 8),
+    ("TIMESTAMP",
+      (ps, i) => ps.setTimestamp(1, Timestamp.valueOf(
+        LocalDateTime.of(2024, 2, 28, 23, 0).plusSeconds(i * 3601L).plusNanos(i * 123457000L))),
+      23, 5),
+    // gappy: steps of 1, then jumps of up to ~10^12
+    ("BIGINT",
+      (ps, i) => ps.setLong(1, 9000000000L + i.toLong * i * i * i * i * i + i), 75, 10),
+    ("INT", (ps, i) => ps.setInt(1, i), 0, 5))
+
+  keyTypes.foreach { case (sqlType, bind, n, pageSize) =>
+    test(s"$sqlType PK, $n rows, pageSize $pageSize: exact keyset pages, row-identical") {
+      DerbyTestDb.exec("DROP TABLE KT",
+        s"CREATE TABLE KT (K $sqlType NOT NULL PRIMARY KEY, V VARCHAR(16))")
+      insert("INSERT INTO KT VALUES (?, ?)", n) { (ps, i) => bind(ps, i); ps.setString(2, s"v$i") }
+      val df = Jdbc.readTable(spark, conn, "KT", Seq("K"), pageSize)
+      assertPages(df, n, pageSize)
+      assert(sorted(df) == sorted(spark.read.jdbc(conn.url, "KT", conn.props)))
+    }
+  }
+
+  test("property: keyset pages over (INT, VARCHAR) keys are disjoint, cover, hold pageSize rows") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Test.{check, Parameters}
+    // repeated leading values; strings with quotes, backslashes, mixed case
+    val part = Gen.oneOf("a", "A", "b", "Z", "'", "\\", "''", "\\'", "é", "0")
+    val str = Gen.choose(0, 3).flatMap(Gen.listOfN(_, part)).map(_.mkString)
+    val key = Gen.zip(Gen.choose(-2, 6), str)
+    val keys = Gen.choose(0, 300).flatMap(Gen.listOfN(_, key)).map(_.distinct)
+    val prop = Prop.forAll(keys, Gen.choose(1, 64)) { (ks, pageSize) =>
+      DerbyTestDb.exec("DROP TABLE KS",
+        "CREATE TABLE KS (A INT NOT NULL, B VARCHAR(16) NOT NULL, PRIMARY KEY (A, B))")
+      insert("INSERT INTO KS VALUES (?, ?)", ks.size) { (ps, i) =>
+        ps.setInt(1, ks(i)._1); ps.setString(2, ks(i)._2)
+      }
+      val pages = Jdbc.readTable(spark, conn, "KS", Seq("A", "B"), pageSize).rdd
+        .mapPartitions(it => Iterator(it.map(r => (r.getInt(0), r.getString(1))).toVector))
+        .collect().toSeq
+      val all = pages.flatten
+      val m = math.max(1, (ks.size + pageSize - 1) / pageSize)
+      all.size == ks.size && all.toSet == ks.toSet &&
+        pages.size == m && pages.init.forall(_.size == pageSize)
+    }
+    val res = check(Parameters.default.withMinSuccessfulTests(30).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("streamed reads: cursor fetch and fetchsize on MySQL, Derby options unchanged") {
+    val mysql = Jdbc.ConnInfo("jdbc:mysql://h:3306/db", "u", "p").streamProps
+    assert(mysql.getProperty("useCursorFetch") == "true")
+    assert(mysql.getProperty("fetchsize") == Jdbc.FetchRows.toString)
+    assert(conn.streamProps == conn.props)
+  }
+
+  private def insert(sql: String, n: Int)(bind: (PreparedStatement, Int) => Unit): Unit = {
+    val c = DerbyTestDb.connection()
+    try {
+      val ps = c.prepareStatement(sql)
+      (0 until n).foreach { i => bind(ps, i); ps.addBatch() }
+      if (n > 0) ps.executeBatch()
+    } finally c.close()
+  }
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Rows in each partition, in partition order. */
+  private def pageSizes(df: DataFrame): Seq[Int] =
+    df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+
+  /** ceil(rows/pageSize) pages (at least one), each full but the last. */
+  private def assertPages(df: DataFrame, rows: Int, pageSize: Int): Unit = {
+    val sizes = pageSizes(df)
+    val m = math.max(1, (rows + pageSize - 1) / pageSize)
+    assert(sizes.size == m)
+    assert(sizes.init.forall(_ == pageSize) && sizes.last == rows - pageSize * (m - 1))
   }
 }
