@@ -8,18 +8,19 @@ For each workload in BENCHMARK.json and each pair i (seed i + 1), runs
     python3 migbench/run.py --workload W --seed S --seconds <run_seconds> --trace 0
 
 once in each tree, one run at a time; the parent goes first in even pairs
-and the change first in odd ones. Every run is printed as it finishes.
-Then, per workload and end-to-end metric, it prints the two medians, the
-parent's quartile spread against the metric's bound, the change's
-relative gain (Δ, positive is better), its share of pair wins (ties count
-for neither side) and one verdict:
+and the change first in odd ones. Every run is printed as it finishes,
+with its exit code. Then, per workload and end-to-end metric, it prints
+the two medians, the change's relative gain (Δ, positive is better), the
+parent's and the change's quartile spreads (each side's interquartile
+range over the parent's median) against the metric's bound, the change's
+share of pair wins (ties count for neither side) and one verdict:
 
     worse       the change's median is worse than the parent's by more
                 than the bound
     better      the change wins at least 9 of 10 pairs and its median
                 differs by more than the parent's quartile spread
-    unresolved  the parent's own spread is wider than the bound, and not
-                every change run beats every parent run
+    unresolved  the parent's or the change's spread is wider than the
+                bound, and not every change run beats every parent run
     unchanged   otherwise
 
 BENCHMARK.json is read from CHANGE_TREE; neither tree is modified apart
@@ -62,7 +63,9 @@ def verdict(metric, parent, change, pairs):
     bound = metric["bound"]
     pm, cm = statistics.median(parent), statistics.median(change)
     q1, q3 = quartiles(parent)
+    c1, c3 = quartiles(change)
     spread = (q3 - q1) / abs(pm) if pm else 0.0
+    change_spread = (c3 - c1) / abs(pm) if pm else 0.0
     worse_by = ((cm - pm) if lower else (pm - cm)) / abs(pm) if pm else 0.0
     wins = sum(1 for p, c in pairs if (c < p if lower else c > p))
     share = wins / len(pairs) if pairs else 0.0
@@ -71,12 +74,13 @@ def verdict(metric, parent, change, pairs):
         word = "worse"
     elif share >= 0.9 and -worse_by * abs(pm) > (q3 - q1):
         word = "better"
-    elif spread > bound and not all_better:
+    elif max(spread, change_spread) > bound and not all_better:
         word = "unresolved"
     else:
         word = "unchanged"
     return dict(parent_median=pm, change_median=cm, change_vs_parent=-worse_by,
-                parent_iqr=q3 - q1, parent_spread=spread, bound=bound,
+                parent_iqr=q3 - q1, parent_spread=spread, change_iqr=c3 - c1,
+                change_spread=change_spread, bound=bound,
                 win_share=share, verdict=word)
 
 
@@ -103,21 +107,22 @@ def main():
                 runs.append(r)
                 got = {k: v["value"] for k, v in r["metrics"].items()}
                 vals = " ".join(f"{m['name']}={got.get(m['name'], float('nan')):.4g}" for m in metrics)
-                print(f"run {w} pair={i} seed={i + 1} {side:6s} correct={r['correct']} "
-                      f"failed={r['failed']} {vals}", flush=True)
+                print(f"run {w} pair={i} seed={i + 1} {side:6s} rc={r['rc']} "
+                      f"correct={r['correct']} failed={r['failed']} {vals}", flush=True)
                 if r.get("error"):
                     print("  " + "\n  ".join(r["error"]), flush=True)
 
     summary = []
     print()
     print(f"{'workload':12s} {'metric':16s} {'parent':>10s} {'change':>10s} {'Δ':>7s} "
-          f"{'spread':>7s} {'bound':>6s} {'wins':>5s}  verdict")
+          f"{'p.spread':>8s} {'c.spread':>8s} {'bound':>6s} {'wins':>5s}  verdict")
     for w in (x["name"] for x in bench["workloads"]):
         ok = [r for r in runs if r["workload"] == w and r["correct"]]
         for side in ("parent", "change"):
             mine = [r for r in runs if r["workload"] == w and r["side"] == side]
             print(f"{w} {side}: {len(mine)} runs, {sum(not r['correct'] for r in mine)} incorrect, "
-                  f"failed ops {sum(r['failed'] or 0 for r in mine)}")
+                  f"failed ops {sum(r['failed'] or 0 for r in mine)}, "
+                  f"non-zero exits {sum(r['rc'] != 0 for r in mine)}")
         for m in metrics:
             def by_pair(side):
                 return {r["pair"]: r["metrics"][m["name"]]["value"]
@@ -131,7 +136,8 @@ def main():
                         [(p[k], c[k]) for k in p if k in c])
             summary.append(dict(workload=w, metric=m["name"], **s))
             print(f"{w:12s} {m['name']:16s} {s['parent_median']:10.4g} {s['change_median']:10.4g} "
-                  f"{s['change_vs_parent']:+7.1%} {s['parent_spread']:7.1%} {s['bound']:6.0%} "
+                  f"{s['change_vs_parent']:+7.1%} {s['parent_spread']:8.1%} "
+                  f"{s['change_spread']:8.1%} {s['bound']:6.0%} "
                   f"{s['win_share']:5.0%}  {s['verdict']}")
     if a.json:
         with open(a.json, "w") as f:

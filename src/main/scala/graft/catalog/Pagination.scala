@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object Pagination {
 
-  /** Comment marker prefixed to every generated page/probe SQL — the
+  /** Comment marker prefixed to every generated page/probe/count SQL — the
     * reference prefixes a "gomysql2pg" block comment (root.go:373,394) —
     * so the source database's PROCESSLIST can identify, and on cancel
     * kill, graft's in-flight queries. */
@@ -68,6 +68,9 @@ object Pagination {
     val keys = keyCols.mkString(", ")
     s"SELECT $SqlTag $keys FROM $table ORDER BY $keys"
   }
+
+  /** compareDb's count of `table` (cmd/compare.go:102-132). */
+  def countSql(table: String): String = s"SELECT $SqlTag count(*) FROM $table"
 
   /** Keyset page predicates for `spark.read.jdbc(url, table, predicates,
     * props)` — one scan relation with one JDBC partition per page, so the

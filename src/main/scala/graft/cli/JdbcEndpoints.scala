@@ -5,6 +5,7 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.Pagination
 import graft.config.GraftConfig
 import graft.io.{CopyTransportFactory, Jdbc, PgCopyLoad}
 import graft.types.ColumnMeta
@@ -29,6 +30,7 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     extends Migration.CatalogSource {
   private val conn = Jdbc.ConnInfo(urlOverride.getOrElse(cfg.src.mysqlJdbcUrl),
     cfg.src.username, cfg.src.password)
+  private val dialect = Pagination.dialectFor(conn.url)
 
   private def schemaTable(name: String): DataFrame =
     spark.read.jdbc(conn.url, s"information_schema.$name", conn.props)
@@ -40,12 +42,12 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
         col("table_type") === "BASE TABLE")
       .select(col("table_name")).collect().map(_.getString(0)).toSeq
 
-  /** S5 (tablemeta.go:62-72): 11-column metadata projection. */
+  /** S5 (tablemeta.go:62-72): 11-column metadata projection, unordered:
+    * createTableDdl sorts by ordinal position. */
   override def columns(table: String): Seq[ColumnMeta] =
     schemaTable("columns")
       .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
         col("table_name") === table)
-      .orderBy(col("ordinal_position"))
       .select(lower(col("column_name")), lower(col("data_type")),
         col("character_maximum_length"), col("numeric_precision"),
         col("numeric_scale"), col("is_nullable"), col("column_default"),
@@ -64,6 +66,15 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     * (prepareSqlStr, root.go:335-386), planned by Jdbc.readTable. */
   override def tableData(table: String): DataFrame =
     Jdbc.readTable(spark, conn, table, primaryKeyCols(table), cfg.pageSize)
+
+  /** compareDb's source count (cmd/compare.go:102-132): one tagged
+    * `count(*)` statement over driver-side JDBC, cancellable on Ctrl-C. */
+  override def rowCount(table: String): Long =
+    Jdbc.withStatement(conn) { st =>
+      val rs = st.executeQuery(Pagination.countSql(dialect.quote(table)))
+      rs.next()
+      rs.getLong(1)
+    }
 
   /** Custom-SQL extraction (root.go:97-98, 305-309): each configured SQL
     * runs as its own dbtable subquery — its own JDBC partition unit —
@@ -101,18 +112,16 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
       .filter(lower(col("constraint_schema")) === cfg.src.database.toLowerCase)
       .select(col("constraint_name"), col("update_rule"), col("delete_rule")))
 
-  /** S6 (tablemeta.go:162-172). */
+  /** S6 (tablemeta.go:162-172): the reference's one statement, joining
+    * `tables` and `columns` on the source. */
   override def autoIncrements: DataFrame = {
-    val t = schemaTable("tables")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("auto_increment").isNotNull)
-      .select(col("table_name"), col("auto_increment"))
-    val c = schemaTable("columns")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("extra") === "auto_increment")
-      .select(col("table_name"), col("column_name"))
-    t.join(c, Seq("table_name"), "inner")
-      .select(col("table_name"), col("column_name"), col("auto_increment"))
+    val schema = dialect.string(cfg.src.database.toLowerCase)
+    spark.read.jdbc(conn.url,
+      "(SELECT t.table_name, c.column_name, t.auto_increment " +
+        "FROM information_schema.tables t JOIN information_schema.columns c " +
+        "ON c.table_schema = t.table_schema AND c.table_name = t.table_name " +
+        s"WHERE lower(t.table_schema) = $schema AND t.auto_increment IS NOT NULL " +
+        "AND c.extra = 'auto_increment') ai", conn.props)
   }
 
   /** S9 (tablemeta.go:306). */

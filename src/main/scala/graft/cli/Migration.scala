@@ -7,7 +7,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Exclusion
@@ -17,8 +17,11 @@ import graft.transform.ValueTransforms
 import graft.types.{ColumnMeta, TypeMapper}
 import graft.verify.CompareDb
 
-/** The full-migration pipeline (cmd/root.go:60-213 `mysql2pg`) as phased
-  * Spark jobs. Phases are sequential (as in the reference); WITHIN a phase
+/** The full-migration pipeline (cmd/root.go:60-213 `mysql2pg`) in phases.
+  * Table data moves as Spark jobs; catalog rows are collected once per DDL
+  * phase and turned into DDL by plain functions (TypeMapper, DdlGen), and
+  * counts are single statements where the source supports them. Phases
+  * are sequential (as in the reference); WITHIN a phase
   * the per-table work runs concurrently on a bounded worker pool — the
   * reference's maxParallel goroutine semaphore (root.go:106-117,138-150)
   * — so a catalog of many small tables overlaps its Spark jobs instead of
@@ -43,6 +46,9 @@ object Migration {
       * the SQLs (fixture sources); JDBC sources run them. */
     def tableData(table: String, customSqls: Seq[String]): DataFrame =
       tableData(table)
+    /** Row count of one source table, for compareDb. JDBC sources run one
+      * `count(*)` statement (cmd/compare.go:102-132). */
+    def rowCount(table: String): Long = tableData(table).count()
     def statistics: DataFrame       // S7 shape: table/index/non_unique/seq/col/type
     def foreignKeys: (DataFrame, DataFrame) // S8: (key_column_usage, referential_constraints)
     def autoIncrements: DataFrame   // S6 shape: table_name/column_name/auto_increment
@@ -123,8 +129,9 @@ object Migration {
       * Exclusion applies ONLY to the full-catalog scan: the reference
       * filters inside fetchTableMap (root.go:227-246) but takes -s /
       * `tables:` names verbatim (root.go:97) — an explicitly configured
-      * table is never silently dropped by an exclude pattern. */
-    def workList: Seq[String] =
+      * table is never silently dropped by an exclude pattern. Read once
+      * per Runner: every phase and compare share it. */
+    lazy val workList: Seq[String] =
       if (cfg.selFromYml || cfg.tables.nonEmpty) cfg.tables.keys.toSeq.sorted
       else source.tableNames.filter(Exclusion.compiledKeep(cfg.exclude)).sorted
 
@@ -206,48 +213,54 @@ object Migration {
       }
     }
 
-    /** Phase 3-6: DDL objects regenerated as DataFrame pipelines (S6-S10)
-      * then executed statement-by-statement with failure counting. */
+    /** `names` of one catalog relation, collected: one Spark job. A source
+      * keeps its own attribute case (TABLE_NAME on MySQL and Derby), so
+      * the columns are selected under the documented lower-case names and
+      * the generators read each row by position. */
+    private def catalogRows(df: DataFrame, names: Seq[String]): Seq[Row] =
+      df.select(names.map(n => col(n).as(n)): _*).collect().toSeq
+
+    /** Phase 3-7: DDL objects regenerated by DdlGen from the collected
+      * catalog rows (S6-S10), then executed statement-by-statement with
+      * failure counting. */
     def sequences(): Unit = phase("Sequence") {
-      val rows = DdlGen.sequenceDdl(source.autoIncrements).collect()
-      execAll(rows.flatMap(r => Seq(r.getAs[String]("drop_ddl"),
-        r.getAs[String]("create_ddl"), r.getAs[String]("default_ddl"))).toSeq,
+      execAll(DdlGen.sequenceDdl(catalogRows(source.autoIncrements, DdlGen.AutoIncrementCols))
+        .flatMap { case (_, _, drop, create, default) => Seq(drop, create, default) },
         FailureLog.SeqCreateFailed)
     }
 
     def indexes(): Unit = phase("Index") {
-      execAll(DdlGen.indexDdl(source.statistics, suffix = "g1", distributed = cfg.distributed)
-        .collect().map(_.getAs[String]("ddl")).toSeq, FailureLog.IdxCreateFailed)
+      execAll(DdlGen.indexDdl(catalogRows(source.statistics, DdlGen.StatisticsCols), suffix = "g1")
+        .map(_._3), FailureLog.IdxCreateFailed)
     }
 
     def foreignKeys(): Unit = phase("ForeignKey") {
       val (kcu, rc) = source.foreignKeys
-      execAll(DdlGen.fkDdl(kcu, rc).collect().map(_.getAs[String]("ddl")).toSeq,
-        FailureLog.FkCreateFailed)
+      execAll(DdlGen.fkDdl(catalogRows(kcu, DdlGen.KeyColumnUsageCols),
+        catalogRows(rc, DdlGen.ReferentialConstraintsCols)).map(_._3), FailureLog.FkCreateFailed)
     }
 
     def views(): Unit = phase("View") {
-      execAll(DdlGen.viewDdl(source.views, cfg.src.database)
-        .collect().map(_.getAs[String]("ddl")).toSeq, FailureLog.ViewCreateFailed)
+      execAll(DdlGen.viewDdl(catalogRows(source.views, DdlGen.ViewCols), cfg.src.database)
+        .map(_._2), FailureLog.ViewCreateFailed)
     }
 
     def triggers(): Unit = phase("Trigger") {
-      execAll(DdlGen.triggerDdl(source.triggers)
-        .collect().map(_.getAs[String]("body")).toSeq, FailureLog.TriggerCreateFailed)
+      execAll(DdlGen.triggerDdl(catalogRows(source.triggers, DdlGen.TriggerCols)).map(_._2),
+        FailureLog.TriggerCreateFailed)
     }
 
     /** compareDb (cmd/compare.go): per-table count verification with the
-      * three outcome shapes (equal / unequal / missing target). Counts for
-      * distinct tables run concurrently — both sides of each comparison
-      * are independent jobs. */
+      * three outcome shapes (equal / unequal / missing target). Tables are
+      * counted concurrently, each side with one statement on JDBC
+      * endpoints; rows keep the work list's order. */
     def compare(): DataFrame = {
       import spark.implicits._
-      val rows = runConcurrently(workList, "graft-compare") { t =>
-        Try(CompareDb.TableReport(t, source.tableData(t).count(), sink.rowCount(t.toLowerCase)))
+      runConcurrently(workList, "graft-compare") { t =>
+        Try(CompareDb.TableReport(t, source.rowCount(t), sink.rowCount(t.toLowerCase)))
           // unreadable source counts as a failed comparison row
           .getOrElse(CompareDb.TableReport(t, -1L, None))
-      }
-      rows.toDF().orderBy("table_name")
+      }.toDF()
     }
 
     /** C10 summary: one row per executed phase. */

@@ -26,7 +26,6 @@ case class GraftConfig(
     maxParallel: Int = 20,                    // default when unset (root.go:107-109)
     charInLength: Boolean = false,            // example.yml:15
     useNvarchar2: Boolean = false,            // example.yml:16
-    distributed: Boolean = false,             // "Distributed" (tablemeta.go:233-241)
     tables: Map[String, Seq[String]] = Map.empty, // custom-SQL mode (root.go:97-98)
     exclude: Seq[String] = Nil,               // wildcard exclusion (root.go:227-246)
     selFromYml: Boolean = false,              // -s flag: work list from `tables:` (root.go:529,97)
@@ -34,7 +33,11 @@ case class GraftConfig(
     // bad value inline during its row loop; the Spark equivalent is an
     // extra bounded sampling scan per table, so it is opt-in — enabling
     // it costs up to one additional source read per table with no NULs.
-    logInvalidData: Boolean = false)
+    logInvalidData: Boolean = false) {
+  // pageSize divides each table's key into pages: 0 would divide by zero
+  // in the page planner, and a negative size would act as its absolute value
+  require(pageSize >= 1, s"pageSize must be at least 1, got $pageSize")
+}
 
 /** Hand-rolled parser for the flat YAML subset the reference uses: scalar
   * keys, one-level maps (src/dest), a list key (exclude), and a
@@ -74,9 +77,8 @@ object YamlConfig {
                 case "maxParallel" => cfg = cfg.copy(maxParallel = value.toInt)
                 case "charInLength" => cfg = cfg.copy(charInLength = value.toBoolean)
                 case "useNvarchar2" => cfg = cfg.copy(useNvarchar2 = value.toBoolean)
-                case "Distributed" | "distributed" => cfg = cfg.copy(distributed = value.toBoolean)
                 case "logInvalidData" => cfg = cfg.copy(logInvalidData = value.toBoolean)
-                case _ => ()
+                case _ => () // dbType and Distributed (DELTAS.md §7) are not used
               }
             case Array(k, _) => section = k.trim
             case _ => ()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,7 +9,7 @@ import graft.Tables
 import graft.catalog.{Exclusion, Pagination}
 import graft.ddlgen.DdlGen
 import graft.transform.ValueTransforms._
-import graft.types.TypeMapper
+import graft.types.{ColumnMeta, TypeMapper}
 import graft.operators.RelationalQueries.dsumRowCast
 
 /** The reference pipeline's own operators — aggregation with exact
@@ -108,7 +108,7 @@ object ParityQueries {
       FROM customer JOIN nation ON c_nationkey = n_nationkey
       GROUP BY n_name ORDER BY n_name""")),
 
-    // ----- §1.1: the MySQL→PG type switch as a distributed expression ----
+    // ----- §1.1: the MySQL→PG type switch the migration runs --------------
     ("q05_typemap", (s: SparkSession, dir: String) => {
       import s.implicits._
       val meta: Seq[(Int, String, String, Option[Long], Option[Int], Option[Int], String)] = Seq(
@@ -138,14 +138,10 @@ object ParityQueries {
         (24, "c_enum", "enum", Some(7L), None, None, "YES"),
         (25, "c_json", "json", None, None, None, "YES"),
         (26, "c_year", "year", None, None, None, "YES"))
-      meta.toDF("ordinal_position", "column_name", "data_type",
-          "character_maximum_length", "numeric_precision", "numeric_scale", "is_nullable")
-        .select(
-          $"ordinal_position", $"column_name", $"data_type",
-          TypeMapper.pgTypeExpr($"data_type", $"character_maximum_length",
-            $"numeric_precision", $"numeric_scale").as("pg_type"),
-          when($"is_nullable" === "NO", "not null").otherwise("null").as("nullability"))
-        .orderBy("ordinal_position")
+      meta.map { case (pos, name, dt, len, p, sc, nullable) =>
+        (pos, name, dt, TypeMapper.toPgType(ColumnMeta(name, dt, len, p, sc, nullable, None, pos)),
+          if (nullable == "NO") "not null" else "null")
+      }.toDF("ordinal_position", "column_name", "data_type", "pg_type", "nullability")
     }, Some("""
       WITH meta(ordinal_position, column_name, data_type, character_maximum_length, numeric_precision, numeric_scale, is_nullable) AS (VALUES
         (1, 'id', 'int', NULL, 10, 0, 'NO'),
@@ -345,24 +341,23 @@ object ParityQueries {
 
     // The catalog→DDL generators (SURVEY §2.1 S6–S10) as oracle-checked
     // queries over literal information_schema-shaped fixtures — the same
-    // VALUES rows on both engines, so the DuckDB oracle exercises the full
-    // generator logic (ordered string-agg, branch pyramids, scrub regexes),
-    // not just a spec's golden strings.
+    // VALUES rows on both engines, run through the DdlGen functions the
+    // migration runs, so the DuckDB oracle exercises the full generator
+    // logic (ordered string-agg, branch pyramids, scrub regexes), not just
+    // a spec's golden strings.
 
     // ----- S7: index DDL (GROUP_CONCAT + IF/CASE pyramid) ----------------
     ("q36_ddl_index", (s: SparkSession, dir: String) => {
       import s.implicits._
       val stats = Seq(
-        ("t1", "PRIMARY", 0, 1, "id", "BTREE"),
-        ("t1", "ix_ab", 1, 2, "b", "BTREE"),
-        ("t1", "ix_ab", 1, 1, "a", "BTREE"),
-        ("t1", "ux_c", 0, 1, "c", "BTREE"),
-        ("t2", "ft_d", 1, 1, "d", "FULLTEXT"),
-        ("t2", "PRIMARY", 0, 2, "k2", "BTREE"),
-        ("t2", "PRIMARY", 0, 1, "k1", "BTREE"))
-        .toDF("table_name", "index_name", "non_unique", "seq_in_index",
-          "column_name", "index_type")
-      DdlGen.indexDdl(stats, suffix = "s1")
+        Row("t1", "PRIMARY", 0, 1, "id", "BTREE"),
+        Row("t1", "ix_ab", 1, 2, "b", "BTREE"),
+        Row("t1", "ix_ab", 1, 1, "a", "BTREE"),
+        Row("t1", "ux_c", 0, 1, "c", "BTREE"),
+        Row("t2", "ft_d", 1, 1, "d", "FULLTEXT"),
+        Row("t2", "PRIMARY", 0, 2, "k2", "BTREE"),
+        Row("t2", "PRIMARY", 0, 1, "k1", "BTREE"))
+      DdlGen.indexDdl(stats, suffix = "s1").toDF("table_name", "index_name", "ddl")
     }, Some("""
       WITH stats(table_name, index_name, non_unique, seq_in_index, column_name, index_type) AS (VALUES
         ('t1', 'PRIMARY', 0, 1, 'id', 'BTREE'),
@@ -391,14 +386,11 @@ object ParityQueries {
     ("q37_ddl_fk", (s: SparkSession, dir: String) => {
       import s.implicits._
       val kcu = Seq(
-        ("fk_a", "child", "a", 1, "parent", "x"),
-        ("fk_a", "child", "b", 2, "parent", "y"),
-        ("fk_b", "child2", "p", 1, "parent", "x"))
-        .toDF("constraint_name", "table_name", "column_name", "ordinal_position",
-          "referenced_table_name", "referenced_column_name")
-      val rc = Seq(("fk_a", "CASCADE", "NO ACTION"), ("fk_b", "RESTRICT", "SET NULL"))
-        .toDF("constraint_name", "update_rule", "delete_rule")
-      DdlGen.fkDdl(kcu, rc)
+        Row("fk_a", "child", "a", 1, "parent", "x"),
+        Row("fk_a", "child", "b", 2, "parent", "y"),
+        Row("fk_b", "child2", "p", 1, "parent", "x"))
+      val rc = Seq(Row("fk_a", "CASCADE", "NO ACTION"), Row("fk_b", "RESTRICT", "SET NULL"))
+      DdlGen.fkDdl(kcu, rc).toDF("table_name", "constraint_name", "ddl")
     }, Some("""
       WITH kcu(constraint_name, table_name, column_name, ordinal_position, referenced_table_name, referenced_column_name) AS (VALUES
         ('fk_a', 'child', 'a', 1, 'parent', 'x'),
@@ -422,9 +414,9 @@ object ParityQueries {
     // ----- S6: sequence DDL triplet --------------------------------------
     ("q38_ddl_sequence", (s: SparkSession, dir: String) => {
       import s.implicits._
-      val ai = Seq(("t1", "id", 42L), ("t2", "seq_no", 7L))
-        .toDF("table_name", "column_name", "auto_increment")
+      val ai = Seq(Row("t1", "id", 42L), Row("t2", "seq_no", 7L))
       DdlGen.sequenceDdl(ai)
+        .toDF("table_name", "column_name", "drop_ddl", "create_ddl", "default_ddl")
     }, Some("""
       WITH ai(table_name, column_name, auto_increment) AS (VALUES
         ('t1', 'id', 42), ('t2', 'seq_no', 7))
@@ -440,15 +432,11 @@ object ParityQueries {
     ("q39_ddl_view_trigger", (s: SparkSession, dir: String) => {
       import s.implicits._
       val views = Seq(
-        ("v1", "select `a`, convert(`b` using utf8mb4) from mydb.`t`"),
-        ("v2", "select x from mydb.u where x > 1"))
-        .toDF("table_name", "view_definition")
-      val trig = Seq(("tr1", "#note\nbegin\n#x\nend")).toDF("trigger_name", "action_statement")
-      DdlGen.viewDdl(views, "mydb")
-        .select($"table_name".as("object_name"), $"ddl".as("body"))
-        .unionByName(DdlGen.triggerDdl(trig)
-          .select($"trigger_name".as("object_name"), $"body"))
-        .orderBy("object_name")
+        Row("v1", "select `a`, convert(`b` using utf8mb4) from mydb.`t`"),
+        Row("v2", "select x from mydb.u where x > 1"))
+      val trig = Seq(Row("tr1", "#note\nbegin\n#x\nend"))
+      (DdlGen.viewDdl(views, "mydb") ++ DdlGen.triggerDdl(trig)).sortBy(_._1)
+        .toDF("object_name", "body")
     }, Some("""
       WITH v(table_name, view_definition) AS (VALUES
         ('v1', 'select `a`, convert(`b` using utf8mb4) from mydb.`t`'),

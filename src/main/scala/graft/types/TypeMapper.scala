@@ -1,9 +1,5 @@
 package graft.types
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 /** MySQL-family column metadata, as read from `information_schema.COLUMNS`
   * (reference: cmd/tablemeta.go:25-46, the `Table` struct).
   */
@@ -17,11 +13,10 @@ case class ColumnMeta(
     columnDefault: Option[String],
     ordinalPosition: Int)
 
-/** The reference's MySQL → PostgreSQL type mapping re-expressed three ways:
-  * as a pure function (driver-side DDL emission), as a Spark Catalyst type
-  * (the interchange representation every DataFrame uses), and as a Column
-  * expression (so the mapping itself is a distributed, oracle-checkable
-  * operator over a metadata DataFrame).
+/** The reference's MySQL → PostgreSQL type mapping as pure functions
+  * over catalog rows. The migration's TableStructure phase emits its
+  * CREATE TABLE statements with them, and q05 maps its literal rows with
+  * `toPgType`, so the DuckDB oracle checks the same code.
   *
   * Semantics per cmd/tablemeta.go:96-133 (type switch) and :76-94
   * (nullability/defaults). Flags per example.yml:15-16.
@@ -52,23 +47,6 @@ object TypeMapper {
     case other => other // passthrough verbatim (tablemeta.go:130-132)
   }
 
-  /** Spark interchange type for one column (SURVEY §1.1 rightmost column). */
-  def toSparkType(m: ColumnMeta): DataType = m.dataType match {
-    case "int" | "mediumint" | "tinyint" => IntegerType
-    case "bigint" => LongType
-    case "varchar" | "char" | "text" | "tinytext" | "mediumtext" |
-         "longtext" | "enum" | "set" | "json" => StringType
-    case "datetime" | "timestamp" => TimestampType
-    case "date" => DateType
-    case "time" | "year" => StringType
-    case "decimal" =>
-      DecimalType(m.numericPrecision.getOrElse(10), m.numericScale.getOrElse(0))
-    case "double" | "float" => DoubleType
-    case "tinyblob" | "blob" | "mediumblob" | "longblob" | "bit" |
-         "geometry" => BinaryType
-    case _ => StringType
-  }
-
   /** One column's DDL fragment: `"name" pgtype [default …] [not] null`
     * (cmd/tablemeta.go:76-94,135-138). */
   def columnDdl(m: ColumnMeta, charInLength: Boolean = false,
@@ -96,25 +74,5 @@ object TypeMapper {
     val body = cols.sortBy(_.ordinalPosition)
       .map(columnDdl(_, charInLength, useNvarchar2)).mkString(", ")
     s"""create table "${table.toLowerCase}" ($body)"""
-  }
-
-  /** The same type switch as a Column expression, so a whole
-    * `information_schema.COLUMNS` DataFrame maps in one distributed pass
-    * (no driver loop). Columns expected: data_type,
-    * character_maximum_length, numeric_precision, numeric_scale.
-    */
-  def pgTypeExpr(dataType: Column, charMaxLen: Column,
-                 numPrecision: Column, numScale: Column): Column = {
-    when(dataType.isin("int", "mediumint", "tinyint"), lit("int"))
-      .when(dataType === "varchar", concat(lit("varchar("), charMaxLen, lit(")")))
-      .when(dataType === "char", concat(lit("char("), charMaxLen, lit(")")))
-      .when(dataType.isin("text", "tinytext", "mediumtext", "longtext"), lit("text"))
-      .when(dataType.isin("datetime", "timestamp"), lit("timestamp"))
-      .when(dataType === "decimal",
-        when(numScale.isNull, concat(lit("decimal("), numPrecision, lit(")")))
-          .otherwise(concat(lit("decimal("), numPrecision, lit(","), numScale, lit(")"))))
-      .when(dataType.isin("double", "float"), lit("double precision"))
-      .when(dataType.isin("tinyblob", "blob", "mediumblob", "longblob"), lit("bytea"))
-      .otherwise(dataType)
   }
 }

@@ -87,6 +87,7 @@ class CancellationSpec extends AnyFunSuite {
   test("generated SQL carries the kill-marker tag (root.go:373,394)") {
     assert(Pagination.SqlTag.contains(Cancellation.GroupId))
     assert(Pagination.keyProbeSql("t", Seq("id")).startsWith(s"SELECT ${Pagination.SqlTag} "))
+    assert(Pagination.countSql("t").startsWith(s"SELECT ${Pagination.SqlTag} "))
     assert(Pagination.keysetPredicates(Seq("id"), Seq(Seq("10"), Seq("20")))
       .forall(_.startsWith(s"${Pagination.SqlTag} ")))
   }

@@ -3,6 +3,12 @@ package graft.cli
 import java.nio.file.Files
 import java.sql.DriverManager
 
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.spark.ListenerBusIntrospect
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -29,7 +35,10 @@ object MigrationEndToEndSpec {
       val st = c.createStatement()
       sqls.foreach { sql =>
         try st.execute(sql)
-        catch { case _: java.sql.SQLException if sql.startsWith("DROP") => () }
+        catch {
+          // each test sets the source up again, so the schema may exist
+          case _: java.sql.SQLException if sql.startsWith("DROP") || sql.startsWith("CREATE SCHEMA") => ()
+        }
       }
     } finally c.close()
   }
@@ -83,13 +92,16 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     val c = DriverManager.getConnection(srcUrl)
     try {
       val st = c.createStatement()
-      // catalog rows (MySQL information_schema shapes)
-      Seq("PEOPLE", "ORDERS", "BADTAB").foreach(t => st.execute(
-        s"INSERT INTO INFORMATION_SCHEMA.TABLES VALUES ('test', '$t', 'BASE TABLE', NULL)"))
-      def colRow(t: String, c0: String, dt: String, len: String, pos: Int): String =
+      // catalog rows (MySQL information_schema shapes); PEOPLE.ID is an
+      // auto-increment column whose next value is 58
+      Seq("PEOPLE" -> "58", "ORDERS" -> "NULL", "BADTAB" -> "NULL").foreach { case (t, ai) =>
+        st.execute(s"INSERT INTO INFORMATION_SCHEMA.TABLES VALUES ('test', '$t', 'BASE TABLE', $ai)")
+      }
+      def colRow(t: String, c0: String, dt: String, len: String, pos: Int,
+                 extra: String = ""): String =
         s"INSERT INTO INFORMATION_SCHEMA.COLUMNS VALUES ('test', '$t', '$c0', '$dt', $len, " +
-          s"NULL, NULL, 'NO', NULL, $pos, '')"
-      st.execute(colRow("PEOPLE", "ID", "int", "NULL", 1))
+          s"NULL, NULL, 'NO', NULL, $pos, '$extra')"
+      st.execute(colRow("PEOPLE", "ID", "int", "NULL", 1, "auto_increment"))
       st.execute(colRow("PEOPLE", "NAME", "varchar", "20", 2))
       st.execute(colRow("ORDERS", "A", "int", "NULL", 1))
       st.execute(colRow("ORDERS", "B", "int", "NULL", 2))
@@ -103,6 +115,32 @@ class MigrationEndToEndSpec extends AnyFunSuite {
       st.execute(pkRow("ORDERS", "A", 1))
       st.execute(pkRow("ORDERS", "B", 2))
       st.execute(pkRow("BADTAB", "ID", 1))
+      // DDL objects: a unique and a two-column index (parts listed out of
+      // order), a composite FK with rules, a view with backticks and the
+      // schema prefix, a trigger with `#` comments, and rows of another
+      // schema that no phase may read
+      def statRow(t: String, ix: String, nonUnique: Int, seq: Int, c0: String): String =
+        s"INSERT INTO INFORMATION_SCHEMA.STATISTICS VALUES ('test', '$t', '$ix', $nonUnique, " +
+          s"$seq, '$c0', 'BTREE')"
+      st.execute(statRow("PEOPLE", "PRIMARY", 0, 1, "ID"))
+      st.execute(statRow("PEOPLE", "UX_NAME", 0, 1, "NAME"))
+      st.execute(statRow("ORDERS", "IX_AMT_B", 1, 2, "B"))
+      st.execute(statRow("ORDERS", "PRIMARY", 0, 2, "B"))
+      st.execute(statRow("ORDERS", "IX_AMT_B", 1, 1, "AMT"))
+      st.execute(statRow("ORDERS", "PRIMARY", 0, 1, "A"))
+      st.execute("INSERT INTO INFORMATION_SCHEMA.STATISTICS VALUES ('other', 'PEOPLE', " +
+        "'IX_OTHER', 1, 1, 'NAME', 'BTREE')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.KEY_COLUMN_USAGE VALUES ('FK_ORD_HEAD', " +
+        "'test', 'ORDERS', 'B', 2, 'HEADS', 'HB')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.KEY_COLUMN_USAGE VALUES ('FK_ORD_HEAD', " +
+        "'test', 'ORDERS', 'A', 1, 'HEADS', 'HA')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.REFERENTIAL_CONSTRAINTS VALUES ('test', " +
+        "'FK_ORD_HEAD', 'CASCADE', 'SET NULL')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.VIEWS VALUES ('test', 'V_PEOPLE', " +
+        "'select `ID`, `NAME` from test.`PEOPLE` where `ID` > 1')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.VIEWS VALUES ('other', 'V_OTHER', 'select 1')")
+      st.execute("INSERT INTO INFORMATION_SCHEMA.TRIGGERS VALUES ('test', 'TR_PEOPLE', " +
+        "'#audit\nbegin\n#noop\nend')")
 
       val pp = c.prepareStatement("INSERT INTO PEOPLE VALUES (?, ?)")
       (1 to 57).foreach { i => pp.setInt(1, i); pp.setString(2, s"Name$i"); pp.addBatch() }
@@ -157,6 +195,66 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     runner2.run()
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"orders\"") == 37L)
+  }
+
+  test("DDL phases from real JDBC catalog rows: exact DDL, one job per catalog relation") {
+    setupSource()
+    val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4)
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    val ddl = mutable.ArrayBuffer[String]()
+    val jdbcSink = new JdbcSink(Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
+    val sink = new Migration.MigrationSink {
+      override def executeDdl(sql: String): Try[Unit] = {
+        synchronized(ddl += sql)
+        jdbcSink.executeDdl(sql)
+      }
+      override def writeTable(table: String, df: DataFrame): Try[Long] = jdbcSink.writeTable(table, df)
+      override def rowCount(table: String): Option[Long] = jdbcSink.rowCount(table)
+    }
+    val runner = new Migration.Runner(spark, cfg, source, sink)
+
+    // jobs are counted by a local property of this thread, which the
+    // phase workers inherit, so no other suite's job is counted
+    val sc = spark.sparkContext
+    val jobs = mutable.Map[String, Int]().withDefaultValue(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.step")))
+          .foreach(step => jobs.synchronized(jobs(step) += 1))
+    }
+    def step(name: String)(body: => Unit): Unit = {
+      sc.setLocalProperty("graft.test.step", name)
+      try body finally sc.setLocalProperty("graft.test.step", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(runner.workList == Seq("BADTAB", "ORDERS", "PEOPLE")) // read once, before compare
+      step("Sequence")(runner.sequences())
+      step("Index")(runner.indexes())
+      step("ForeignKey")(runner.foreignKeys())
+      step("View")(runner.views())
+      step("Trigger")(runner.triggers())
+      step("Compare")(runner.compare())
+      ListenerBusIntrospect.drain(sc)
+    } finally sc.removeSparkListener(listener)
+
+    assert(ddl.toSeq == Seq(
+      "drop sequence if exists seq_PEOPLE_ID",
+      "create sequence seq_PEOPLE_ID start with 58",
+      "alter table PEOPLE alter column ID set default nextval('seq_PEOPLE_ID')",
+      "create index IX_AMT_B_g1 on ORDERS (AMT, B)",
+      "alter table ORDERS add primary key (A, B)",
+      "alter table PEOPLE add primary key (ID)",
+      "create unique index UX_NAME_g1 on PEOPLE (NAME)",
+      "alter table ORDERS add constraint FK_ORD_HEAD foreign key (A, B) references HEADS (HA, HB) " +
+        "on delete set null on update cascade",
+      "create or replace view V_PEOPLE as select ID, NAME from PEOPLE where ID > 1",
+      "--audit\nbegin\n--noop\nend"))
+    // one job per catalog relation read: foreignKeys reads two; compare
+    // counts with one statement per table on each side, no Spark job
+    val relations = Map("Sequence" -> 1, "Index" -> 1, "ForeignKey" -> 2, "View" -> 1, "Trigger" -> 1)
+    relations.foreach { case (phase, n) => assert(jobs(phase) <= n, s"$phase: ${jobs(phase)} jobs") }
+    assert(jobs("Compare") == 0)
   }
 
   test("a failing DDL through JdbcSink returns Failure and deregisters its statement") {

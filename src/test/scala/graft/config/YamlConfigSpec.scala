@@ -39,7 +39,7 @@ class YamlConfigSpec extends AnyFunSuite {
     assert(cfg.src == ConnConfig("192.168.1.3", 3306, "test", "root", "11111"))
     assert(cfg.dest.port == 5432 && cfg.dest.database == "test2")
     assert(cfg.pageSize == 100000L && cfg.maxParallel == 30)
-    assert(!cfg.charInLength && cfg.useNvarchar2 && !cfg.distributed)
+    assert(!cfg.charInLength && cfg.useNvarchar2)
     assert(cfg.tables == Map(
       "test1" -> Seq("select * from test1"),
       "test2" -> Seq("select * from test2 where id < 5", "select * from test2 where id >= 5")))
@@ -51,6 +51,16 @@ class YamlConfigSpec extends AnyFunSuite {
     assert(cfg.pageSize == 500L)
     assert(cfg.maxParallel == 20) // reference default when unset
     assert(cfg.exclude.isEmpty && cfg.tables.isEmpty)
+  }
+
+  test("pageSize below 1 is rejected, from YAML and from code") {
+    Seq("0", "-1").foreach { n =>
+      val e = intercept[IllegalArgumentException](YamlConfig.parse(s"pageSize: $n\n"))
+      assert(e.getMessage.contains("pageSize"))
+    }
+    assert(intercept[IllegalArgumentException](GraftConfig(pageSize = 0))
+      .getMessage.contains("pageSize"))
+    assert(GraftConfig(pageSize = 1).pageSize == 1L)
   }
 
   test("comments and quoting are tolerated") {

@@ -1,7 +1,6 @@
 package graft.types
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.types._
 
 class TypeMapperSpec extends AnyFunSuite {
 
@@ -13,7 +12,6 @@ class TypeMapperSpec extends AnyFunSuite {
   test("int family maps to int (tablemeta.go:97-98)") {
     Seq("int", "mediumint", "tinyint").foreach { t =>
       assert(TypeMapper.toPgType(m(t)) == "int")
-      assert(TypeMapper.toSparkType(m(t)) == IntegerType)
     }
   }
 
@@ -39,7 +37,6 @@ class TypeMapperSpec extends AnyFunSuite {
   test("decimal: scale present vs NULL (tablemeta.go:118-123)") {
     assert(TypeMapper.toPgType(m("decimal", p = Some(12), sc = Some(3))) == "decimal(12,3)")
     assert(TypeMapper.toPgType(m("decimal", p = Some(8), sc = None)) == "decimal(8)")
-    assert(TypeMapper.toSparkType(m("decimal", p = Some(12), sc = Some(3))) == DecimalType(12, 3))
   }
 
   test("unknown types pass through verbatim (tablemeta.go:130-132)") {

@@ -21,35 +21,4 @@ class CompareDbSpec extends AnyFunSuite {
     assert(CompareDb.failedOnly(CompareDb.countCompare(spark, Seq(
       ("equal", a, Some(a)), ("unequal", a, Some(b))))).count() == 1)
   }
-
-  test("contentDiff tags rows by side") {
-    val src = Seq(1, 2, 3).toDF("x")
-    val dst = Seq(2, 3, 4).toDF("x")
-    val diff = CompareDb.contentDiff(src, dst).collect()
-    assert(diff.map(r => (r.getInt(0), r.getString(1))).toSet
-      == Set((1, "src_only"), (4, "dst_only")))
-  }
-
-  test("contentChecksum is order-independent and localizes a mismatch") {
-    import org.apache.spark.sql.functions._
-    val src = Seq((1L, "a", 10.0), (2L, "b", 20.0), (17L, "c", 30.0), (18L, "d", 40.0))
-      .toDF("pk", "s", "v")
-    // same rows, different physical order/partitioning -> same checksums
-    val shuffled = src.orderBy(desc("pk")).repartition(3)
-    val cols = Seq("pk", "s", "v")
-    val a = CompareDb.contentChecksum(src, "pk", cols).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val b = CompareDb.contentChecksum(shuffled, "pk", cols).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(a == b)
-    // corrupt one row in bucket 2 -> only that bucket flags NO
-    val dst = src.withColumn("v", when(col("pk") === 18L, 41.0).otherwise(col("v")))
-    val verdict = CompareDb.checksumCompare(
-        CompareDb.contentChecksum(src, "pk", cols),
-        CompareDb.contentChecksum(dst, "pk", cols))
-      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    // pks 1,17 land in bucket 1 (untouched: YES); 2,18 in bucket 2 (NO)
-    assert(verdict(1L) == "YES")
-    assert(verdict(2L) == "NO")
-  }
 }
