@@ -23,6 +23,12 @@ share of pair wins (ties count for neither side) and one verdict:
                 bound, and not every change run beats every parent run
     unchanged   otherwise
 
+After the end-to-end table it prints, per workload and side, each phase's
+seconds (TableStructure … Trigger): the median over correct runs of each
+run's median migration, read from migbench/work/run/result.json after the
+run.
+This shows where the time moved without a traced run.
+
 BENCHMARK.json is read from CHANGE_TREE; neither tree is modified apart
 from the benchmark's own work directory. --json FILE also writes every
 run and the summary as JSON.
@@ -33,6 +39,8 @@ import os
 import statistics
 import subprocess
 import sys
+
+PHASES = ("TableStructure", "TableData", "Sequence", "Index", "ForeignKey", "View", "Trigger")
 
 
 def run_once(tree, workload, seed, seconds):
@@ -47,7 +55,19 @@ def run_once(tree, workload, seed, seconds):
         out = {"correct": False, "attempted": 0, "failed": None, "metrics": {},
                "error": p.stderr.strip().splitlines()[-5:]}
     out["rc"] = p.returncode
+    out["phases"] = phase_medians(os.path.join(tree, "migbench", "work", "run", "result.json"))
     return out
+
+
+def phase_medians(result_json):
+    """Each phase's median seconds over one run's timed migrations; {} when
+    the run left no result."""
+    try:
+        with open(result_json) as f:
+            per_migration = json.load(f)["per_migration"]
+        return {ph: statistics.median(m["phases"][ph] for m in per_migration) for ph in PHASES}
+    except (OSError, ValueError, KeyError):  # StatisticsError is a ValueError
+        return {}
 
 
 def quartiles(xs):
@@ -139,6 +159,16 @@ def main():
                   f"{s['change_vs_parent']:+7.1%} {s['parent_spread']:8.1%} "
                   f"{s['change_spread']:8.1%} {s['bound']:6.0%} "
                   f"{s['win_share']:5.0%}  {s['verdict']}")
+    print()
+    print(f"{'workload':12s} {'side':6s} " + " ".join(f"{ph:>14s}" for ph in PHASES))
+    for w in (x["name"] for x in bench["workloads"]):
+        ok = [r for r in runs if r["workload"] == w and r["correct"]]
+        for side in ("parent", "change"):
+            mine = [r["phases"] for r in ok if r["side"] == side and r["phases"]]
+            med = {ph: statistics.median(p[ph] for p in mine) for ph in PHASES} if mine else {}
+            summary.append(dict(workload=w, side=side, phase_s=med))
+            print(f"{w:12s} {side:6s} " + " ".join(
+                f"{med.get(ph, float('nan')):14.4f}" for ph in PHASES))
     if a.json:
         with open(a.json, "w") as f:
             json.dump({"runs": runs, "summary": summary}, f, indent=1)

@@ -1,29 +1,30 @@
 package graft.cli
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.JdbcUtils
+import org.apache.spark.sql.jdbc.JdbcDialects
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.Pagination
 import graft.config.GraftConfig
 import graft.io.{CopyTransportFactory, Jdbc, PgCopyLoad}
 import graft.types.ColumnMeta
 
-/** Live JDBC wiring for the Migration pipeline. JdbcCatalogSource turns
-  * the catalog queries the reference generates as SQL strings
-  * (cmd/tablemeta.go, cmd/root.go) into filtered DataFrame reads over
-  * `information_schema`, letting Catalyst push the predicates down to
-  * MySQL; table data goes through the one page planner, Jdbc.readTable,
-  * which also owns the source SQL dialect. JdbcSink (below) is the one
-  * target sink.
+/** Live JDBC wiring for the Migration pipeline. JdbcCatalogSource reads
+  * each catalog object as the reference does (cmd/tablemeta.go,
+  * cmd/root.go): one tagged SQL statement over `information_schema`,
+  * filtered to the schema on the source and run over driver-side JDBC, so
+  * no catalog read is a Spark job; `columns` and `primaryKeyCols` look up
+  * one snapshot per source instance. Table data goes through the one page
+  * planner, Jdbc.readTable. JdbcSink (below) is the one target sink.
   *
-  * No MySQL/PG is reachable in this build environment; the catalog
-  * queries, the key probe, keyset page reads and the sink's COPY
-  * path (through a Derby COPY transport) run end to end against
-  * embedded Derby in MigrationEndToEndSpec
-  * (plus fixture-backed CatalogSource/MigrationSink specs) — only the
-  * vendor wire protocols stay untested.
+  * No MySQL/PG is reachable in this build environment; everything but the
+  * vendor wire protocols (catalog statements, key probe, keyset pages,
+  * the sink's COPY path through a Derby COPY transport) runs end to end
+  * against embedded Derby in MigrationEndToEndSpec.
   */
 final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
                               urlOverride: Option[String] = None)
@@ -31,35 +32,49 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
   private val conn = Jdbc.ConnInfo(urlOverride.getOrElse(cfg.src.mysqlJdbcUrl),
     cfg.src.username, cfg.src.password)
   private val dialect = Pagination.dialectFor(conn.url)
+  private val schema = dialect.string(cfg.src.database.toLowerCase)
 
-  private def schemaTable(name: String): DataFrame =
-    spark.read.jdbc(conn.url, s"information_schema.$name", conn.props)
+  /** One tagged catalog statement, `SELECT <tag> <body>`, read to the
+    * driver with the column types Spark's JDBC reader gives it. */
+  private def query(body: String): (StructType, Seq[Row]) =
+    Jdbc.withStatement(conn) { st =>
+      val rs = st.executeQuery(s"SELECT ${Pagination.SqlTag} $body")
+      val jdbcDialect = JdbcDialects.get(conn.url)
+      val types = JdbcUtils.getSchema(st.getConnection, rs, jdbcDialect, alwaysNullable = true)
+      (types, JdbcUtils.resultSetToRows(rs, types, jdbcDialect).toVector)
+    }
+
+  /** A catalog statement as a local DataFrame: its collect runs no job. */
+  private def frame(body: String): DataFrame =
+    query(body) match { case (types, rows) => spark.createDataFrame(rows.asJava, types) }
 
   /** S3 (root.go:229-247): base tables of the source schema. */
   override def tableNames: Seq[String] =
-    schemaTable("tables")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("table_type") === "BASE TABLE")
-      .select(col("table_name")).collect().map(_.getString(0)).toSeq
+    query("table_name FROM information_schema.tables " +
+      s"WHERE lower(table_schema) = $schema AND table_type = 'BASE TABLE'")._2.map(_.getString(0))
 
-  /** S5 (tablemeta.go:62-72): 11-column metadata projection, unordered:
-    * createTableDdl sorts by ordinal position. */
-  override def columns(table: String): Seq[ColumnMeta] =
-    schemaTable("columns")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("table_name") === table)
-      .select(lower(col("column_name")), lower(col("data_type")),
-        col("character_maximum_length"), col("numeric_precision"),
-        col("numeric_scale"), col("is_nullable"), col("column_default"),
-        col("ordinal_position"))
-      .collect().map { r =>
-        ColumnMeta(r.getString(0), r.getString(1),
-          Option(r.get(2)).map(_.toString.toLong),
-          Option(r.get(3)).map(_.toString.toInt),
-          Option(r.get(4)).map(_.toString.toInt),
-          r.getString(5), Option(r.getString(6)),
-          r.get(7).toString.toInt)
-      }.toSeq
+  /** S5 (tablemeta.go:62-72): every table's columns, read on the first
+    * lookup, unordered (createTableDdl sorts by ordinal position). */
+  private lazy val columnsByTable: Map[String, Seq[ColumnMeta]] =
+    query("table_name, lower(column_name), lower(data_type), character_maximum_length, " +
+      "numeric_precision, numeric_scale, is_nullable, column_default, ordinal_position " +
+      s"FROM information_schema.columns WHERE lower(table_schema) = $schema")._2
+      .groupMap(_.getString(0)) { r =>
+        ColumnMeta(r.getString(1), r.getString(2), Option(r.get(3)).map(_.toString.toLong),
+          Option(r.get(4)).map(_.toString.toInt), Option(r.get(5)).map(_.toString.toInt),
+          r.getString(6), Option(r.getString(7)), r.get(8).toString.toInt)
+      }
+
+  override def columns(table: String): Seq[ColumnMeta] = columnsByTable.getOrElse(table, Nil)
+
+  /** S4 (root.go:341-359): every table's PK columns in key order, read on
+    * the first lookup. */
+  private lazy val primaryKeys: Map[String, Seq[String]] =
+    query("table_name, column_name FROM information_schema.key_column_usage " +
+      s"WHERE lower(table_schema) = $schema AND constraint_name = 'PRIMARY' " +
+      "ORDER BY table_name, ordinal_position")._2.groupMap(_.getString(0))(_.getString(1))
+
+  def primaryKeyCols(table: String): Seq[String] = primaryKeys.getOrElse(table, Nil)
 
   /** S1 (root.go:389-516): PK-partitioned page read — keyset pages in
     * place of the reference's deferred-join page SQLs
@@ -77,64 +92,44 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     }
 
   /** Custom-SQL extraction (root.go:97-98, 305-309): each configured SQL
-    * runs as its own dbtable subquery — its own JDBC partition unit —
-    * and the slices union into the table's DataFrame. */
+    * runs as its own streamed dbtable subquery — its own JDBC partition
+    * unit — and the slices union into the table's DataFrame. */
   override def tableData(table: String, customSqls: Seq[String]): DataFrame =
     if (customSqls.isEmpty) tableData(table)
-    else customSqls.map(sql =>
-      spark.read.jdbc(conn.url, s"($sql) slice", conn.props))
+    else customSqls.map(sql => spark.read.jdbc(conn.url, s"($sql) slice", conn.streamProps))
       .reduce(_ unionByName _)
-
-  /** S4 (root.go:341-359): ordered PK column list. */
-  def primaryKeyCols(table: String): Seq[String] =
-    schemaTable("key_column_usage")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("table_name") === table && col("constraint_name") === "PRIMARY")
-      .orderBy(col("ordinal_position"))
-      .select(col("column_name")).collect().map(_.getString(0)).toSeq
 
   /** S7 (tablemeta.go:205-218). */
   override def statistics: DataFrame =
-    schemaTable("statistics")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase)
-      .select(col("table_name"), col("index_name"), col("non_unique"),
-        col("seq_in_index"), col("column_name"), col("index_type"))
+    frame("table_name, index_name, non_unique, seq_in_index, column_name, index_type " +
+      s"FROM information_schema.statistics WHERE lower(table_schema) = $schema")
 
   /** S8 (tablemeta.go:266,278). */
   override def foreignKeys: (DataFrame, DataFrame) = (
-    schemaTable("key_column_usage")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase &&
-        col("referenced_table_name").isNotNull)
-      .select(col("constraint_name"), col("table_name"), col("column_name"),
-        col("ordinal_position"), col("referenced_table_name"),
-        col("referenced_column_name")),
-    schemaTable("referential_constraints")
-      .filter(lower(col("constraint_schema")) === cfg.src.database.toLowerCase)
-      .select(col("constraint_name"), col("update_rule"), col("delete_rule")))
+    frame("constraint_name, table_name, column_name, ordinal_position, " +
+      "referenced_table_name, referenced_column_name FROM information_schema.key_column_usage " +
+      s"WHERE lower(table_schema) = $schema AND referenced_table_name IS NOT NULL"),
+    frame("constraint_name, update_rule, delete_rule FROM " +
+      s"information_schema.referential_constraints WHERE lower(constraint_schema) = $schema"))
 
   /** S6 (tablemeta.go:162-172): the reference's one statement, joining
     * `tables` and `columns` on the source. */
-  override def autoIncrements: DataFrame = {
-    val schema = dialect.string(cfg.src.database.toLowerCase)
-    spark.read.jdbc(conn.url,
-      "(SELECT t.table_name, c.column_name, t.auto_increment " +
-        "FROM information_schema.tables t JOIN information_schema.columns c " +
-        "ON c.table_schema = t.table_schema AND c.table_name = t.table_name " +
-        s"WHERE lower(t.table_schema) = $schema AND t.auto_increment IS NOT NULL " +
-        "AND c.extra = 'auto_increment') ai", conn.props)
-  }
+  override def autoIncrements: DataFrame =
+    frame("t.table_name, c.column_name, t.auto_increment " +
+      "FROM information_schema.tables t JOIN information_schema.columns c " +
+      "ON c.table_schema = t.table_schema AND c.table_name = t.table_name " +
+      s"WHERE lower(t.table_schema) = $schema AND t.auto_increment IS NOT NULL " +
+      "AND c.extra = 'auto_increment'")
 
   /** S9 (tablemeta.go:306). */
   override def views: DataFrame =
-    schemaTable("views")
-      .filter(lower(col("table_schema")) === cfg.src.database.toLowerCase)
-      .select(col("table_name"), col("view_definition"))
+    frame("table_name, view_definition FROM information_schema.views " +
+      s"WHERE lower(table_schema) = $schema")
 
   /** S10 (tablemeta.go:339). */
   override def triggers: DataFrame =
-    schemaTable("triggers")
-      .filter(lower(col("trigger_schema")) === cfg.src.database.toLowerCase)
-      .select(col("trigger_name"), col("action_statement"))
+    frame("trigger_name, action_statement FROM information_schema.triggers " +
+      s"WHERE lower(trigger_schema) = $schema")
 }
 
 /** Target-side sink (K1/K2). DDL runs through Jdbc.executeDdl. Data
@@ -151,7 +146,7 @@ final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
     // missing) fails the write — COPYing after a silently skipped
     // truncate would append onto stale data on re-runs. The row count
     // comes from the write itself — no second scan of the source
-    Jdbc.executeDdl(conn, s"""truncate table "$table"""")
+    Jdbc.executeDdl(conn, s"truncate table ${Pagination.AnsiDialect.quote(table)}")
     PgCopyLoad.copyInto(df, table, copy)
   }
 
@@ -159,7 +154,7 @@ final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
     * (cmd/compare.go:102-132). */
   override def rowCount(table: String): Option[Long] = Try {
     Jdbc.withStatement(conn) { st =>
-      val rs = st.executeQuery(s"""select count(*) from "$table"""")
+      val rs = st.executeQuery(s"select count(*) from ${Pagination.AnsiDialect.quote(table)}")
       rs.next()
       rs.getLong(1)
     }

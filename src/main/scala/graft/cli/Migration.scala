@@ -10,7 +10,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Exclusion
+import graft.catalog.{Exclusion, Pagination}
 import graft.config.GraftConfig
 import graft.ddlgen.DdlGen
 import graft.transform.ValueTransforms
@@ -18,14 +18,14 @@ import graft.types.{ColumnMeta, TypeMapper}
 import graft.verify.CompareDb
 
 /** The full-migration pipeline (cmd/root.go:60-213 `mysql2pg`) in phases.
-  * Table data moves as Spark jobs; catalog rows are collected once per DDL
-  * phase and turned into DDL by plain functions (TypeMapper, DdlGen), and
-  * counts are single statements where the source supports them. Phases
-  * are sequential (as in the reference); WITHIN a phase
-  * the per-table work runs concurrently on a bounded worker pool — the
-  * reference's maxParallel goroutine semaphore (root.go:106-117,138-150)
-  * — so a catalog of many small tables overlaps its Spark jobs instead of
-  * serializing one job per table through the driver. Per-phase failure
+  * Only table data moves as Spark jobs, one COPY write per table. A JDBC
+  * source reads its catalog rows as driver-side statements, plain
+  * functions (TypeMapper, DdlGen) turn them into DDL, and counts are
+  * single statements where the source supports them. Phases are
+  * sequential (as in the reference); WITHIN a phase the per-table work
+  * runs concurrently on a bounded worker pool — the reference's
+  * maxParallel goroutine semaphore (root.go:106-117,138-150) — so a
+  * catalog of many small tables overlaps its writes. Per-phase failure
   * totals (A4, root.go:166-209) are collected from Try results instead of
   * a channel-fed counter loop.
   *
@@ -145,7 +145,7 @@ object Migration {
         // Try-wrapped end to end: a table whose catalog read blows up is
         // ONE failure in the report, not the death of the phase
         Try {
-          sink.executeDdl(s"""drop table if exists "${t.toLowerCase}" cascade""") // root.go:142
+          sink.executeDdl(s"drop table if exists ${Pagination.AnsiDialect.quote(t.toLowerCase)} cascade") // root.go:142
           TypeMapper.createTableDdl(t, source.columns(t),
             cfg.charInLength, cfg.useNvarchar2)
         } match {
@@ -213,10 +213,10 @@ object Migration {
       }
     }
 
-    /** `names` of one catalog relation, collected: one Spark job. A source
-      * keeps its own attribute case (TABLE_NAME on MySQL and Derby), so
-      * the columns are selected under the documented lower-case names and
-      * the generators read each row by position. */
+    /** `names` of one catalog relation, collected; JdbcCatalogSource's are
+      * local rows, so no Spark job. A source keeps its own attribute case
+      * (TABLE_NAME on MySQL and Derby), so the columns are selected under
+      * the documented lower-case names and read by position. */
     private def catalogRows(df: DataFrame, names: Seq[String]): Seq[Row] =
       df.select(names.map(n => col(n).as(n)): _*).collect().toSeq
 

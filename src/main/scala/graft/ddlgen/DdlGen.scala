@@ -99,16 +99,15 @@ object DdlGen {
   private val ConvertUsing = Pattern.compile("(?i)convert\\(([^)]+) using [a-z0-9]+\\)")
 
   /** View-body scrub (cmd/tablemeta.go:300-331): strip backticks, the
-    * source-schema prefix, and MySQL `convert(x using utf8mb4)` wrappers,
-    * then wrap in CREATE OR REPLACE VIEW; one (table_name, ddl) per view. */
-  def viewDdl(views: Seq[Row], schemaName: String): Seq[(String, String)] = {
-    val schemaPrefix = Pattern.compile(s"$schemaName\\.")
+    * literal source-schema prefix, and MySQL `convert(x using utf8mb4)`
+    * wrappers, then wrap in CREATE OR REPLACE VIEW; one (table_name, ddl)
+    * per view. */
+  def viewDdl(views: Seq[Row], schemaName: String): Seq[(String, String)] =
     views.map { r =>
-      val body = ConvertUsing.matcher(schemaPrefix.matcher(
-        r.getString(1).replace("`", "")).replaceAll("")).replaceAll("$1")
+      val body = ConvertUsing.matcher(
+        r.getString(1).replace("`", "").replace(s"$schemaName.", "")).replaceAll("$1")
       (r.getString(0), s"create or replace view ${r.getString(0)} as $body")
     }.sortBy(_._1)
-  }
 
   /** Trigger rows, as in TRIGGERS. */
   val TriggerCols = Seq("trigger_name", "action_statement")

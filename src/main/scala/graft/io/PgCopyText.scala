@@ -6,6 +6,8 @@ import java.time.ZoneOffset
 
 import org.apache.spark.sql.Row
 
+import graft.catalog.Pagination.AnsiDialect
+
 /** PostgreSQL COPY text-format encoding (the wire format behind the
   * reference's `pq.CopyIn` bulk load, cmd/root.go:408-511).
   *
@@ -61,5 +63,5 @@ object PgCopyText {
 
   /** The COPY statement the stream is attached to. */
   def copyStatement(table: String, columns: Seq[String]): String =
-    s"""COPY "$table" (${columns.map(c => s""""$c"""").mkString(", ")}) FROM STDIN"""
+    s"COPY ${AnsiDialect.quote(table)} (${columns.map(AnsiDialect.quote).mkString(", ")}) FROM STDIN"
 }

@@ -1,5 +1,7 @@
 package graft.types
 
+import graft.catalog.Pagination.AnsiDialect
+
 /** MySQL-family column metadata, as read from `information_schema.COLUMNS`
   * (reference: cmd/tablemeta.go:25-46, the `Table` struct).
   */
@@ -62,7 +64,7 @@ object TypeMapper {
         }
         s" default $quoted"
     }
-    s""""${m.columnName.toLowerCase}" ${toPgType(m, charInLength, useNvarchar2)}$default $nullable"""
+    s"${AnsiDialect.quote(m.columnName.toLowerCase)} ${toPgType(m, charInLength, useNvarchar2)}$default $nullable"
   }
 
   /** Full CREATE TABLE statement (cmd/tablemeta.go:54,135-148).
@@ -73,6 +75,6 @@ object TypeMapper {
                      useNvarchar2: Boolean = false): String = {
     val body = cols.sortBy(_.ordinalPosition)
       .map(columnDdl(_, charInLength, useNvarchar2)).mkString(", ")
-    s"""create table "${table.toLowerCase}" ($body)"""
+    s"create table ${AnsiDialect.quote(table.toLowerCase)} ($body)"
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.DriverManager
 
 import scala.collection.mutable
-import scala.util.Try
+import scala.util.{Success, Try}
 
 import org.apache.spark.ListenerBusIntrospect
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,6 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.config.{ConnConfig, GraftConfig}
 import graft.io.{DerbyCopyTransportFactory, Jdbc, StatementRegistry}
+import graft.types.{ColumnMeta, TypeMapper}
 
 /** The full migration, end to end, against REAL JDBC endpoints on BOTH
   * sides (embedded Derby): an information_schema-shaped fixture database
@@ -199,6 +200,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
 
   test("DDL phases from real JDBC catalog rows: exact DDL, one job per catalog relation") {
     setupSource()
+    exec(tgtUrl)("DROP TABLE \"people\"", "DROP TABLE \"orders\"", "DROP TABLE \"badtab\"")
     val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10, maxParallel = 4)
     val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
     val ddl = mutable.ArrayBuffer[String]()
@@ -212,6 +214,7 @@ class MigrationEndToEndSpec extends AnyFunSuite {
       override def rowCount(table: String): Option[Long] = jdbcSink.rowCount(table)
     }
     val runner = new Migration.Runner(spark, cfg, source, sink)
+    val dataRunner = new Migration.Runner(spark, cfg, source, jdbcSink)
 
     // jobs are counted by a local property of this thread, which the
     // phase workers inherit, so no other suite's job is counted
@@ -229,6 +232,8 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       assert(runner.workList == Seq("BADTAB", "ORDERS", "PEOPLE")) // read once, before compare
+      step("TableStructure")(dataRunner.tableStructure())
+      step("TableData")(dataRunner.tableData())
       step("Sequence")(runner.sequences())
       step("Index")(runner.indexes())
       step("ForeignKey")(runner.foreignKeys())
@@ -250,11 +255,57 @@ class MigrationEndToEndSpec extends AnyFunSuite {
         "on delete set null on update cascade",
       "create or replace view V_PEOPLE as select ID, NAME from PEOPLE where ID > 1",
       "--audit\nbegin\n--noop\nend"))
-    // one job per catalog relation read: foreignKeys reads two; compare
-    // counts with one statement per table on each side, no Spark job
-    val relations = Map("Sequence" -> 1, "Index" -> 1, "ForeignKey" -> 2, "View" -> 1, "Trigger" -> 1)
-    relations.foreach { case (phase, n) => assert(jobs(phase) <= n, s"$phase: ${jobs(phase)} jobs") }
-    assert(jobs("Compare") == 0)
+    // catalog reads and counts are driver-side statements: the only Spark
+    // jobs are the COPY writes, at most one per table
+    Seq("TableStructure", "Sequence", "Index", "ForeignKey", "View", "Trigger", "Compare")
+      .foreach(phase => assert(jobs(phase) == 0, s"$phase: ${jobs(phase)} jobs"))
+    assert(jobs("TableData") <= runner.workList.size, s"TableData: ${jobs("TableData")} jobs")
+    assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
+  }
+
+  test("columns and primaryKeyCols read one catalog snapshot per source") {
+    setupSource()
+    val cfg = GraftConfig(src = ConnConfig(database = "test"))
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    val orders = source.columns("ORDERS")
+    assert(orders.sortBy(_.ordinalPosition).map(_.columnName) == Seq("a", "b", "amt"))
+    assert(source.primaryKeyCols("ORDERS") == Seq("A", "B"))
+    exec(srcUrl)("DELETE FROM INFORMATION_SCHEMA.COLUMNS",
+      "DELETE FROM INFORMATION_SCHEMA.KEY_COLUMN_USAGE")
+    // later lookups, for any table, answer from the first read
+    assert(source.columns("ORDERS") == orders)
+    assert(source.columns("PEOPLE").map(_.columnName).sorted == Seq("id", "name"))
+    assert(source.primaryKeyCols("ORDERS") == Seq("A", "B"))
+    assert(source.primaryKeyCols("PEOPLE") == Seq("ID"))
+    assert(source.columns("NO_SUCH") == Nil && source.primaryKeyCols("NO_SUCH") == Nil)
+    val fresh = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    assert(fresh.columns("ORDERS") == Nil)
+    assert(fresh.primaryKeyCols("ORDERS") == Nil)
+  }
+
+  test("custom-SQL slices read as one partition each, row-identical to a plain read") {
+    setupSource()
+    val cfg = GraftConfig(src = ConnConfig(database = "test"), pageSize = 10)
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    val sliced = source.tableData("PEOPLE",
+      Seq("SELECT * FROM PEOPLE WHERE ID <= 20", "SELECT * FROM PEOPLE WHERE ID > 20"))
+    assert(sliced.rdd.getNumPartitions == 2)
+    def rows(df: DataFrame): Seq[(Int, String)] =
+      df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
+    assert(rows(sliced).size == 57)
+    assert(rows(sliced) == rows(source.tableData("PEOPLE")))
+  }
+
+  test("JdbcSink doubles a quote inside the target name: create, truncate, COPY and count") {
+    exec(tgtUrl)("DROP TABLE \"a\"\"b\"")
+    val sink = new JdbcSink(Jdbc.ConnInfo(tgtUrl, "", ""), new DerbyCopyTransportFactory(tgtUrl))
+    assert(sink.executeDdl(TypeMapper.createTableDdl("a\"b",
+      Seq(ColumnMeta("x\"y", "int", None, None, None, "NO", None, 1)))).isSuccess)
+    val df = spark.range(3).selectExpr("CAST(id AS INT) AS `x\"y`")
+    assert(sink.writeTable("a\"b", df) == Success(3L))
+    assert(sink.writeTable("a\"b", df) == Success(3L)) // truncated, then reloaded
+    assert(sink.rowCount("a\"b") == Some(3L))
+    assert(query1(tgtUrl, "SELECT SUM(\"x\"\"y\") FROM \"a\"\"b\"") == 3L)
   }
 
   test("a failing DDL through JdbcSink returns Failure and deregisters its statement") {

@@ -91,6 +91,13 @@ class MigrationSpec extends AnyFunSuite {
     assert(row.getLong(2) == 1L) // one failed statement
   }
 
+  test("tableStructure drops and creates the target table with an embedded quote doubled") {
+    val sink = new RecordingSink
+    new Migration.Runner(spark, cfg, fixtureSourceFor(Seq("a\"b")), sink).tableStructure()
+    assert(sink.ddl.toSeq == Seq("""drop table if exists "a""b" cascade""",
+      """create table "a""b" ("id" int not null, "name" varchar(20) null)"""))
+  }
+
   test("compare: YES / missing-target outcomes (compare.go shapes)") {
     val sink = new RecordingSink
     val runner = new Migration.Runner(spark, cfg, fixtureSource, sink)

@@ -55,6 +55,15 @@ class DdlGenSpec extends AnyFunSuite {
       == "create or replace view v1 as select a, b from t")
   }
 
+  test("viewDdl strips the schema prefix as a literal, as the reference's replace()") {
+    def view(body: String, schema: String): String =
+      DdlGen.viewDdl(Seq(Row("v1", body)), schema).head._2
+    assert(view("select a from myXdb.t", "my.db") == "create or replace view v1 as select a from myXdb.t")
+    assert(view("select a from my.db.t", "my.db") == "create or replace view v1 as select a from t")
+    assert(view("select a from a+b.t", "a+b") == "create or replace view v1 as select a from t")
+    assert(view("select a from (x.t", "(x") == "create or replace view v1 as select a from t")
+  }
+
   test("triggerDdl rewrites # comments to -- (tablemeta.go:333-364)") {
     val t = Seq(Row("tr1", "#note\nbegin\n#x\nend"))
     assert(DdlGen.triggerDdl(t).head._2

@@ -34,6 +34,11 @@ class PgCopyTextSpec extends AnyFunSuite {
       == """COPY "t1" ("id", "name") FROM STDIN""")
   }
 
+  test("copy statement doubles a quote inside the table and column names") {
+    assert(PgCopyText.copyStatement("a\"b", Seq("id", "x\"y"))
+      == """COPY "a""b" ("id", "x""y") FROM STDIN""")
+  }
+
   test("non-scalar values fail fast instead of encoding toString garbage") {
     // a custom per-table SQL can surface array/struct/map columns; their
     // toString would COPY as e.g. "WrappedArray(...)" varchar garbage

@@ -61,4 +61,9 @@ class TypeMapperSpec extends AnyFunSuite {
     assert(TypeMapper.createTableDdl("T1", cols)
       == """create table "t1" ("a" varchar(3) null, "b" int not null)""")
   }
+
+  test("createTableDdl doubles a quote inside the table and column names") {
+    val cols = Seq(ColumnMeta("X\"Y", "int", None, None, None, "NO", None, 1))
+    assert(TypeMapper.createTableDdl("A\"B", cols) == """create table "a""b" ("x""y" int not null)""")
+  }
 }
