@@ -1,12 +1,9 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
 /** Table-exclusion filtering (cmd/root.go:227-246; config example.yml:23-26):
   * each configured pattern excludes matching table names; `*` is the
-  * wildcard (mapped to SQL LIKE `%`). Expressed as a single conjunctive
-  * Column predicate so Catalyst can push it into the scan.
+  * wildcard (mapped to SQL LIKE `%`). Patterns compile once to anchored
+  * regexes with LIKE semantics, matched on the driver.
   *
   * Matching is CASE-INSENSITIVE: the reference evaluates exclusion as
   * MySQL `table_name NOT LIKE '...'`, and MySQL's default `*_ci`
@@ -18,17 +15,6 @@ object Exclusion {
   /** `*` → `%`, matching the reference's wildcard rewrite (root.go:237-239). */
   def toLikePattern(p: String): String = p.replace("*", "%")
 
-  /** Conjunction of NOT LIKE predicates over `c`. Empty pattern list → keep
-    * everything. */
-  def excludePredicate(c: Column, patterns: Seq[String]): Column =
-    patterns.foldLeft(lit(true))((acc, p) =>
-      // Locale.ROOT: the default locale would fold 'LOGIN*' to 'logın*'
-      // under tr_TR and silently stop matching
-      acc && !lower(c).like(toLikePattern(p).toLowerCase(java.util.Locale.ROOT)))
-
-  def filterExcluded(df: DataFrame, nameCol: String, patterns: Seq[String]): DataFrame =
-    df.filter(excludePredicate(col(nameCol), patterns))
-
   /** One LIKE pattern → an anchored regex with SQL LIKE semantics
     * (`%` any sequence, `_` any single char, everything else literal) —
     * the driver-side compilation of exactly what `Column.like` evaluates. */
@@ -39,9 +25,8 @@ object Exclusion {
       case '_' => sb.append('.')
       case c   => sb.append(java.util.regex.Pattern.quote(c.toString))
     }
-    // UNICODE_CASE so the compiled form folds non-ASCII the same way the
-    // Column.like predicate's lower() does (Ö→ö), keeping the driver-side
-    // work list and Spark-side filtering in agreement
+    // UNICODE_CASE folds non-ASCII the way SQL lower() does (Ö→ö), as
+    // ExclusionSpec checks against a Column.like predicate
     java.util.regex.Pattern.compile(sb.toString,
       java.util.regex.Pattern.DOTALL | java.util.regex.Pattern.CASE_INSENSITIVE |
         java.util.regex.Pattern.UNICODE_CASE)

@@ -1,12 +1,13 @@
 package graft.cli
 
-import java.sql.Connection
+import java.sql.{Connection, DriverManager}
 
 import scala.collection.mutable
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 
-import graft.io.StatementRegistry
+import graft.io.{Jdbc, StatementRegistry}
 
 /** Interruptible execution (S11/C11): the reference tags its SQL with a
   * "gomysql2pg" comment marker and kills matching PROCESSLIST entries on
@@ -29,18 +30,19 @@ object Cancellation {
   }
 
   /** Cancel everything the pipeline has in flight (the Ctrl-C hook,
-    * root.go:62-64): all Spark jobs in the group AND every registered
-    * driver-side JDBC statement. */
+    * root.go:62-64): every registered driver-side JDBC statement, then,
+    * while the context runs, the Spark jobs in the group (at JVM exit
+    * Spark's own hook may have stopped it; `cancelJobGroup` then throws). */
   def cancelAll(spark: SparkSession): Unit = {
-    spark.sparkContext.cancelJobGroup(GroupId)
     StatementRegistry.cancelAll()
+    if (!spark.sparkContext.isStopped) spark.sparkContext.cancelJobGroup(GroupId)
   }
 
   /** The reference's cleanDBconn (cmd/app.go:186-202): find every source-
     * side session still running a tagged query and `KILL QUERY` it.
-    * Returns the killed ids. Used from the shutdown path when a source
-    * connection is available — covers executors' in-flight page reads,
-    * which hold statements this driver JVM cannot see. */
+    * Returns the killed ids. `onShutdown` runs it for a MySQL source —
+    * covers executors' in-flight page reads, which hold statements this
+    * driver JVM cannot see. */
   def killTagged(conn: Connection): Seq[String] = {
     val st = conn.createStatement()
     try {
@@ -57,7 +59,16 @@ object Cancellation {
     } finally st.close()
   }
 
-  /** Install the reference's signal-hook behavior on the driver JVM. */
-  def installShutdownHook(spark: SparkSession): Unit =
-    sys.addShutdownHook { cancelAll(spark) }
+  /** The signal-hook body (app.go:205-216): `cancelAll`, then, for a
+    * `jdbc:mysql` source only, `killTagged` over one fresh connection.
+    * Never throws: a sweep that cannot connect within 5 s is skipped. */
+  def onShutdown(spark: SparkSession, source: Jdbc.ConnInfo): Unit = {
+    cancelAll(spark)
+    if (source.url.startsWith("jdbc:mysql:")) Try {
+      val props = source.props
+      props.setProperty("connectTimeout", "5000")
+      val c = DriverManager.getConnection(source.url, props)
+      try killTagged(c) finally c.close()
+    }
+  }
 }

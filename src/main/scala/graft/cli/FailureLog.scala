@@ -56,9 +56,9 @@ object FailureLog {
   val InvalidTableData = "invalidTableData"       // root.go:466
 
   /** Bad-value capture is a bounded sample: the reference logs every
-    * affected value inline during its row loop; a distributed engine
-    * instead takes the first N matches (filter + limit — early-exits the
-    * scan) so the artifact stays useful without an unbounded driver
-    * collect at corpus scale. */
+    * affected value inline during its row loop; here the COPY encoder
+    * keeps the first N values it stripped in each partition and JdbcSink
+    * logs the first N per table, so the artifact stays useful without an
+    * unbounded driver collect at corpus scale. */
   val InvalidSampleLimit = 20
 }

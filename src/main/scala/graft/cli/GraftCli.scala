@@ -60,13 +60,15 @@ object GraftCli {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      // per-table phase workers each submit jobs into a named pool; FAIR
-      // mode shares executors across in-flight tables (maxParallel model)
-      .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
-    Cancellation.installShutdownHook(spark) // Ctrl-C kills in-flight work (app.go:205-216)
-    try Cancellation.interruptible(spark, s"graft-cli $cmd") { runCommand(spark, cfg, cmd) }
-    catch {
+    // Ctrl-C or a failed run kills in-flight work (app.go:205-216); a
+    // finished run removes the hook, so a clean exit sweeps nothing
+    val hook = sys.addShutdownHook(Cancellation.onShutdown(spark,
+      Jdbc.ConnInfo(cfg.src.mysqlJdbcUrl, cfg.src.username, cfg.src.password)))
+    try {
+      Cancellation.interruptible(spark, s"graft-cli $cmd") { runCommand(spark, cfg, cmd) }
+      hook.remove()
+    } catch {
       case e: Throwable =>
         val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
         System.err.println(
@@ -78,27 +80,25 @@ object GraftCli {
   }
 
   private def runCommand(spark: SparkSession, cfg: GraftConfig, cmd: String): Unit = {
-    {
-      val source = new JdbcCatalogSource(spark, cfg)
-      val dest = cfg.dest
-      val sink = new JdbcSink(Jdbc.ConnInfo(dest.pgJdbcUrl, dest.username, dest.password),
-        new PgJdbcCopyTransportFactory(dest.pgJdbcUrl, dest.username, dest.password))
-      // per-run timestamped artifact dir (CreateDateDir, app.go:219-236)
-      val flog = new FailureLog(Paths.get(""))
-      val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))
-      cmd match {
-        case "run"         => runner.run().show(false)
-        case "createTable" => runner.tableStructure(); runner.report().show(false)
-        case "onlyData"    => runner.tableData(); runner.report().show(false)
-        case "seqOnly"     => runner.sequences(); runner.report().show(false)
-        case "idxOnly"     => runner.indexes(); runner.report().show(false)
-        case "viewOnly"    => runner.views(); runner.report().show(false)
-        case "compareDb"   =>
-          val rep = runner.compare()
-          rep.show(false)                                   // all rows
-          graft.verify.CompareDb.failedOnly(rep).show(false) // failed-only table
-        case other => println(s"unknown command: $other\n$usage")
-      }
+    val source = new JdbcCatalogSource(spark, cfg)
+    val dest = cfg.dest
+    // per-run timestamped artifact dir (CreateDateDir, app.go:219-236)
+    val flog = new FailureLog(Paths.get(""))
+    val sink = new JdbcSink(Jdbc.ConnInfo(dest.pgJdbcUrl, dest.username, dest.password),
+      new PgJdbcCopyTransportFactory(dest.pgJdbcUrl, dest.username, dest.password), Some(flog))
+    val runner = new Migration.Runner(spark, cfg, source, sink, Some(flog))
+    cmd match {
+      case "run"         => runner.run().show(false)
+      case "createTable" => runner.tableStructure(); runner.report().show(false)
+      case "onlyData"    => runner.tableData(); runner.report().show(false)
+      case "seqOnly"     => runner.sequences(); runner.report().show(false)
+      case "idxOnly"     => runner.indexes(); runner.report().show(false)
+      case "viewOnly"    => runner.views(); runner.report().show(false)
+      case "compareDb"   =>
+        val rep = runner.compare()
+        rep.show(false)                                   // all rows
+        graft.verify.CompareDb.failedOnly(rep).show(false) // failed-only table
+      case other => println(s"unknown command: $other\n$usage")
     }
   }
 

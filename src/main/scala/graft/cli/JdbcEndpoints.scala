@@ -135,8 +135,10 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
 /** Target-side sink (K1/K2). DDL runs through Jdbc.executeDdl. Data
   * truncates first (root.go:297), so a re-run reloads, then takes the
   * reference's COPY bulk load (`pq.CopyIn`, root.go:408-511) through
-  * `copy`, one transport per partition. */
-final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
+  * `copy`, one transport per partition; the values COPY stripped of NULs
+  * land in `failureLog`'s invalidTableData.log (root.go:450-470). */
+final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory,
+                     failureLog: Option[FailureLog] = None)
     extends Migration.MigrationSink {
 
   override def executeDdl(sql: String): Try[Unit] = Try(Jdbc.executeDdl(conn, sql))
@@ -147,7 +149,11 @@ final class JdbcSink(conn: Jdbc.ConnInfo, copy: CopyTransportFactory)
     // truncate would append onto stale data on re-runs. The row count
     // comes from the write itself — no second scan of the source
     Jdbc.executeDdl(conn, s"truncate table ${Pagination.AnsiDialect.quote(table)}")
-    PgCopyLoad.copyInto(df, table, copy)
+    val (rows, stripped) = PgCopyLoad.copyIntoSampled(df, table, copy, FailureLog.InvalidSampleLimit)
+    for (fl <- failureLog; (column, value) <- stripped) fl.logError(FailureLog.InvalidTableData,
+      s"[Warning] invalid string found ! tableName:$table column value:[$value] columnName:[$column]",
+      "NUL scrubbed") // root.go:466 shape
+    rows
   }
 
   /** One `select count(*)` statement on the target, as compareDb counts

@@ -56,7 +56,8 @@ object Migration {
     def triggers: DataFrame         // S10 shape: trigger_name/action_statement
   }
 
-  /** Target-side effects (K1 bulk load, K2 DDL executor). */
+  /** Target-side effects (K1 bulk load, K2 DDL executor). `writeTable`
+    * gets source strings as read: JdbcSink's COPY encoder strips NULs. */
   trait MigrationSink {
     def executeDdl(sql: String): Try[Unit]
     def writeTable(table: String, df: DataFrame): Try[Long]
@@ -94,11 +95,10 @@ object Migration {
 
     /** Bounded concurrent map over per-table work — the reference's
       * maxParallel goroutine semaphore (root.go:106-117,138-150) as a
-      * fixed thread pool submitting Spark jobs concurrently. Each worker
-      * thread pins its jobs to a named scheduler pool (under FAIR mode
-      * tables share executors evenly; local FIFO still overlaps jobs
-      * submitted from distinct threads) and to the graft job group so one
-      * cancel stops every in-flight table. Results keep `items` order. */
+      * fixed thread pool submitting Spark jobs concurrently. Jobs from
+      * distinct worker threads overlap under the default FIFO scheduler;
+      * each worker pins its jobs to the graft job group so one cancel
+      * stops every in-flight table. Results keep `items` order. */
     private def runConcurrently[A, B](items: Seq[A], poolName: String)(f: A => B): Seq[B] =
       if (items.isEmpty) Seq.empty
       else {
@@ -111,7 +111,6 @@ object Migration {
         try {
           val futures = items.map { item =>
             Future {
-              spark.sparkContext.setLocalProperty("spark.scheduler.pool", poolName)
               spark.sparkContext.setJobGroup(Cancellation.GroupId,
                 s"graft $poolName", interruptOnCancel = true)
               f(item)
@@ -163,24 +162,20 @@ object Migration {
       (wl.size.toLong, outcomes.count(_.isFailure).toLong)
     }
 
-    /** Phase 2: row data — transform stack (§1.2) + bulk write, tables
-      * in flight concurrently up to maxParallel (preMigData +
-      * go runMigration, root.go:294-516). Each table's read→transform→
-      * write is one Spark job chain; overlapping them keeps the cluster
-      * busy when individual tables are too small to fill it. */
+    /** Phase 2: row data — scan → COPY, tables in flight concurrently up
+      * to maxParallel (preMigData + go runMigration, root.go:294-516).
+      * The sink gets the read with lowercase column names, nothing else.
+      * Each table's write is one Spark job; overlapping them keeps the
+      * cluster busy when individual tables are too small to fill it. */
     def tableData(): Unit = phase("TableData") {
       val wl = workList
       val outcomes = runConcurrently(wl, "graft-data") { t =>
-        // Try covers the source read and sample too: a table that fails
-        // to READ is one counted+logged failure (root.go:476-494 logs and
+        // Try covers the source read too: a table that fails to READ is
+        // one counted+logged failure (root.go:476-494 logs and
         // continues), never the death of the other in-flight tables
-        val r = Try {
-          val raw = ValueTransforms.lowercaseColumns(
-            source.tableData(t, cfg.tables.getOrElse(t, Nil)))
-          if (cfg.logInvalidData)
-            failureLog.foreach(logInvalidSample(_, t, raw)) // root.go:450-470
-          ValueTransforms.scrubNulAll(raw)
-        }.flatMap(df => sink.writeTable(t.toLowerCase, df))
+        val r = Try(ValueTransforms.lowercaseColumns(
+          source.tableData(t, cfg.tables.getOrElse(t, Nil))))
+          .flatMap(df => sink.writeTable(t.toLowerCase, df))
         r.failed.foreach { e => // root.go:476-477
           failureLog.foreach { fl =>
             fl.logLine(FailureLog.FailedTable, t)
@@ -190,27 +185,6 @@ object Migration {
         r
       }
       (wl.size.toLong, outcomes.count(_.isFailure).toLong)
-    }
-
-    /** Bounded NUL-scrub capture (root.go:450-470 logs each affected value
-      * to invalidTableData.log): filter + limit early-exits the scan, so
-      * the artifact costs at most one short job per table and never an
-      * unbounded collect. */
-    private def logInvalidSample(fl: FailureLog, table: String, raw: DataFrame): Unit = {
-      val stringCols = raw.schema.fields
-        .filter(_.dataType.typeName == "string").map(_.name)
-      if (stringCols.nonEmpty) {
-        val anyNul = stringCols.map(c => ValueTransforms.hasNul(col(c))).reduce(_ || _)
-        raw.filter(anyNul).limit(FailureLog.InvalidSampleLimit).collect().foreach { row =>
-          stringCols.foreach { c =>
-            val v = row.getAs[String](c)
-            if (v != null && v.indexOf('\u0000') >= 0)
-              fl.logError(FailureLog.InvalidTableData, // root.go:466 shape
-                s"[Warning] invalid string found ! tableName:$table column value:[" +
-                  v.replace("\u0000", "") + s"] columnName:[$c]", "NUL scrubbed")
-          }
-        }
-      }
     }
 
     /** `names` of one catalog relation, collected; JdbcCatalogSource's are

@@ -28,12 +28,7 @@ case class GraftConfig(
     useNvarchar2: Boolean = false,            // example.yml:16
     tables: Map[String, Seq[String]] = Map.empty, // custom-SQL mode (root.go:97-98)
     exclude: Seq[String] = Nil,               // wildcard exclusion (root.go:227-246)
-    selFromYml: Boolean = false,              // -s flag: work list from `tables:` (root.go:529,97)
-    // invalidTableData capture (root.go:450-470): the reference logs each
-    // bad value inline during its row loop; the Spark equivalent is an
-    // extra bounded sampling scan per table, so it is opt-in — enabling
-    // it costs up to one additional source read per table with no NULs.
-    logInvalidData: Boolean = false) {
+    selFromYml: Boolean = false) {            // -s flag: work list from `tables:` (root.go:529,97)
   // pageSize divides each table's key into pages: 0 would divide by zero
   // in the page planner, and a negative size would act as its absolute value
   require(pageSize >= 1, s"pageSize must be at least 1, got $pageSize")
@@ -77,8 +72,7 @@ object YamlConfig {
                 case "maxParallel" => cfg = cfg.copy(maxParallel = value.toInt)
                 case "charInLength" => cfg = cfg.copy(charInLength = value.toBoolean)
                 case "useNvarchar2" => cfg = cfg.copy(useNvarchar2 = value.toBoolean)
-                case "logInvalidData" => cfg = cfg.copy(logInvalidData = value.toBoolean)
-                case _ => () // dbType and Distributed (DELTAS.md §7) are not used
+                case _ => () // dbType, Distributed and logInvalidData (DELTAS.md §7) are not used
               }
             case Array(k, _) => section = k.trim
             case _ => ()

@@ -3,6 +3,8 @@ package graft.io
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -60,12 +62,18 @@ object PgCopyLoad {
         "speculative duplicate of a slow task would load its partition twice")
 
   /** Stream `df` into `table` via COPY. Rows are encoded with
-    * `PgCopyText.encodeRow` and flushed in ~`FlushBytes` chunks (the
-    * buffering the reference gets from pq's internal message buffer).
-    * Returns the number of rows written, counted by accumulator — no
-    * second scan of the input. */
+    * `PgCopyText.encodeRow` (NULs dropped) and flushed in ~`FlushBytes`
+    * chunks (the buffering the reference gets from pq's message buffer).
+    * Returns the rows written, counted by accumulator — no second scan. */
   def copyInto(df: DataFrame, table: String, factory: CopyTransportFactory): Long =
-    load(df, table, factory)(_ => Some(Nil))
+    load(df, table, factory, sampleLimit = 0)(_ => Some(Nil))._1
+
+  /** `copyInto` that also returns up to `sampleLimit` (column, value)
+    * pairs the encoder stripped of NULs (root.go:450-470), taken in the
+    * same pass, only on a strip and at most `sampleLimit` per partition. */
+  def copyIntoSampled(df: DataFrame, table: String, factory: CopyTransportFactory,
+                      sampleLimit: Int): (Long, Seq[(String, String)]) =
+    load(df, table, factory, sampleLimit)(_ => Some(Nil))
 
   /** Exactly-once variant for the streaming sink (CopyStream): a
     * partition whose (batchId, partitionId) is already in the ledger is
@@ -80,34 +88,45 @@ object PgCopyLoad {
   def copyIntoLedgered(df: DataFrame, table: String,
                        factory: CopyTransportFactory, ledger: BatchLedger,
                        batchId: Long): Long =
-    load(df, table, factory) { pid =>
+    load(df, table, factory, sampleLimit = 0) { pid =>
       if (ledger.committed(batchId, pid)) None
       else Some(Seq(ledger.recordSql(batchId, pid)))
-    }
+    }._1
 
   /** The one COPY write path: the speculation guard, then one transport
     * per non-empty partition. `sideSqls(partitionId)` runs once per
     * non-empty partition: None skips it, Some(sqls) loads it and commits
-    * `sqls` inside its transaction. */
-  private def load(df: DataFrame, table: String, factory: CopyTransportFactory)
-                  (sideSqls: Int => Option[Seq[String]]): Long = {
-    assertNoSpeculation(df.sparkSession.sparkContext.getConf)
-    val stmt = PgCopyText.copyStatement(table, df.columns.toSeq)
-    val rows = df.sparkSession.sparkContext.longAccumulator("graft-copy-rows")
+    * `sqls` inside its transaction. Rows and samples are accumulators. */
+  private def load(df: DataFrame, table: String, factory: CopyTransportFactory,
+                   sampleLimit: Int)
+                  (sideSqls: Int => Option[Seq[String]]): (Long, Seq[(String, String)]) = {
+    val sc = df.sparkSession.sparkContext
+    assertNoSpeculation(sc.getConf)
+    val columns = df.columns
+    val stmt = PgCopyText.copyStatement(table, columns.toSeq)
+    val rows = sc.longAccumulator("graft-copy-rows")
+    val stripped = sc.collectionAccumulator[(String, String)]("graft-copy-stripped")
     df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext)
         sideSqls(TaskContext.get().partitionId()).foreach { sqls =>
-          rows.add(streamPartition(it, stmt, factory, sqls))
+          var kept = 0
+          rows.add(streamPartition(it, stmt, factory, sqls) { (row, i) =>
+            if (kept < sampleLimit) {
+              kept += 1
+              stripped.add(columns(i) -> String.valueOf(row.get(i)).replace("\u0000", ""))
+            }
+          })
         }
     }
-    rows.value
+    (rows.value, stripped.value.asScala.take(sampleLimit).toSeq)
   }
 
   /** One partition's COPY: begin → encode/flush → commit(sideSqls), with
-    * rollback on any failure. Returns rows streamed. */
+    * rollback on any failure, `onStrip(row, i)` for each field that lost
+    * a NUL. Returns rows streamed. */
   private def streamPartition(it: Iterator[Row], stmt: String,
-                              factory: CopyTransportFactory,
-                              sideSqls: Seq[String]): Long = {
+                              factory: CopyTransportFactory, sideSqls: Seq[String])
+                             (onStrip: (Row, Int) => Unit): Long = {
     val t = factory.open()
     var ok = false
     var n = 0L
@@ -115,7 +134,7 @@ object PgCopyLoad {
       t.begin(stmt)
       val buf = new ByteArrayOutputStream(FlushBytes + 4096)
       it.foreach { row =>
-        buf.write(PgCopyText.encodeRow(row).getBytes(StandardCharsets.UTF_8))
+        buf.write(PgCopyText.encodeRow(row, onStrip(row, _)).getBytes(StandardCharsets.UTF_8))
         buf.write('\n')
         n += 1
         if (buf.size >= FlushBytes) {

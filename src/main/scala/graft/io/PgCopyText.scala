@@ -14,6 +14,8 @@ import graft.catalog.Pagination.AnsiDialect
   * The byte-level rules COPY FROM STDIN expects:
   * tab-separated fields, newline-terminated rows, `\N` for NULL, and
   * backslash escapes for `\`, tab, LF, CR inside data; bytea as `\\x` hex.
+  * PostgreSQL text cannot hold U+0000: the encoder drops it, the only
+  * place that applies the reference's NUL strip (root.go:450-470).
   * PgCopyLoad streams these rows from `foreachPartition` through a
   * CopyTransport — pgjdbc's CopyManager (bound reflectively, since that
   * driver isn't on this classpath) behind cli.JdbcSink's PostgreSQL path.
@@ -24,28 +26,18 @@ object PgCopyText {
   private val TsFormat =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS") // root.go:123 shape
 
-  /** Escape one non-null field's text per COPY TEXT rules. */
-  def escapeField(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '\t' => sb.append("\\t")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+  private val HexDigits = "0123456789abcdef".toCharArray
 
-  /** One value → COPY text field. */
-  def encodeValue(v: Any): String = v match {
-    case null => "\\N"
-    case b: Array[Byte] =>
-      "\\\\x" + b.map("%02x".format(_)).mkString // bytea hex input form
-    case b: Boolean => if (b) "t" else "f"
-    case t: Timestamp =>
-      TsFormat.format(t.toInstant.atOffset(ZoneOffset.UTC))
-    case s: String => escapeField(s)
+  /** Append one value's COPY text field to `sb`; true when the value's
+    * text lost a U+0000. */
+  private def append(sb: java.lang.StringBuilder, v: Any): Boolean = v match {
+    case null => sb.append("\\N"); false
+    case b: Array[Byte] => // bytea hex input form
+      sb.append("\\\\x")
+      b.foreach(x => sb.append(HexDigits((x >> 4) & 0xf)).append(HexDigits(x & 0xf)))
+      false
+    case b: Boolean => sb.append(if (b) 't' else 'f'); false
+    case t: Timestamp => sb.append(TsFormat.format(t.toInstant.atOffset(ZoneOffset.UTC))); false
     // non-scalar values have no COPY text form — `toString` would load
     // "WrappedArray(...)" garbage (or be rejected) target-side; fail at
     // encode time with a fixable message instead
@@ -54,12 +46,34 @@ object PgCopyText {
       throw new IllegalArgumentException(
         s"COPY text cannot encode non-scalar value of type ${v.getClass.getName}; " +
           "flatten array/struct/map columns (e.g. to_json) before the bulk load")
-    case other => escapeField(other.toString)
+    case other => // text: backslash escapes, NULs dropped
+      var stripped = false
+      other.toString.foreach {
+        case '\\' => sb.append("\\\\")
+        case '\t' => sb.append("\\t")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\u0000' => stripped = true
+        case c => sb.append(c)
+      }
+      stripped
   }
 
-  /** One row → COPY text line (no trailing newline). */
-  def encodeRow(row: Row): String =
-    (0 until row.length).map(i => encodeValue(row.get(i))).mkString("\t")
+  /** One value → COPY text field. */
+  def encodeValue(v: Any): String = encodeRow(Row(v))
+
+  /** One row → COPY text line (no trailing newline); `stripped(i)` runs
+    * for each field `i` that lost a NUL. */
+  def encodeRow(row: Row, stripped: Int => Unit): String = {
+    val sb = new java.lang.StringBuilder
+    (0 until row.length).foreach { i =>
+      if (i > 0) sb.append('\t')
+      if (append(sb, row.get(i))) stripped(i)
+    }
+    sb.toString
+  }
+
+  def encodeRow(row: Row): String = encodeRow(row, _ => ())
 
   /** The COPY statement the stream is attached to. */
   def copyStatement(table: String, columns: Seq[String]): String =

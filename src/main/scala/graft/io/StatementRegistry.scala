@@ -16,12 +16,7 @@ object StatementRegistry {
   def deregister(st: Statement): Unit = statements.remove(st)
   def activeCount: Int = statements.size
 
-  /** Cancel every registered statement; returns how many were signalled. */
-  def cancelAll(): Int = {
-    var n = 0
-    statements.forEach { st =>
-      try { st.cancel(); n += 1 } catch { case _: Throwable => () }
-    }
-    n
-  }
+  /** Cancel every registered statement; one whose cancel fails is skipped. */
+  def cancelAll(): Unit =
+    statements.forEach(st => try st.cancel() catch { case _: Throwable => () })
 }

@@ -82,8 +82,10 @@ object ParityQueries {
 
     // ----- P3: wildcard exclusion filter (root.go:227-246) ---------------
     ("q03_exclusion_filter", (s: SparkSession, dir: String) => {
-      val docs = Tables.t(s, dir, "documents")
-      Exclusion.filterExcluded(docs, "source", Seq("src1", "src1*", "*2"))
+      // the work list's own matcher; a NULL is dropped, as NULL NOT LIKE is
+      val keep = Exclusion.compiledKeep(Seq("src1", "src1*", "*2"))
+      Tables.t(s, dir, "documents")
+        .filter(udf((src: String) => src != null && keep(src)).apply(col("source")))
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
         .orderBy("source")
     }, Some("""

@@ -1,11 +1,21 @@
 package graft.catalog
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, lower}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 class ExclusionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The exclusion as a Spark Column predicate, a conjunction of NOT LIKE
+    * over lower(name): the SQL semantics `compiledKeep` must agree with. */
+  private def filterExcluded(df: DataFrame, nameCol: String, patterns: Seq[String]): DataFrame =
+    df.filter(patterns.foldLeft(lit(true))((acc, p) =>
+      // Locale.ROOT: the default locale would fold 'LOGIN*' to 'logın*'
+      // under tr_TR and silently stop matching
+      acc && !lower(col(nameCol)).like(Exclusion.toLikePattern(p).toLowerCase(java.util.Locale.ROOT))))
 
   test("wildcard rewrite * → % (root.go:237-239)") {
     assert(Exclusion.toLikePattern("*_cswysk") == "%_cswysk")
@@ -16,17 +26,22 @@ class ExclusionSpec extends AnyFunSuite {
   test("filterExcluded drops matching names, keeps the rest (example.yml:23-26)") {
     val df = Seq("log1", "log2", "audit_cswysk", "keepme", "logical")
       .toDF("table_name")
-    val kept = Exclusion.filterExcluded(df, "table_name", Seq("log1", "log2", "*_cswysk"))
+    val kept = filterExcluded(df, "table_name", Seq("log1", "log2", "*_cswysk"))
       .as[String].collect().toSet
     assert(kept == Set("keepme", "logical"))
     // empty pattern list keeps everything
-    assert(Exclusion.filterExcluded(df, "table_name", Nil).count() == 5)
+    assert(filterExcluded(df, "table_name", Nil).count() == 5)
+    // the work list's matcher keeps the same names
+    val names = Seq("log1", "log2", "audit_cswysk", "keepme", "logical")
+    assert(names.filter(Exclusion.compiledKeep(Seq("log1", "log2", "*_cswysk"))) ==
+      Seq("keepme", "logical"))
+    assert(names.filter(Exclusion.compiledKeep(Nil)) == names)
   }
 
   test("exclusion is case-insensitive, like MySQL *_ci NOT LIKE (root.go:227-246)") {
     // `exclude: LOG*` skips `log1` under MySQL's default ci collation
     val df = Seq("log1", "LOG2", "Logical", "keepme").toDF("table_name")
-    val kept = Exclusion.filterExcluded(df, "table_name", Seq("LOG*"))
+    val kept = filterExcluded(df, "table_name", Seq("LOG*"))
       .as[String].collect().toSet
     assert(kept == Set("keepme"))
     val keep = Exclusion.compiledKeep(Seq("LOG*"))
@@ -45,7 +60,7 @@ class ExclusionSpec extends AnyFunSuite {
     for (pats <- patternSets) {
       val keep = Exclusion.compiledKeep(pats)
       val driverKept = names.filter(keep).toSet
-      val sparkKept = Exclusion.filterExcluded(names.toDF("table_name"), "table_name", pats)
+      val sparkKept = filterExcluded(names.toDF("table_name"), "table_name", pats)
         .as[String].collect().toSet
       assert(driverKept == sparkKept, s"patterns=$pats")
     }

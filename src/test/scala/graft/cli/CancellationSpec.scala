@@ -1,13 +1,62 @@
 package graft.cli
 
+import java.nio.file.Files
+import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, SQLException}
+import java.util.Properties
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.catalog.Pagination
-import graft.io.StatementRegistry
+import graft.io.{Jdbc, StatementRegistry}
+
+object CancellationSpec {
+  /** A statement whose `cancel` runs `onCancel`. */
+  def cancellable(onCancel: () => Unit): java.sql.Statement =
+    java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[java.sql.Statement]), (p, m, args) => m.getName match {
+        case "cancel"   => onCancel(); null
+        case "hashCode" => Integer.valueOf(System.identityHashCode(p))
+        case "equals"   => java.lang.Boolean.valueOf(p eq args(0))
+        case _          => null
+      }).asInstanceOf[java.sql.Statement]
+
+  /** Accepts `jdbc:mysql://sweep.invalid/` URLs only and hands out `conn`,
+    * so the sweep runs with no MySQL server. */
+  final class SweepDriver(conn: Connection) extends Driver {
+    val opened = new java.util.concurrent.CopyOnWriteArrayList[Properties]()
+    override def acceptsURL(url: String): Boolean = url.startsWith("jdbc:mysql://sweep.invalid/")
+    override def connect(url: String, info: Properties): Connection =
+      if (acceptsURL(url)) { opened.add(info); conn } else null
+    override def getPropertyInfo(url: String, info: Properties): Array[DriverPropertyInfo] =
+      Array.empty
+    override def getMajorVersion: Int = 1
+    override def getMinorVersion: Int = 0
+    override def jdbcCompliant: Boolean = false
+    override def getParentLogger: java.util.logging.Logger =
+      java.util.logging.Logger.getLogger("sweep")
+  }
+}
+
+/** What the CLI does at a clean exit: the run stops the context, then the
+  * JVM runs the shutdown hook. Prints "statement cancelled" when the hook
+  * reached the registered statement. */
+object ShutdownAfterStop {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[1]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    sys.addShutdownHook(Cancellation.onShutdown(spark, Jdbc.ConnInfo("jdbc:derby:memory:unused", "", "")))
+    StatementRegistry.register(CancellationSpec.cancellable(() => println("statement cancelled")))
+    spark.stop()
+  }
+}
 
 class CancellationSpec extends AnyFunSuite {
+  import CancellationSpec._
   lazy val spark = TestSpark.spark
 
   test("cancelAll interrupts a running job group") {
@@ -47,15 +96,70 @@ class CancellationSpec extends AnyFunSuite {
 
   test("cancelAll cancels registered driver-side JDBC statements (C11)") {
     @volatile var cancelled = false
-    val st = proxy(classOf[java.sql.Statement]) {
-      case ("cancel", _) => cancelled = true; null
-      case _             => null
-    }
+    val st = cancellable(() => cancelled = true)
     StatementRegistry.register(st)
     try {
       Cancellation.cancelAll(spark)
       assert(cancelled, "registered statement not cancelled")
     } finally StatementRegistry.deregister(st)
+  }
+
+  test("onShutdown cancels registered statements; a non-MySQL source opens no sweep connection") {
+    @volatile var cancelled = false
+    val st = cancellable(() => cancelled = true)
+    StatementRegistry.register(st)
+    try Cancellation.onShutdown(spark, Jdbc.ConnInfo("jdbc:derby:memory:graftsweep;create=true", "", ""))
+    finally StatementRegistry.deregister(st)
+    assert(cancelled)
+    // a connection with create=true would have made the database
+    intercept[SQLException](DriverManager.getConnection("jdbc:derby:memory:graftsweep"))
+  }
+
+  test("onShutdown sweeps a jdbc:mysql source over one fresh connection (app.go:186-216)") {
+    val killed = scala.collection.mutable.Buffer[String]()
+    var closed = false
+    var idx = -1
+    val rs = proxy(classOf[java.sql.ResultSet]) {
+      case ("next", _)      => idx += 1; java.lang.Boolean.valueOf(idx < 1)
+      case ("getString", _) => "7"
+      case _                => null
+    }
+    val st = proxy(classOf[java.sql.Statement]) {
+      case ("executeQuery", _) => rs
+      case ("execute", args)   => killed += args(0).asInstanceOf[String]; java.lang.Boolean.TRUE
+      case _                   => null
+    }
+    val conn = proxy(classOf[Connection]) {
+      case ("createStatement", _) => st
+      case ("close", _)           => closed = true; null
+      case _                      => null
+    }
+    val driver = new SweepDriver(conn)
+    DriverManager.registerDriver(driver)
+    try Cancellation.onShutdown(spark, Jdbc.ConnInfo("jdbc:mysql://sweep.invalid/db", "u", "p"))
+    finally DriverManager.deregisterDriver(driver)
+    assert(killed.toSeq == Seq("kill query 7"))
+    assert(closed)
+    assert(driver.opened.size == 1)
+    val props = driver.opened.get(0)
+    assert(props.getProperty("user") == "u" && props.getProperty("connectTimeout") == "5000")
+  }
+
+  test("the shutdown hook after spark.stop() cancels statements and does not throw") {
+    val dir = graft.TempScratch.fresh("graft-hook")
+    val out = dir.resolve("out").toFile
+    val err = dir.resolve("err").toFile
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx512m") ++ jvmFlags ++
+      Seq("-cp", System.getProperty("java.class.path"), ShutdownAfterStop.getClass.getName.stripSuffix("$"))
+    val p = new ProcessBuilder(cmd: _*).redirectOutput(out).redirectError(err).start()
+    assert(p.waitFor(120, TimeUnit.SECONDS), "child JVM did not exit")
+    val stdout = Files.readString(out.toPath)
+    val stderr = Files.readString(err.toPath)
+    assert(p.exitValue == 0, stderr)
+    assert(stdout.contains("statement cancelled"), stderr)
+    assert(!stderr.contains("IllegalStateException"), stderr)
   }
 
   test("killTagged sweeps PROCESSLIST for tagged queries (app.go:186-202)") {

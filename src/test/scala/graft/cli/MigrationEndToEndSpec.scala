@@ -9,6 +9,8 @@ import scala.util.{Success, Try}
 import org.apache.spark.ListenerBusIntrospect
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.scalatest.LoneElement._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -220,10 +222,17 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     // phase workers inherit, so no other suite's job is counted
     val sc = spark.sparkContext
     val jobs = mutable.Map[String, Int]().withDefaultValue(0)
+    val dataGroups = mutable.Buffer[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.step")))
-          .foreach(step => jobs.synchronized(jobs(step) += 1))
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("graft.test.step")).foreach { step =>
+            jobs.synchronized {
+              jobs(step) += 1
+              if (step == "TableData") dataGroups += p.getProperty("spark.jobGroup.id")
+            }
+          }
+        }
     }
     def step(name: String)(body: => Unit): Unit = {
       sc.setLocalProperty("graft.test.step", name)
@@ -260,7 +269,88 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     Seq("TableStructure", "Sequence", "Index", "ForeignKey", "View", "Trigger", "Compare")
       .foreach(phase => assert(jobs(phase) == 0, s"$phase: ${jobs(phase)} jobs"))
     assert(jobs("TableData") <= runner.workList.size, s"TableData: ${jobs("TableData")} jobs")
+    // every data job runs in the group the Ctrl-C hook cancels
+    assert(dataGroups.nonEmpty && dataGroups.forall(_ == Cancellation.GroupId), dataGroups)
     assert(query1(tgtUrl, "SELECT COUNT(*) FROM \"people\"") == 57L)
+  }
+
+  test("NULs in two string columns: COPY strips them and logs invalidTableData, no option set") {
+    setupSource()
+    // a second catalog schema, so the other tests' work lists stay as they are
+    exec(srcUrl)("DROP TABLE NULTAB",
+      "CREATE TABLE NULTAB (ID INT NOT NULL PRIMARY KEY, A VARCHAR(40) NOT NULL, " +
+        "B VARCHAR(40) NOT NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.TABLES VALUES ('nuls', 'NULTAB', 'BASE TABLE', NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.KEY_COLUMN_USAGE VALUES ('PRIMARY', 'nuls', 'NULTAB', " +
+        "'ID', 1, NULL, NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.COLUMNS VALUES " +
+        "('nuls', 'NULTAB', 'ID', 'int', NULL, NULL, NULL, 'NO', NULL, 1, ''), " +
+        "('nuls', 'NULTAB', 'A', 'varchar', 40, NULL, NULL, 'NO', NULL, 2, ''), " +
+        "('nuls', 'NULTAB', 'B', 'varchar', 40, NULL, NULL, 'NO', NULL, 3, '')")
+    // 30 rows over 3 pages; every A and every third B carry NULs, so 40
+    // values lose one, twice the log's cap
+    val source = (1 to 30).map { i =>
+      (i, s"a\u0000$i\u0000", if (i % 3 == 0) s"\u0000b\t$i" else s"b$i")
+    }
+    val c = DriverManager.getConnection(srcUrl)
+    try {
+      val ps = c.prepareStatement("INSERT INTO NULTAB VALUES (?, ?, ?)")
+      source.foreach { case (i, a, b) =>
+        ps.setInt(1, i); ps.setString(2, a); ps.setString(3, b); ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally c.close()
+    exec(tgtUrl)("DROP TABLE \"nultab\"")
+
+    val cfg = GraftConfig(src = ConnConfig(database = "nuls"), pageSize = 10)
+    val flog = new FailureLog(graft.TempScratch.fresh("graft-nul"))
+    val jdbcSink = new JdbcSink(Jdbc.ConnInfo(tgtUrl, "", ""),
+      new DerbyCopyTransportFactory(tgtUrl), Some(flog))
+    val handed = mutable.Buffer[DataFrame]()
+    val sink = new Migration.MigrationSink {
+      override def executeDdl(sql: String): Try[Unit] = jdbcSink.executeDdl(sql)
+      override def writeTable(table: String, df: DataFrame): Try[Long] = {
+        synchronized(handed += df)
+        jdbcSink.writeTable(table, df)
+      }
+      override def rowCount(table: String): Option[Long] = jdbcSink.rowCount(table)
+    }
+    val runner = new Migration.Runner(spark, cfg,
+      new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl)), sink, Some(flog))
+    assert(runner.workList == Seq("NULTAB"))
+    runner.tableStructure()
+    runner.tableData()
+    assert(runner.report().collect().forall(_.getLong(2) == 0L),
+      flog.read(FailureLog.TableCreateFailed) ++ flog.read(FailureLog.ErrorTableData))
+
+    // the sink gets the paged JDBC read itself: no regexp pass over it
+    val plan = handed.loneElement.queryExecution.optimizedPlan
+    assert(plan.find(_.expressions.exists(_.find(_.isInstanceOf[RegExpReplace]).isDefined)).isEmpty,
+      plan.treeString)
+
+    // target = source with NULs removed
+    val tc = DriverManager.getConnection(tgtUrl)
+    val target = try {
+      val rs = tc.createStatement().executeQuery("SELECT \"id\", \"a\", \"b\" FROM \"nultab\"")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getInt(1), r.getString(2), r.getString(3))).toVector.sortBy(_._1)
+    } finally tc.close()
+    def strip(v: String) = v.replace("\u0000", "")
+    assert(target == source.map { case (i, a, b) => (i, strip(a), strip(b)) })
+
+    // invalidTableData.log: the reference's line shape (root.go:466),
+    // capped, each a stripped value as it landed in the target
+    val invalid = flog.read(FailureLog.InvalidTableData)
+    assert(invalid.size == FailureLog.InvalidSampleLimit)
+    val Line = ("""\[Warning\] invalid string found ! tableName:nultab column value:\[(.*)\] """ +
+      """columnName:\[(a|b)\] -- ErrorInfo NUL scrubbed""").r
+    val stripped = source.flatMap { case (_, a, b) => Seq("a" -> a, "b" -> b) }
+      .collect { case (col, v) if v.contains('\u0000') => (col, strip(v)) }.toSet
+    invalid.foreach {
+      case Line(v, col) => assert(stripped((col, v)), s"$col=$v")
+      case other => fail(s"unexpected line: $other")
+    }
+    assert(flog.read(FailureLog.ErrorTableData).isEmpty)
   }
 
   test("columns and primaryKeyCols read one catalog snapshot per source") {

@@ -44,13 +44,14 @@ class MigrationSpec extends AnyFunSuite {
   private class RecordingSink extends Migration.MigrationSink {
     val ddl = mutable.ArrayBuffer[String]()
     val written = mutable.Map[String, Array[org.apache.spark.sql.Row]]()
+    val frames = mutable.Map[String, DataFrame]()
     var failDdlContaining: Option[String] = None
     override def executeDdl(sql: String): Try[Unit] =
       if (failDdlContaining.exists(sql.contains)) Failure(new RuntimeException("boom"))
       else synchronized { ddl += sql; Success(()) }
     override def writeTable(table: String, df: DataFrame): Try[Long] = Try {
       val rows = df.collect()
-      synchronized { written(table) = rows }
+      synchronized { written(table) = rows; frames(table) = df }
       rows.length.toLong
     }
     override def rowCount(table: String): Option[Long] =
@@ -71,9 +72,11 @@ class MigrationSpec extends AnyFunSuite {
     // structure DDL correct
     assert(sink.ddl.contains(
       """create table "t1" ("id" int not null, "name" varchar(20) null)"""))
-    // data written lowercase-named, NUL-scrubbed
+    // data written lowercase-named and as read: NULs are the COPY
+    // encoder's to strip (PgCopyTextSpec, MigrationEndToEndSpec)
+    assert(sink.frames("t1").columns.toSeq == Seq("id", "name"))
     val rows = sink.written("t1").map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
-    assert(rows.toSeq == Seq((1, "a"), (2, "b")))
+    assert(rows.toSeq == Seq((1, "a\u0000"), (2, "b")))
     // DDL-object phases produced statements
     assert(sink.ddl.exists(_.startsWith("create sequence seq_t1_id")))
     assert(sink.ddl.exists(_.contains("add primary key (id)")))
@@ -125,14 +128,12 @@ class MigrationSpec extends AnyFunSuite {
     assert(r2.run(dataOnly = true).collect().map(_.getString(0)).toSeq == Seq("TableData"))
   }
 
-  test("K3 artifacts: failed DDL and scrubbed NULs land in the run's log dir") {
+  test("K3 artifacts: failed DDL lands in the run's log dir") {
     val base = graft.TempScratch.fresh("graft-k3")
     val flog = new FailureLog(base)
     val sink = new RecordingSink
     sink.failDdlContaining = Some("create sequence")
-    // bad-value capture is opt-in (costs a bounded sampling scan)
-    val runner = new Migration.Runner(spark, cfg.copy(logInvalidData = true),
-      fixtureSource, sink, Some(flog))
+    val runner = new Migration.Runner(spark, cfg, fixtureSource, sink, Some(flog))
     runner.sequences()
     runner.tableData()
     // failed-DDL artifact: the statement verbatim + the error, replayable
@@ -140,10 +141,8 @@ class MigrationSpec extends AnyFunSuite {
     assert(seqLog.size == 1)
     assert(seqLog.head.startsWith("create sequence seq_t1_id"))
     assert(seqLog.head.endsWith(" -- ErrorInfo boom"))
-    // NUL-scrub artifact: the reference's exact message shape (root.go:466)
-    val invalid = flog.read(FailureLog.InvalidTableData)
-    assert(invalid == Seq("[Warning] invalid string found ! tableName:t1 " +
-      "column value:[a] columnName:[name] -- ErrorInfo NUL scrubbed"))
+    // the NUL log is the COPY sink's (MigrationEndToEndSpec), not the Runner's
+    assert(flog.read(FailureLog.InvalidTableData).isEmpty)
     // nothing else failed → no other artifacts
     assert(flog.read(FailureLog.FailedTable).isEmpty)
     assert(flog.read(FailureLog.ErrorTableData).isEmpty)
@@ -184,8 +183,9 @@ class MigrationSpec extends AnyFunSuite {
     assert(row.getString(0) == "TableData")
     assert(row.getLong(1) == n && row.getLong(2) == 0L) // same report shape, no failures
     assert(sink.written.keySet == names.toSet)
-    // transforms still applied on every concurrent branch
-    assert(sink.written.values.forall(_.map(r => r.getString(1)).sorted.sameElements(Array("a", "b"))))
+    // every concurrent branch hands its sink the rows as read
+    assert(sink.written.values.forall(_.map(r => r.getString(1)).sorted
+      .sameElements(Array("a\u0000", "b"))))
   }
 
   test("compare overlaps per-table count jobs (compare.go + maxParallel)") {

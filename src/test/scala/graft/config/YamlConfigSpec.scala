@@ -22,6 +22,7 @@ class YamlConfigSpec extends AnyFunSuite {
                |useNvarchar2: true
                |Distributed: false
                |dbType: Gauss
+               |logInvalidData: true
                |tables:
                |  test1:
                |    - select * from test1

@@ -31,9 +31,9 @@ class DerbyCopyTransport(url: String) extends CopyTransport {
     try {
       val types = ps.getParameterMetaData
       buf.toString.split("\n").filter(_.nonEmpty).foreach { line =>
-        line.split("\t", -1).zipWithIndex.foreach { case (field, i) =>
+        DerbyCopyTransport.decodeLine(line).zipWithIndex.foreach { case (field, i) =>
           val t = types.getParameterType(i + 1)
-          DerbyCopyTransport.decode(field) match {
+          field match {
             case None => ps.setNull(i + 1, t)
             case Some(v) if t == Types.BOOLEAN => ps.setBoolean(i + 1, v == "t")
             case Some(v) => ps.setString(i + 1, v)
@@ -63,6 +63,9 @@ object DerbyCopyTransport {
       s"INSERT INTO $table (${names.mkString(", ")}) VALUES (${names.map(_ => "?").mkString(", ")})"
     case other => throw new IllegalArgumentException(s"not a COPY statement: $other")
   }
+
+  /** One COPY text line (no newline) → its fields, each as `decode`. */
+  def decodeLine(line: String): Seq[Option[String]] = line.split("\t", -1).toSeq.map(decode)
 
   /** One COPY text field: `\N` → None, else the value with `\\`, `\t`,
     * `\n` and `\r` unescaped. */

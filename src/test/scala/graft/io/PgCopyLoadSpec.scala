@@ -83,6 +83,25 @@ class PgCopyLoadSpec extends AnyFunSuite {
     assert(lines.map(_.takeWhile(_ != '\t').toLong).sorted.toSeq == (1L to 1000L))
   }
 
+  test("NULs are stripped in the COPY pass, which samples at most the limit of them") {
+    // 2 partitions x 6 rows, each row with a NUL in `a` and every other
+    // row one in `b` too: 18 stripped values, 4 kept per partition
+    val df = (1 to 12).map(i => (i.toLong, s"a\u0000$i", if (i % 2 == 0) s"\u0000b$i" else "b"))
+      .toDF("id", "a", "b").repartition(2)
+    val (n, stripped) = PgCopyLoad.copyIntoSampled(df, "t6", new FakeFactory("nul"), 4)
+    assert(n == 12L)
+    val lines = payload("nul").split("\n", -1).filter(_.nonEmpty)
+    assert(lines.length == 12 && !lines.exists(_.contains('\u0000')))
+    assert(lines.map(_.split("\t").toSeq).toSet == (1 to 12).map(i =>
+      Seq(i.toString, s"a$i", if (i % 2 == 0) s"b$i" else "b")).toSet)
+    assert(stripped.size == 4)
+    val sampled = (1 to 12).flatMap(i => Seq("a" -> s"a$i") ++ (if (i % 2 == 0) Seq("b" -> s"b$i") else Nil))
+    assert(stripped.forall(sampled.contains), stripped)
+    // copyInto strips the same way and samples nothing
+    assert(PgCopyLoad.copyInto(df, "t6", new FakeFactory("nul2")) == 12L)
+    assert(payload("nul2").split("\n").sorted.sameElements(lines.sorted))
+  }
+
   test("rollback (not commit) on transport failure; job fails") {
     val df = Seq((1L, "x")).toDF("id", "v").coalesce(1)
     intercept[Exception] {

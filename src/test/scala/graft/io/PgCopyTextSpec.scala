@@ -1,6 +1,8 @@
 package graft.io
 
 import java.sql.Timestamp
+import java.time.{Instant, LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
@@ -8,9 +10,9 @@ import org.apache.spark.sql.Row
 class PgCopyTextSpec extends AnyFunSuite {
 
   test("escaping: backslash, tab, newline, CR") {
-    assert(PgCopyText.escapeField("a\\b") == "a\\\\b")
-    assert(PgCopyText.escapeField("a\tb\nc\rd") == "a\\tb\\nc\\rd")
-    assert(PgCopyText.escapeField("plain") == "plain")
+    assert(PgCopyText.encodeValue("a\\b") == "a\\\\b")
+    assert(PgCopyText.encodeValue("a\tb\nc\rd") == "a\\tb\\nc\\rd")
+    assert(PgCopyText.encodeValue("plain") == "plain")
   }
 
   test("value encoding: NULL, bytea, boolean, timestamp") {
@@ -22,6 +24,74 @@ class PgCopyTextSpec extends AnyFunSuite {
       == "2024-01-02 03:04:05.123456")
     assert(PgCopyText.encodeValue(42) == "42")
     assert(PgCopyText.encodeValue(1.5) == "1.5")
+  }
+
+  test("escaping drops U+0000 and reports each field it stripped") {
+    assert(PgCopyText.encodeValue("a\u0000b\u0000") == "ab")
+    assert(PgCopyText.encodeValue("\u0000") == "")
+    val stripped = scala.collection.mutable.Buffer[Int]()
+    assert(PgCopyText.encodeRow(Row("x\u0000", 1L, null, "y", "\u0000\t"), stripped += _)
+      == "x\t1\t\\N\ty\t\\t")
+    assert(stripped.toSeq == Seq(0, 4))
+  }
+
+  test("bytea: every byte 0x00-0xFF encodes as two lowercase hex digits") {
+    val all = (0 to 255).map(_.toByte).toArray
+    val enc = PgCopyText.encodeValue(all)
+    assert(enc == "\\\\x" + all.map("%02x".format(_)).mkString)
+    assert(enc.drop(3).grouped(2).map(Integer.parseInt(_, 16).toByte).toSeq == all.toSeq)
+    assert(PgCopyText.encodeValue(Array.emptyByteArray) == "\\\\x")
+  }
+
+  test("property: decoding encodeRow's line gives back the row, NULs removed") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Test.{check, Parameters}
+    val ts = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    // strings mix plain chars with everything the encoder rewrites:
+    // NUL, tab, LF, CR, backslash, a literal \N, and non-BMP code points
+    val piece = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf("\u0000", "\t", "\n", "\r", "\\", "\\N", "é", " "),
+      1 -> Gen.choose(0x10000, 0x10FFFF).map(cp => new String(Character.toChars(cp))))
+    val value: Gen[Any] = Gen.oneOf(
+      Gen.const(null),
+      Gen.listOf(piece).map(_.mkString),
+      Gen.long.map(Long.box),
+      Gen.zip(Gen.choose(-1000000000000L, 1000000000000L), Gen.choose(0, 8))
+        .map { case (u, sc) => java.math.BigDecimal.valueOf(u, sc) },
+      // 1900-01-01 .. 2100-01-01 UTC, microsecond precision
+      Gen.choose(-2208988800000000L, 4102444800000000L)
+        .map(us => Timestamp.from(Instant.EPOCH.plusNanos(us * 1000))),
+      Gen.oneOf(true, false).map(Boolean.box),
+      Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray))
+    // a decoded field read back as the type of the value it came from
+    def readBack(like: Any, field: String): Any = like match {
+      case _: String => field
+      case _: java.lang.Long => field.toLong
+      case _: java.math.BigDecimal => new java.math.BigDecimal(field)
+      case _: Timestamp => Timestamp.from(LocalDateTime.parse(field, ts).toInstant(ZoneOffset.UTC))
+      case _: java.lang.Boolean => field match { case "t" => true; case "f" => false }
+      case _: Array[Byte] =>
+        assert(field.startsWith("\\x"))
+        field.drop(2).grouped(2).map(Integer.parseInt(_, 16).toByte).toVector
+    }
+    def scrubbed(v: Any): Any = v match {
+      case s: String => s.replace("\u0000", "")
+      case b: Array[Byte] => b.toVector
+      case other => other
+    }
+    val prop = Prop.forAll(Gen.nonEmptyListOf(value)) { values =>
+      val line = PgCopyText.encodeRow(Row.fromSeq(values))
+      val fields = graft.io.DerbyCopyTransport.decodeLine(line)
+      !line.exists(c => c == '\n' || c == '\r' || c == '\u0000') &&
+        fields.size == values.size &&
+        values.zip(fields).forall {
+          case (null, f) => f.isEmpty
+          case (v, f) => f.exists(readBack(v, _) == scrubbed(v))
+        }
+    }
+    val res = check(Parameters.default.withMinSuccessfulTests(300).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("row encoding joins fields with tabs, NULLs inline") {
