@@ -17,6 +17,16 @@ sbt -batch test 2>&1 | tee "$log" | tail -4
 grep -q 'All tests passed' "$log" || {
   echo "[round_close] FULL SUITE NOT GREEN — refusing to bench"; exit 1; }
 
+# The value path must not assume a UTC JVM: the suites that encode and
+# migrate dates run again with the JVM's default zone set to +08:00.
+zlog=/tmp/round_close_zone_${tag}.log
+echo "[round_close] value-path suites under -Duser.timezone=Asia/Shanghai..."
+SPARK_GRAFT_EXTRA_JAVA_OPTS=-Duser.timezone=Asia/Shanghai sbt -batch \
+  "testOnly graft.io.PgCopyTextSpec graft.io.JdbcReadSpec graft.transform.ValueTransformsSpec graft.cli.MigrationEndToEndSpec" \
+  2>&1 | tee "$zlog" | tail -4
+grep -q 'All tests passed' "$zlog" || {
+  echo "[round_close] ZONE PASS NOT GREEN — refusing to bench"; exit 1; }
+
 counts=$(grep -E 'Tests: succeeded' "$log" | tail -1 | sed 's/^\[info\] //')
 suites=$(grep -E 'Suites: completed' "$log" | tail -1 | sed 's/^\[info\] //')
 mkdir -p bench

@@ -40,8 +40,10 @@ object Pagination {
 
     /** How a key column of JDBC type `sqlType` is read from the boundary
       * probe and written back as SQL literal text; None when the type has
-      * no literal form here. Dates and timestamps use the JDBC escapes,
-      * which both drivers translate. */
+      * no literal form here. Dates and timestamps are the driver's text
+      * inside the JDBC escapes, which both drivers translate, and not a
+      * JVM-zone Date or Timestamp: Connector/J's text is the server's, so
+      * a key in a DST gap keeps its wall clock. */
     def literal(sqlType: Int): Option[(ResultSet, Int) => String] = sqlType match {
       case Types.TINYINT | Types.SMALLINT | Types.INTEGER | Types.BIGINT |
            Types.DECIMAL | Types.NUMERIC =>
@@ -49,8 +51,8 @@ object Pagination {
       case Types.CHAR | Types.VARCHAR | Types.LONGVARCHAR |
            Types.NCHAR | Types.NVARCHAR | Types.LONGNVARCHAR =>
         Some((rs, i) => string(rs.getString(i)))
-      case Types.DATE => Some((rs, i) => s"{d '${rs.getDate(i)}'}")
-      case Types.TIMESTAMP => Some((rs, i) => s"{ts '${rs.getTimestamp(i)}'}")
+      case Types.DATE => Some((rs, i) => s"{d '${rs.getString(i)}'}")
+      case Types.TIMESTAMP => Some((rs, i) => s"{ts '${rs.getString(i)}'}")
       case _ => None
     }
   }

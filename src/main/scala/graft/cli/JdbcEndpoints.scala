@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.StructType
 import graft.catalog.Pagination
 import graft.config.GraftConfig
 import graft.io.{CopyTransportFactory, Jdbc, PgCopyLoad}
+import graft.transform.ValueTransforms
 import graft.types.ColumnMeta
 
 /** Live JDBC wiring for the Migration pipeline. JdbcCatalogSource reads
@@ -78,9 +79,18 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
 
   /** S1 (root.go:389-516): PK-partitioned page read — keyset pages in
     * place of the reference's deferred-join page SQLs
-    * (prepareSqlStr, root.go:335-386), planned by Jdbc.readTable. */
+    * (prepareSqlStr, root.go:335-386), planned by Jdbc.readTable — with
+    * each value read and converted as the catalog type says
+    * (ValueTransforms.readType, root.go:430-471). */
   override def tableData(table: String): DataFrame =
-    Jdbc.readTable(spark, conn, table, primaryKeyCols(table), cfg.pageSize)
+    valued(table)(Jdbc.readTable(spark, conn, table, primaryKeyCols(table), cfg.pageSize, _))
+
+  /** `read(customSchema)` of `table`'s columns, typed and converted by the
+    * value rule. */
+  private def valued(table: String)(read: String => DataFrame): DataFrame = {
+    val cols = columns(table)
+    ValueTransforms.sourceValues(read(ValueTransforms.customSchema(cols)), cols)
+  }
 
   /** compareDb's source count (cmd/compare.go:102-132): one tagged
     * `count(*)` statement over driver-side JDBC, cancellable on Ctrl-C. */
@@ -96,8 +106,10 @@ final class JdbcCatalogSource(spark: SparkSession, cfg: GraftConfig,
     * unit — and the slices union into the table's DataFrame. */
   override def tableData(table: String, customSqls: Seq[String]): DataFrame =
     if (customSqls.isEmpty) tableData(table)
-    else customSqls.map(sql => spark.read.jdbc(conn.url, s"($sql) slice", conn.streamProps))
-      .reduce(_ unionByName _)
+    else valued(table) { schema =>
+      val props = conn.readProps(schema)
+      customSqls.map(sql => spark.read.jdbc(conn.url, s"($sql) slice", props)).reduce(_ unionByName _)
+    }
 
   /** S7 (tablemeta.go:205-218). */
   override def statistics: DataFrame =

@@ -39,6 +39,14 @@ object Jdbc {
       }
       p
     }
+
+    /** Properties of a streamed read whose columns are typed by Spark's
+      * JDBC `customSchema` option (`""` keeps every column's own type). */
+    def readProps(customSchema: String): Properties = {
+      val p = streamProps
+      p.setProperty("customSchema", customSchema)
+      p
+    }
   }
 
   /** Page-parallel table read, the one page planner: one keyset
@@ -46,16 +54,16 @@ object Jdbc {
     * connections bounded by the scheduler like the reference's
     * maxParallel semaphore (root.go:106-117). No PK (root.go:356-359), a
     * single page or a key type without a literal form reads as one full
-    * scan. */
+    * scan. `customSchema` retypes columns as `ConnInfo.readProps` says. */
   def readTable(spark: SparkSession, conn: ConnInfo, table: String,
-                pkCols: Seq[String], pageSize: Long): DataFrame = {
+                pkCols: Seq[String], pageSize: Long, customSchema: String = ""): DataFrame = {
     val dialect = Pagination.dialectFor(conn.url)
     val relation = dialect.quote(table)
     val keys = pkCols.map(dialect.quote)
     val bounds = if (keys.isEmpty) Nil else keyBoundaries(conn, dialect, relation, keys, pageSize)
-    if (bounds.isEmpty) spark.read.jdbc(conn.url, relation, conn.streamProps)
-    else spark.read.jdbc(conn.url, relation,
-      Pagination.keysetPredicates(keys, bounds), conn.streamProps)
+    val props = conn.readProps(customSchema)
+    if (bounds.isEmpty) spark.read.jdbc(conn.url, relation, props)
+    else spark.read.jdbc(conn.url, relation, Pagination.keysetPredicates(keys, bounds), props)
   }
 
   /** One driver-side pass over the key in key order, keeping the rendered

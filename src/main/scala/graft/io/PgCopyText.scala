@@ -1,9 +1,5 @@
 package graft.io
 
-import java.sql.Timestamp
-import java.time.format.DateTimeFormatter
-import java.time.ZoneOffset
-
 import org.apache.spark.sql.Row
 
 import graft.catalog.Pagination.AnsiDialect
@@ -16,15 +12,16 @@ import graft.catalog.Pagination.AnsiDialect
   * backslash escapes for `\`, tab, LF, CR inside data; bytea as `\\x` hex.
   * PostgreSQL text cannot hold U+0000: the encoder drops it, the only
   * place that applies the reference's NUL strip (root.go:450-470).
+  * Dates, times and decimals of a migrated table arrive as the source's
+  * text (ValueTransforms.readType); a `java.sql.Timestamp` that still
+  * arrives (a computed custom-SQL column, CopyStream) is written by its
+  * `toString`, the JVM-local wall clock Spark's JDBC reader built it from.
   * PgCopyLoad streams these rows from `foreachPartition` through a
   * CopyTransport — pgjdbc's CopyManager (bound reflectively, since that
   * driver isn't on this classpath) behind cli.JdbcSink's PostgreSQL path.
   * The encoding, the part with correctness content, is tested here.
   */
 object PgCopyText {
-
-  private val TsFormat =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS") // root.go:123 shape
 
   private val HexDigits = "0123456789abcdef".toCharArray
 
@@ -37,7 +34,6 @@ object PgCopyText {
       b.foreach(x => sb.append(HexDigits((x >> 4) & 0xf)).append(HexDigits(x & 0xf)))
       false
     case b: Boolean => sb.append(if (b) 't' else 'f'); false
-    case t: Timestamp => sb.append(TsFormat.format(t.toInstant.atOffset(ZoneOffset.UTC))); false
     // non-scalar values have no COPY text form — `toString` would load
     // "WrappedArray(...)" garbage (or be rejected) target-side; fail at
     // encode time with a fixable message instead

@@ -2,12 +2,57 @@ package graft.transform
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+
+import graft.types.ColumnMeta
 
 /** The reference's per-value runtime transforms (cmd/root.go:430-471)
   * re-expressed as codegen'd Column expressions — no UDFs, so every
   * transform stays inside WholeStageCodegen at any scale.
   */
 object ValueTransforms {
+
+  /** How a source column of MySQL type `dataType` is read, when not as
+    * Spark's JDBC reader types it. The reference scans every value as
+    * text and converts only BLOB, GEOMETRY and BIT (root.go:430-471).
+    * Dates, times and decimals read as the driver's text: no JVM-zone
+    * Timestamp and no 38-digit DecimalType. GEOMETRY and BIT read as
+    * bytes for `geomHex`/`bitHex`. */
+  def readType(dataType: String): Option[DataType] = dataType match {
+    case "date" | "datetime" | "timestamp" | "time" | "decimal" => Some(StringType)
+    case "geometry" | "bit" => Some(BinaryType)
+    case _ => None
+  }
+
+  /** Spark JDBC's `customSchema` option for a table of catalog columns
+    * `cols`: the columns `readType` reads differently, with quoted names. */
+  def customSchema(cols: Seq[ColumnMeta]): String =
+    cols.flatMap(c => readType(c.dataType).map(t => s"${quote(c.columnName)} ${t.sql}")).mkString(", ")
+
+  /** A name as Spark's parser reads it back whole, spaces and backticks
+    * included. */
+  private def quote(name: String): String = s"`${name.replace("`", "``")}`"
+
+  /** How one value crosses to COPY, when not as read: GEOMETRY and BIT
+    * as hex text; a zero date (`0000-00-00…`) as NULL, which a
+    * PostgreSQL date cannot hold (DELTAS §1). */
+  private def convert(dataType: String): Option[Column => Column] = dataType match {
+    case "geometry" => Some(geomHex)
+    case "bit" => Some(bitHex)
+    case "date" | "datetime" | "timestamp" => Some(c => when(!c.startsWith("0000-00-00"), c))
+    case _ => None
+  }
+
+  /** `convert` over a read of `cols`' table, columns matched by
+    * case-insensitive name; the read itself when no column converts. */
+  def sourceValues(df: DataFrame, cols: Seq[ColumnMeta]): DataFrame = {
+    val converts = cols.flatMap(c => convert(c.dataType).map(c.columnName.toLowerCase -> _)).toMap
+    if (!df.columns.exists(n => converts.contains(n.toLowerCase))) df
+    else df.select(df.columns.toSeq.map { n =>
+      val c = col(quote(n))
+      converts.get(n.toLowerCase).fold(c)(_(c)).as(n)
+    }: _*)
+  }
 
   /** GEOMETRY: hex-encode, strip the leading 8 hex chars (MySQL's 4-byte
     * SRID prefix) → WKB hex (cmd/root.go:437-438). Output lowercase to

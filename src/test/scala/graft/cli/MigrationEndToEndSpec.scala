@@ -2,13 +2,15 @@ package graft.cli
 
 import java.nio.file.Files
 import java.sql.DriverManager
+import java.util.concurrent.TimeUnit
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.{Success, Try}
 
 import org.apache.spark.ListenerBusIntrospect
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.scalatest.LoneElement._
 import org.scalatest.funsuite.AnyFunSuite
@@ -46,6 +48,42 @@ object MigrationEndToEndSpec {
     } finally c.close()
   }
 
+  /** An information_schema with MySQL's shape, made again from empty. */
+  val catalogDdl: Seq[String] = Seq(
+    "DROP TABLE INFORMATION_SCHEMA.TABLES", "DROP TABLE INFORMATION_SCHEMA.COLUMNS",
+    "DROP TABLE INFORMATION_SCHEMA.KEY_COLUMN_USAGE", "DROP TABLE INFORMATION_SCHEMA.STATISTICS",
+    "DROP TABLE INFORMATION_SCHEMA.REFERENTIAL_CONSTRAINTS", "DROP TABLE INFORMATION_SCHEMA.VIEWS",
+    "DROP TABLE INFORMATION_SCHEMA.TRIGGERS",
+    "CREATE SCHEMA INFORMATION_SCHEMA",
+    "CREATE TABLE INFORMATION_SCHEMA.TABLES (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
+      "TABLE_TYPE VARCHAR(32), AUTO_INCREMENT BIGINT)",
+    "CREATE TABLE INFORMATION_SCHEMA.COLUMNS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
+      "COLUMN_NAME VARCHAR(64), DATA_TYPE VARCHAR(32), CHARACTER_MAXIMUM_LENGTH BIGINT, " +
+      "NUMERIC_PRECISION INT, NUMERIC_SCALE INT, IS_NULLABLE VARCHAR(3), " +
+      "COLUMN_DEFAULT VARCHAR(64), ORDINAL_POSITION INT, EXTRA VARCHAR(32))",
+    "CREATE TABLE INFORMATION_SCHEMA.KEY_COLUMN_USAGE (CONSTRAINT_NAME VARCHAR(64), " +
+      "TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), COLUMN_NAME VARCHAR(64), " +
+      "ORDINAL_POSITION INT, REFERENCED_TABLE_NAME VARCHAR(64), REFERENCED_COLUMN_NAME VARCHAR(64))",
+    "CREATE TABLE INFORMATION_SCHEMA.STATISTICS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
+      "INDEX_NAME VARCHAR(64), NON_UNIQUE INT, SEQ_IN_INDEX INT, COLUMN_NAME VARCHAR(64), " +
+      "INDEX_TYPE VARCHAR(16))",
+    "CREATE TABLE INFORMATION_SCHEMA.REFERENTIAL_CONSTRAINTS (CONSTRAINT_SCHEMA VARCHAR(64), " +
+      "CONSTRAINT_NAME VARCHAR(64), UPDATE_RULE VARCHAR(16), DELETE_RULE VARCHAR(16))",
+    "CREATE TABLE INFORMATION_SCHEMA.VIEWS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
+      "VIEW_DEFINITION VARCHAR(256))",
+    "CREATE TABLE INFORMATION_SCHEMA.TRIGGERS (TRIGGER_SCHEMA VARCHAR(64), TRIGGER_NAME VARCHAR(64), " +
+      "ACTION_STATEMENT VARCHAR(256))")
+
+  /** The rows of `sql`, every column read with `getString`. */
+  def strings(url: String, sql: String): Seq[Seq[String]] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(sql)
+      val n = rs.getMetaData.getColumnCount
+      Iterator.continually(rs).takeWhile(_.next()).map(r => (1 to n).map(r.getString)).toVector
+    } finally c.close()
+  }
+
   def query1(url: String, sql: String): Long = {
     val c = DriverManager.getConnection(url)
     try {
@@ -55,42 +93,107 @@ object MigrationEndToEndSpec {
   }
 }
 
+/** A migration of dates, times and decimals in a JVM whose default zone
+  * is not UTC (run with `-Duser.timezone=Europe/Berlin`): a Derby source
+  * whose values are SQL literal text, among them the DST-gap wall clock
+  * 2024-03-31 02:30:00.5 and 1890-01-01, inside Berlin's LMT era, and a
+  * TIMESTAMP-keyed table whose second page opens at the gap clock. Loads
+  * through JdbcSink's COPY path into a second Derby database, prints one
+  * line per difference and "done", and exits 1 on any difference. */
+object ZoneMigration {
+  import MigrationEndToEndSpec._
+
+  val src = "jdbc:derby:memory:graftzsrc;create=true"
+  val tgt = "jdbc:derby:memory:graftztgt;create=true"
+  // (ID, DT, D, TM, X): each as Derby's getString renders it
+  val values = Seq(
+    (1, "2024-03-31 02:30:00.5", "2024-03-31", "02:30:00", "12.5000000000"),
+    (2, "1890-01-01 00:00:00.0", "1890-01-01", "00:00:00", "-0.0000000001"),
+    (3, "2024-10-27 02:30:00.123456", "2024-10-27", "23:59:59", "123456789012345678901.0123456789"),
+    (4, "2024-07-01 12:00:00.0", "1970-01-01", "12:00:00", "0.0000000000"))
+  val gapClock = "2024-03-31 02:30:00.5"
+  // keys in order: the LMT date, nine more, the gap clock at ordinal 10
+  // (the first key of page 1), nineteen after it
+  val keys = "1890-01-01 00:00:00.0" +: (1 to 9).map(h => s"2024-03-30 0$h:00:00.0") ++:
+    (gapClock +: (0 to 18).map(h => f"2024-04-01 $h%02d:00:00.0"))
+  val pageSize = 10
+
+  def main(args: Array[String]): Unit = {
+    def lit(v: String) = s"'$v'"
+    exec(src)(catalogDdl ++ Seq("DROP TABLE ZV", "DROP TABLE ZK",
+      "CREATE TABLE ZV (ID INT NOT NULL PRIMARY KEY, DT TIMESTAMP, D DATE, TM TIME, X DECIMAL(31,10))",
+      "CREATE TABLE ZK (K TIMESTAMP NOT NULL PRIMARY KEY, V INT NOT NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.TABLES VALUES ('zone', 'ZV', 'BASE TABLE', NULL), " +
+        "('zone', 'ZK', 'BASE TABLE', NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.KEY_COLUMN_USAGE VALUES " +
+        "('PRIMARY', 'zone', 'ZV', 'ID', 1, NULL, NULL), ('PRIMARY', 'zone', 'ZK', 'K', 1, NULL, NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.COLUMNS VALUES " +
+        "('zone', 'ZV', 'ID', 'int', NULL, NULL, NULL, 'NO', NULL, 1, ''), " +
+        "('zone', 'ZV', 'DT', 'datetime', NULL, NULL, NULL, 'NO', NULL, 2, ''), " +
+        "('zone', 'ZV', 'D', 'date', NULL, NULL, NULL, 'NO', NULL, 3, ''), " +
+        "('zone', 'ZV', 'TM', 'time', NULL, NULL, NULL, 'NO', NULL, 4, ''), " +
+        "('zone', 'ZV', 'X', 'decimal', NULL, 31, 10, 'NO', NULL, 5, ''), " +
+        "('zone', 'ZK', 'K', 'datetime', NULL, NULL, NULL, 'NO', NULL, 1, ''), " +
+        "('zone', 'ZK', 'V', 'int', NULL, NULL, NULL, 'NO', NULL, 2, '')",
+      "INSERT INTO ZV VALUES " + values.map { case (id, dt, d, tm, x) =>
+        s"($id, ${lit(dt)}, ${lit(d)}, ${lit(tm)}, $x)" }.mkString(", "),
+      "INSERT INTO ZK VALUES " + keys.zipWithIndex.map { case (k, v) => s"(${lit(k)}, $v)" }.mkString(", ")
+    ): _*)
+    exec(tgt)("DROP TABLE \"zv\"", "DROP TABLE \"zk\"")
+
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val cfg = GraftConfig(src = ConnConfig(database = "zone"), pageSize = pageSize)
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(src))
+    val flog = new FailureLog(graft.TempScratch.fresh("graft-zone"))
+    val runner = new Migration.Runner(spark, cfg, source,
+      new JdbcSink(Jdbc.ConnInfo(tgt, "", ""), new DerbyCopyTransportFactory(tgt)), Some(flog))
+    runner.tableStructure()
+    runner.tableData()
+    val pages = source.tableData("ZK").rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    spark.stop()
+
+    val diffs = mutable.Buffer[String]() ++
+      (flog.read(FailureLog.TableCreateFailed) ++ flog.read(FailureLog.ErrorTableData))
+    def same(what: String, targetSql: String, source: Seq[Seq[String]]): Unit =
+      Try(strings(tgt, targetSql)) match {
+        case Success(`source`) => ()
+        case other => diffs += s"$what: target $other, source $source"
+      }
+    val zv = strings(src, "SELECT ID, DT, D, TM, X FROM ZV ORDER BY ID")
+    same("zv", "SELECT \"id\", \"dt\", \"d\", \"tm\", \"x\" FROM \"zv\" ORDER BY 1", zv)
+    // the source's text is the literal, but for the gap clock: Derby
+    // resolves SQL timestamp text through the JVM zone and stores it an
+    // hour later, as a wall clock that exists
+    val literals = values.map { case (id, dt, d, tm, x) => Seq(id.toString, dt, d, tm, x) }
+    zv.zip(literals).foreach { case (row, lits) =>
+      row.zip(lits).filter { case (got, l) => got != l && l != gapClock }
+        .foreach { case (got, l) => diffs += s"source: $got for literal $l" }
+    }
+    val zk = strings(src, "SELECT K, V FROM ZK ORDER BY K")
+    same("zk", "SELECT \"k\", \"v\" FROM \"zk\" ORDER BY 1", zk)
+    if (zk.size != keys.size) diffs += s"zk: ${zk.size} source rows"
+    if (pages.size != 3 || pages.init.exists(_ != pageSize)) diffs += s"zk pages: $pages"
+    diffs.foreach(println)
+    println("done")
+    sys.exit(if (diffs.isEmpty) 0 else 1)
+  }
+}
+
 class MigrationEndToEndSpec extends AnyFunSuite {
   import MigrationEndToEndSpec._
   lazy val spark = TestSpark.spark
 
   private def setupSource(): Unit = {
-    exec(srcUrl)(
-      "DROP TABLE INFORMATION_SCHEMA.TABLES", "DROP TABLE INFORMATION_SCHEMA.COLUMNS",
-      "DROP TABLE INFORMATION_SCHEMA.KEY_COLUMN_USAGE", "DROP TABLE INFORMATION_SCHEMA.STATISTICS",
-      "DROP TABLE INFORMATION_SCHEMA.REFERENTIAL_CONSTRAINTS", "DROP TABLE INFORMATION_SCHEMA.VIEWS",
-      "DROP TABLE INFORMATION_SCHEMA.TRIGGERS",
+    exec(srcUrl)(catalogDdl ++ Seq(
       "DROP TABLE PEOPLE", "DROP TABLE ORDERS", "DROP TABLE BADTAB",
-      "CREATE SCHEMA INFORMATION_SCHEMA",
-      "CREATE TABLE INFORMATION_SCHEMA.TABLES (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
-        "TABLE_TYPE VARCHAR(32), AUTO_INCREMENT BIGINT)",
-      "CREATE TABLE INFORMATION_SCHEMA.COLUMNS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
-        "COLUMN_NAME VARCHAR(64), DATA_TYPE VARCHAR(32), CHARACTER_MAXIMUM_LENGTH BIGINT, " +
-        "NUMERIC_PRECISION INT, NUMERIC_SCALE INT, IS_NULLABLE VARCHAR(3), " +
-        "COLUMN_DEFAULT VARCHAR(64), ORDINAL_POSITION INT, EXTRA VARCHAR(32))",
-      "CREATE TABLE INFORMATION_SCHEMA.KEY_COLUMN_USAGE (CONSTRAINT_NAME VARCHAR(64), " +
-        "TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), COLUMN_NAME VARCHAR(64), " +
-        "ORDINAL_POSITION INT, REFERENCED_TABLE_NAME VARCHAR(64), REFERENCED_COLUMN_NAME VARCHAR(64))",
-      "CREATE TABLE INFORMATION_SCHEMA.STATISTICS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
-        "INDEX_NAME VARCHAR(64), NON_UNIQUE INT, SEQ_IN_INDEX INT, COLUMN_NAME VARCHAR(64), " +
-        "INDEX_TYPE VARCHAR(16))",
-      "CREATE TABLE INFORMATION_SCHEMA.REFERENTIAL_CONSTRAINTS (CONSTRAINT_SCHEMA VARCHAR(64), " +
-        "CONSTRAINT_NAME VARCHAR(64), UPDATE_RULE VARCHAR(16), DELETE_RULE VARCHAR(16))",
-      "CREATE TABLE INFORMATION_SCHEMA.VIEWS (TABLE_SCHEMA VARCHAR(64), TABLE_NAME VARCHAR(64), " +
-        "VIEW_DEFINITION VARCHAR(256))",
-      "CREATE TABLE INFORMATION_SCHEMA.TRIGGERS (TRIGGER_SCHEMA VARCHAR(64), TRIGGER_NAME VARCHAR(64), " +
-        "ACTION_STATEMENT VARCHAR(256))",
       // data tables: single numeric PK (range-predicate path), composite
       // PK (deferred-join predicate path), and a poison table whose PG
       // type mapping the target rejects (failure-artifact path)
       "CREATE TABLE PEOPLE (ID INT NOT NULL PRIMARY KEY, NAME VARCHAR(20) NOT NULL)",
       "CREATE TABLE ORDERS (A INT NOT NULL, B INT NOT NULL, AMT INT NOT NULL, PRIMARY KEY (A, B))",
-      "CREATE TABLE BADTAB (ID INT NOT NULL PRIMARY KEY, T VARCHAR(20) NOT NULL)")
+      "CREATE TABLE BADTAB (ID INT NOT NULL PRIMARY KEY, T VARCHAR(20) NOT NULL)"): _*)
 
     val c = DriverManager.getConnection(srcUrl)
     try {
@@ -353,6 +456,31 @@ class MigrationEndToEndSpec extends AnyFunSuite {
     assert(flog.read(FailureLog.ErrorTableData).isEmpty)
   }
 
+  test("tableData reads GEOMETRY and BIT as the reference's hex text, a datetime as its text") {
+    setupSource()
+    exec(srcUrl)("DROP TABLE HEXTAB",
+      "CREATE TABLE HEXTAB (ID INT NOT NULL PRIMARY KEY, G VARCHAR(8) FOR BIT DATA, " +
+        "B VARCHAR(8) FOR BIT DATA, \"W T\" TIMESTAMP)",
+      "INSERT INTO HEXTAB VALUES (1, X'00000001ABCD', X'01', '2024-01-02 03:04:05.0'), " +
+        "(2, X'000010E60101', X'0FFF', NULL), (3, NULL, NULL, '1999-12-31 23:59:59.999999')",
+      "INSERT INTO INFORMATION_SCHEMA.TABLES VALUES ('hex', 'HEXTAB', 'BASE TABLE', NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.KEY_COLUMN_USAGE VALUES ('PRIMARY', 'hex', 'HEXTAB', " +
+        "'ID', 1, NULL, NULL)",
+      "INSERT INTO INFORMATION_SCHEMA.COLUMNS VALUES " +
+        "('hex', 'HEXTAB', 'ID', 'int', NULL, NULL, NULL, 'NO', NULL, 1, ''), " +
+        "('hex', 'HEXTAB', 'G', 'geometry', NULL, NULL, NULL, 'YES', NULL, 2, ''), " +
+        "('hex', 'HEXTAB', 'B', 'bit', NULL, 8, NULL, 'YES', NULL, 3, ''), " +
+        "('hex', 'HEXTAB', 'W T', 'datetime', NULL, NULL, NULL, 'YES', NULL, 4, '')")
+    val cfg = GraftConfig(src = ConnConfig(database = "hex"), pageSize = 2)
+    val source = new JdbcCatalogSource(spark, cfg, urlOverride = Some(srcUrl))
+    val expected = Seq(Row(1, "abcd", "1", "2024-01-02 03:04:05.0"), Row(2, "0101", "fff", null),
+      Row(3, null, null, "1999-12-31 23:59:59.999999"))
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.getInt(0))
+    assert(rows(source.tableData("HEXTAB")) == expected)
+    assert(rows(source.tableData("HEXTAB", Seq("SELECT * FROM HEXTAB WHERE ID < 3",
+      "SELECT * FROM HEXTAB WHERE ID = 3"))) == expected)
+  }
+
   test("columns and primaryKeyCols read one catalog snapshot per source") {
     setupSource()
     val cfg = GraftConfig(src = ConnConfig(database = "test"))
@@ -384,6 +512,22 @@ class MigrationEndToEndSpec extends AnyFunSuite {
       df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq.sorted
     assert(rows(sliced).size == 57)
     assert(rows(sliced) == rows(source.tableData("PEOPLE")))
+  }
+
+  test("non-UTC JVM (Europe/Berlin): dates, times, decimals land as the source's text, exact pages") {
+    val dir = graft.TempScratch.fresh("graft-zone")
+    val out = dir.resolve("out").toFile
+    val err = dir.resolve("err").toFile
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx512m",
+      "-Duser.timezone=Europe/Berlin") ++ jvmFlags ++
+      Seq("-cp", System.getProperty("java.class.path"), ZoneMigration.getClass.getName.stripSuffix("$"))
+    val p = new ProcessBuilder(cmd: _*).redirectOutput(out).redirectError(err).start()
+    assert(p.waitFor(300, TimeUnit.SECONDS), "child JVM did not exit")
+    val stdout = Files.readString(out.toPath)
+    assert(p.exitValue == 0 && stdout.contains("done"),
+      stdout + Files.readString(err.toPath).takeRight(4000))
   }
 
   test("JdbcSink doubles a quote inside the target name: create, truncate, COPY and count") {
