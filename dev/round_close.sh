@@ -18,11 +18,12 @@ grep -q 'All tests passed' "$log" || {
   echo "[round_close] FULL SUITE NOT GREEN — refusing to bench"; exit 1; }
 
 # The value path must not assume a UTC JVM: the suites that encode and
-# migrate dates run again with the JVM's default zone set to +08:00.
+# migrate or stream dates run again with the JVM's default zone set to
+# +08:00.
 zlog=/tmp/round_close_zone_${tag}.log
 echo "[round_close] value-path suites under -Duser.timezone=Asia/Shanghai..."
 SPARK_GRAFT_EXTRA_JAVA_OPTS=-Duser.timezone=Asia/Shanghai sbt -batch \
-  "testOnly graft.io.PgCopyTextSpec graft.io.JdbcReadSpec graft.transform.ValueTransformsSpec graft.cli.MigrationEndToEndSpec" \
+  "testOnly graft.io.PgCopyTextSpec graft.io.JdbcReadSpec graft.transform.ValueTransformsSpec graft.cli.MigrationEndToEndSpec graft.streaming.CopyStreamSpec" \
   2>&1 | tee "$zlog" | tail -4
 grep -q 'All tests passed' "$zlog" || {
   echo "[round_close] ZONE PASS NOT GREEN — refusing to bench"; exit 1; }

@@ -116,10 +116,10 @@ object Dedup {
     * join-back) plus the deduped id_a < id_b candidate pairs from the
     * band equi-join. */
   /** The (id, band_idx, band_key) index rows that lshCandidates
-    * equi-joins — exposed so scale probes (BandHistogram) can measure
-    * the bucket-size distribution of the EXACT index the production
-    * path joins on, not a reconstruction of it. */
-  private[graft] def bandIndex(hs: DataFrame, nBands: Int): DataFrame = {
+    * equi-joins. At ×100 and ×300 docs its pair count grows linearly
+    * and its top bucket stays at 19 rows (BENCHNOTES "Round 13 — q411's
+    * 1.36 exponent", bench/r13_band_hist_x300.json). */
+  private def bandIndex(hs: DataFrame, nBands: Int): DataFrame = {
     val mhs = (0 until nBands * 2).map(s => minhashInt(col("hs"), s))
     val bands = (0 until nBands).map(b =>
       struct(lit(b).as("band_idx"), bandKey(Seq(mhs(2 * b), mhs(2 * b + 1))).as("band_key")))
@@ -491,10 +491,10 @@ object Dedup {
     * generic array_intersect verify measured 123 s vs the kernel's
     * on the sf0.1 τ=0.5 sweep). */
   /** The (id, tok, sz, pos) prefix-token index that
-    * prefixFilterPairsMicro self-joins — exposed so scale probes
-    * (BandHistogram) can price the exact side's candidate join from
-    * the real index's token-bucket distribution. */
-  private[graft] def prefixIndex(docs: DataFrame, thresholdMicro: Long): DataFrame = {
+    * prefixFilterPairsMicro self-joins. At ×100 and ×300 docs its pair
+    * count grows linearly and its top token bucket stays at 11 rows
+    * (BENCHNOTES "Round 13 — q411's 1.36 exponent"). */
+  private def prefixIndex(docs: DataFrame, thresholdMicro: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val t = thresholdMicro
     val toks = docs.select(col("id"), size(col("grams")).cast("long").as("sz"),

@@ -119,7 +119,6 @@ object AnnQueries {
 
     // ----- similarity: embedding-cosine near-dup pairs -------------------
     ("q26_embed_neardup", (s: SparkSession, dir: String) => {
-      import s.implicits._
       val prepared = Similarity.prepare(Tables.spread(Tables.t(s, dir, "embeddings")), "vec_id", "embedding")
       Similarity.nearDupPairs(prepared, Projs, threshold = 0.4)
         .orderBy("id_a", "id_b")
@@ -1028,18 +1027,18 @@ object AnnQueries {
       FROM ag GROUP BY 1 ORDER BY 1""")),
 
     // ----- multi-probe kNN graph (the recall complement to q158) ---------
-    // The round-8 KnnDial sweep measured the single-table LSH tradeoff:
-    // raising nProj splits candidate volume ÷2^Δ but collapses recall
-    // (17.8% → 3.5% at ×10 scale), because a true neighbor differing in
-    // ONE sign bit lands one bucket over. Multi-probe recovers exactly
-    // those: every node ALSO probes its nProj Hamming-1 buckets, so the
-    // candidate join costs (nProj+1)× the single-table volume at the
-    // SAME bucketing — a net win whenever the bucket split it enables
+    // The round-8 kNN projection dial (BENCHNOTES "Round 8") measured the
+    // single-table LSH tradeoff: raising nProj splits candidate volume ÷2^Δ
+    // but collapses recall (17.8% → 3.5% at ×10 scale), because a true
+    // neighbor differing in ONE sign bit lands one bucket over. Multi-probe
+    // recovers exactly those: every node ALSO probes its nProj Hamming-1
+    // buckets, so the candidate join costs (nProj+1)× the single-table volume
+    // at the SAME bucketing — a net win whenever the bucket split it enables
     // (2^Δ) exceeds nProj+1. Same bucket equi-join shape as q158 (no
-    // broadcast: both sides shuffle on the bucket key, which is the
-    // 100 TB-safe form for an every-node query set), distinct on the
-    // (q, c) pair because probe buckets overlap, then the identical
-    // top-3 + mutual-edge construction.
+    // broadcast: both sides shuffle on the bucket key, which is the 100
+    // TB-safe form for an every-node query set), distinct on the (q, c) pair
+    // because probe buckets overlap, then the identical top-3 + mutual-edge
+    // construction.
     ("q200_knn_graph_multiprobe", (s: SparkSession, dir: String) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window

@@ -19,8 +19,6 @@ import graft.functions.{KmvBufferMd5, KmvDistinctMd5}
 object CorpusAuditQueries {
 
   private val normSql = TA.normTextSql
-  private val prepSql = Similarity.prepareSql
-  private def bucketSql: String = Similarity.lshBucketSql
 
   /** Quasi-identifier prep over customer: nation, segment, and the
     * $1000 account-balance band. Balance goes through the money cast
@@ -1713,12 +1711,12 @@ object CorpusAuditQueries {
     ("q415_stream_ingest_gate", (s: SparkSession, dir: String) => {
       import s.implicits._
       // the dataset path can be a flat FILE (driver testdata) or a
-      // Spark-written DIRECTORY of part files (ScaleGen replicas), and
-      // the file source accepts neither uniformly: pointing at a file
-      // fails ("Option 'basePath' must be a directory") while the q67
+      // Spark-written DIRECTORY of part files (the scale replicas), and the
+      // file source accepts neither uniformly: pointing at a file fails
+      // ("Option 'basePath' must be a directory") while the q67
       // symlink-in-a-parent-dir pattern silently reads ZERO rows from a
-      // nested directory. Probe once and pick the shape (both failure
-      // modes measured before this fix).
+      // nested directory. Probe once and pick the shape (both failure modes
+      // measured; BENCHNOTES "Round 11 — streaming ingest gate").
       val p = java.nio.file.Paths.get(s"$dir/documents.parquet")
       val srcPath =
         if (java.nio.file.Files.isDirectory(p)) p.toString

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.ext.{IntervalJoin, TextAnalysis => TA}
-import graft.transform.ValueTransforms._
 
 /** The relational and analytical surface: windows, joins, grouping
   * sets, pivots, scalar function families, format round trips, pattern

@@ -628,8 +628,8 @@ object StorageLayoutQueries {
     // every row before the shuffle (Expand — measured 9.1 s vs 1.3 s
     // for this shape at sf0.1), while the stack-unpivot dedups per
     // (column, value) map-side before anything wide shuffles.
-    // WIDE-SCHEMA rule (WideProbe, bench/r11_wide.json): one stack()
-    // feeds ONE per-task partial-agg hash map covering every lane's
+    // WIDE-SCHEMA rule (BENCHNOTES "Round 11", bench/r11_wide.json):
+    // one stack() feeds ONE per-task partial-agg hash map covering every lane's
     // (col, value) grid — past ~16 lanes that map exceeds the
     // aggregate budget and falls back to sort-spill (15.6× slower and
     // erratic at 64 columns). Profile wider tables as a UNION of

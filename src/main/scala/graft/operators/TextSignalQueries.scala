@@ -123,7 +123,7 @@ object TextSignalQueries {
       val scored = TA.langScores(Tables.spread(Tables.t(s, dir, "documents")), "doc_id", "text")
       val scores = TA.Stopwords.map { case (l, _) => l -> col(s"score_$l") }
       scored.select(
-          ($"doc_id" +: scores.map { case (l, c) => c } :+
+          ($"doc_id" +: scores.map { case (_, c) => c } :+
             TA.langPredict(scores).as("pred_lang") :+ $"lang"): _*)
         .orderBy("doc_id")
     }, Some {
@@ -306,7 +306,6 @@ object TextSignalQueries {
 
     // ----- tokenizer-coverage QA: top-V vocabulary + per-doc OOV ---------
     ("q114_vocab_oov", (s: SparkSession, dir: String) => {
-      import s.implicits._
       TA.vocabOov(Tables.spread(Tables.t(s, dir, "documents")), topV = 16)
         .orderBy("doc_id")
     }, Some(s"""

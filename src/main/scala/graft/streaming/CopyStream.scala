@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{StringType, TimestampType}
 
 import graft.io.{BatchLedger, CopyTransportFactory, PgCopyLoad}
 
@@ -29,7 +31,13 @@ object CopyStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PgCopyLoad.copyIntoLedgered(batch, table, factory, ledger, batchId)
+        // A timestamp cast to STRING renders in the session zone, where
+        // PgCopyText's Timestamp.toString would use the JVM's. withColumns
+        // is a narrow projection: the partitions the ledger keys on stay.
+        val ts = batch.schema.collect { case f if f.dataType == TimestampType =>
+          f.name -> col(s"`${f.name.replace("`", "``")}`").cast(StringType) }.toMap
+        PgCopyLoad.copyIntoLedgered(if (ts.isEmpty) batch else batch.withColumns(ts),
+          table, factory, ledger, batchId)
         ()
       }
       .start()

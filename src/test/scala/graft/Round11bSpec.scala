@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Behavior pins for the round-11 statistics batteries (q355–q365):

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Behavior pins for the agreement / calibration / stratified-effect
   * battery (q381–q386): definitional Scala replays, bit-exact (exact
@@ -155,7 +154,7 @@ class Round11fSpec extends AnyFunSuite {
     val flags = operators.StatTestQueries.gopherDoc(spark, TestSpark.Sf)
       .select($"source", $"r_mwl", $"r_rep")
       .as[(String, Boolean, Boolean)].collect().toSeq
-    val strata = flags.groupBy(_._1).toSeq.sortBy(_._1).map { case (src, rows) =>
+    val strata = flags.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) =>
       val a = rows.count(r => r._2 && r._3).toLong
       val b = rows.count(r => r._2 && !r._3).toLong
       val c = rows.count(r => !r._2 && r._3).toLong

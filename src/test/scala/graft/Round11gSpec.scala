@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Behavior pins for the privacy battery (q387–q389) and the
   * LM-smoothing estimators (q390–q391): definitional Scala replays in

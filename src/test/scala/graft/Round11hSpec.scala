@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Behavior pins for the dataset-construction / forensic battery
   * (q392–q394): exact BigInt/Long replays, doubles only in q394's

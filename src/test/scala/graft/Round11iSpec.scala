@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Behavior pins for the pipeline-planning battery (q395–q397):
   * exact replays for the conformal and waterfill operators; for the

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Behavior pins for the embedding-infrastructure battery
   * (q401–q403): BigInt replays of the quantized-moment algebra, the

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.functions.{KmvBufferMd5, KmvMd5}
+import graft.functions.KmvMd5
 import graft.ext.{TextAnalysis => TA}
 
 /** Behavior pins for the portable-KMV battery (q404–q406): the md5

@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
-import graft.operators.EvalMetricQueries
 import graft.TestSpark.q
 
 /** Behavior pins for the Round8ab operators (q300–q302): imperative

@@ -3,7 +3,6 @@ package graft
 import graft.PlanText.PlanTextOps
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
 import graft.TestSpark.q
@@ -43,7 +42,7 @@ class Round8cSpec extends AnyFunSuite {
     def lloyd(pts: Seq[(Long, Array[Double], Double)]): Seq[(Long, Array[Double], Double)] = {
       var cents = pts.filter(_._1 % 64 == 0)
       for (_ <- 1 to 2) {
-        val asg = pts.map { case (id, sv, sn2) =>
+        val asg = pts.map { case (_, sv, sn2) =>
           val c = cents.minBy { case (cid, cv, cn2) => (d2(sn2, cn2, sv, cv), cid) }
           (c._1, sv)
         }

@@ -3,9 +3,8 @@ package graft
 import graft.PlanText.PlanTextOps
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, Similarity}
+import graft.ext.Dedup
 import graft.TestSpark.q
 
 /** Behavior pins for the Round8d operators (q211–q213): imperative
@@ -123,7 +122,7 @@ class Round8dSpec extends AnyFunSuite {
     var cents = old.filter(p => p._1 % 100 == 0 && p._1 < 2000)
       .map { case (id, v, n2) => (id, v, n2) }
     for (_ <- 1 to 2) {
-      val asg = old.map { case (id, v, n2) =>
+      val asg = old.map { case (_, v, n2) =>
         val c = cents.maxBy { case (cid, cv, cn2) => (cos(v, n2, cv, cn2), -cid) }
         (c._1, v)
       }

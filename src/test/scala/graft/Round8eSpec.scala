@@ -3,7 +3,6 @@ package graft
 import graft.PlanText.PlanTextOps
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 

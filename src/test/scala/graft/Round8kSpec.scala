@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 
@@ -105,7 +104,7 @@ class Round8kSpec extends AnyFunSuite {
     // the ~100-value cents field beats the ~11-value bucket and ~10-value digit
     assert(w2 > w1 && w2 > w3)
     val pairs = for {
-      (blk, members) <- recs.groupBy(_.blk).toSeq
+      (_, members) <- recs.groupBy(_.blk).toSeq
       a <- members; b <- members if a.k < b.k
     } yield {
       val score = (if (a.f1 == b.f1) w1 else 0L) +

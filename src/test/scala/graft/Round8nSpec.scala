@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 
@@ -146,7 +145,7 @@ class Round8nSpec extends AnyFunSuite {
   }
 
   test("q248 matches an imperative CDC chunker; an early edit reshifts no later chunk") {
-    val chunks = docs.flatMap { case (id, src, text) =>
+    val chunks = docs.flatMap { case (_, src, text) =>
       cdcChunks(toks(text)).map(c => (src, c.mkString(" "), c.size.toLong))
     }
     val expected = chunks.groupBy(_._1).toSeq.map { case (src, cs) =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 
@@ -117,7 +116,7 @@ class Round8uSpec extends AnyFunSuite {
         if (gp < 128) 1L else if (gp < 16384) 2L
         else if (gp < 2097152) 3L else 4L).sum
       (tok, ids.size.toLong, bytes)
-    }.map { case (tok, df, bytes) =>
+    }.map { case (_, df, bytes) =>
       val band = if (df >= 1000) "a_dense" else if (df >= 100) "b_mid" else "c_rare"
       (band, df, bytes)
     }.groupBy(_._1).toSeq.map { case (band, g) =>

@@ -56,7 +56,7 @@ class Round8vSpec extends AnyFunSuite {
       .select($"source", $"text").as[(String, String)].collect().toSeq
       .groupBy(_._1).view.mapValues(_.map(d => toks(d._2).size.toLong).sum)
       .toSeq.sortBy { case (src, t) => (-t, src) }
-    val asg = mass.zipWithIndex.map { case ((src, t), r) =>
+    val asg = mass.zipWithIndex.map { case ((_, t), r) =>
       val serp = if ((r / 8) % 2 == 0) r % 8 else 7 - r % 8
       (serp.toLong, r % 8L, t)
     }

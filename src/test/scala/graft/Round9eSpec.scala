@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.StatTestQueries
 import graft.TestSpark.q
 
 /** Behavior pins for the Round-9 batch-5 operators (q331–q332): the
@@ -13,9 +12,6 @@ import graft.TestSpark.q
 class Round9eSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def normText(s: String): String =
-    s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
 
   test("q331 equals an imperative sampled-partitioner replay") {
     val rows = Tables.t(spark, TestSpark.Sf, "orders")

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 
@@ -11,15 +10,6 @@ import graft.TestSpark.q
 class Round9gSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def h32(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(8), 16)
-
-  private def normText(s: String): String =
-    s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
 
   test("q338 equals a full-sort trimmed/winsorized replay") {
     val vs = Tables.t(spark, TestSpark.Sf, "orders")

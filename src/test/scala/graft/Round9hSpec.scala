@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark.q
 
@@ -13,9 +12,6 @@ import graft.TestSpark.q
 class Round9hSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def normText(s: String): String =
-    s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
 
   test("q340 equals an imperative 3-round PPR push; seeds dominate") {
     val li = Tables.t(spark, TestSpark.Sf, "lineitem")

@@ -18,9 +18,6 @@ class Round9iSpec extends AnyFunSuite {
 
   private def h32(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(8), 16)
 
-  private def normText(s: String): String =
-    s.toLowerCase.replaceAll("[^a-z0-9\\s]", "").replaceAll("\\s+", " ").trim
-
   test("q343 equals a window-by-window KMV replay; small windows are exact") {
     val du = Tables.t(spark, TestSpark.Sf, "events")
       .select(datediff(to_date($"ts".cast("timestamp")),

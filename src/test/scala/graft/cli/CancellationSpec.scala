@@ -3,7 +3,7 @@ package graft.cli
 import java.nio.file.Files
 import java.sql.{Connection, Driver, DriverManager, DriverPropertyInfo, SQLException}
 import java.util.Properties
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 

@@ -1,6 +1,5 @@
 package graft.cli
 
-import java.nio.file.Files
 
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}

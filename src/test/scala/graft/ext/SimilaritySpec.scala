@@ -80,7 +80,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ANN quality: multi-probe LSH recall@5 vs brute force on real embeddings") {
-    import graft.{Tables, TestSpark}
+    import graft.Tables
     // sf0.01: 500 vectors / 5 queries — the smallest corpus where the
     // recall estimate is stable run-to-run (everything is deterministic,
     // but the sf0.001 slice has too few queries to characterize quality)

@@ -3,7 +3,6 @@ package graft.functions
 import java.text.Normalizer
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.TestSpark
 

@@ -26,7 +26,7 @@ object DerbyTestDb {
       val st = c.createStatement()
       sqls.foreach { sql =>
         try st.execute(sql)
-        catch { case e: java.sql.SQLException if sql.startsWith("DROP") => () }
+        catch { case _: java.sql.SQLException if sql.startsWith("DROP") => () }
       }
     } finally c.close()
   }

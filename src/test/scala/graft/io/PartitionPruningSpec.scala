@@ -2,10 +2,8 @@ package graft.io
 
 import graft.PlanText.PlanTextOps
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 import graft.{Tables, TestSpark}
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.sql.DriverManager
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -76,9 +75,10 @@ class CopyStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def freshTables(data: String, ledgerTable: String): JdbcBatchLedger = {
+  private def freshTables(data: String, ledgerTable: String,
+                          valueCol: String = "V VARCHAR(64) NOT NULL"): JdbcBatchLedger = {
     exec(s"DROP TABLE $data", s"DROP TABLE $ledgerTable",
-      s"CREATE TABLE $data (ID BIGINT NOT NULL, V VARCHAR(64) NOT NULL)")
+      s"CREATE TABLE $data (ID BIGINT NOT NULL, $valueCol)")
     failOnMarker = null; failAtCommit = false
     val ledger = new JdbcBatchLedger(url, "", "", ledgerTable)
     ledger.ensure()
@@ -112,6 +112,36 @@ class CopyStreamSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")).toDF("ID", "V").coalesce(1),
       "T_STREAM", new DerbyLoadFactory, ledger, batchId = 0L)
     assert(count("T_STREAM") == before, "replayed batch must re-load nothing")
+  }
+
+  test("a streamed timestamp is written as Spark's session-zone text, not the JVM zone's") {
+    implicit val sqlCtx = spark.sqlContext
+    // VARCHAR, so Derby stores the COPY text without parsing it
+    val ledger = freshTables("T_TS", "LED_TS", "TS VARCHAR(32)")
+    val ts = Seq(
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-01-02T03:04:05.123456Z")),
+      java.sql.Timestamp.from(java.time.Instant.parse("2024-07-31T23:30:00Z")))
+    // a zone whose offset is not the JVM default's at either instant
+    val zone = Seq("Asia/Kathmandu", "America/St_Johns").find { z =>
+      ts.forall(t => java.util.TimeZone.getTimeZone(z).getOffset(t.getTime) !=
+        java.util.TimeZone.getDefault.getOffset(t.getTime))
+    }.get
+    val zoneKey = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(zoneKey)
+    spark.conf.set(zoneKey, zone)
+    try {
+      val expected = ts.toDF("ts").select($"ts".cast("string")).as[String].collect().toSeq
+      val input = MemoryStream[(Long, java.sql.Timestamp)]
+      val ckpt = graft.TempScratch.fresh("graft-copystream-ts").toString
+      val q = CopyStream.start(input.toDF().toDF("ID", "TS"), "T_TS",
+        new DerbyLoadFactory, ledger, ckpt)
+      try {
+        input.addData((1L, ts(0)), (2L, ts(1)))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(queryLongs("SELECT ID, TS FROM T_TS ORDER BY ID") ==
+        Seq(1L, 2L).zip(expected))
+    } finally spark.conf.set(zoneKey, saved)
   }
 
   test("partial-batch failure: committed partitions are skipped on retry, not duplicated") {
